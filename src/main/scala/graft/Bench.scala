@@ -3,7 +3,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // a positive core count or nothing: it is stamped unquoted into the
+    // JSON result line, so a value like `*` must fail here, not there
+    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = cpusEnv.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpusEnv'"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -366,19 +366,12 @@ final class Client(spark: SparkSession, root: String,
   def maintainAttachedFunctions(collection: String, checkpoint: String,
       filesPerBatch: Int = 4): Unit = {
     val h = getCollection(collection)
-    val q = graft.streaming.EventStream.maintained(spark) { s =>
-      WalStore.streamEntries(s, h.ref.dataRoot, filesPerBatch)
-        .writeStream
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (_: DataFrame, _: Long) =>
-          listAttachedFunctions(collection).foreach { i =>
-            if (i.active) { invokeAttachedFunction(collection, i.name); () }
-          }
-        }
-        .start()
+    graft.streaming.EventStream.maintainStream(spark, checkpoint)(
+        WalStore.streamEntries(_, h.ref.dataRoot, filesPerBatch)) { (_, _) =>
+      listAttachedFunctions(collection).foreach { i =>
+        if (i.active) { invokeAttachedFunction(collection, i.name); () }
+      }
     }
-    q.awaitTermination()
   }
 
   /** Sigil-keyed params carrying what the reference's executors read
@@ -993,16 +986,23 @@ final class CollectionHandle(spark: SparkSession,
     * stay strings.
     */
   def asCollection: Collection = {
-    val ep = writer.epoch
-    collectionCache match {
-      case Some((e, c)) if e == ep => c
-      case _ =>
+    def cached(ep: Long): Option[Collection] =
+      collectionCache.collect { case (e, c) if e == ep => c }
+    // a hit on the current epoch takes no lock; a miss builds under it,
+    // so concurrent first reads of an epoch share ONE persisted view
+    // (two racing builds would each persist one, and the later would
+    // unpersist the earlier's view while its reader still used it)
+    cached(writer.epoch).getOrElse(viewLock.synchronized {
+      val ep = writer.epoch
+      cached(ep).getOrElse {
         val c = buildCollection()
         collectionCache = Some((ep, c))
         c
-    }
+      }
+    })
   }
   @volatile private var collectionCache: Option[(Long, Collection)] = None
+  private val viewLock = new Object
 
   /** The offset-assignment input BEFORE the zipWithIndex RDD boundary —
     * exposed so PlanSpec can assert no single-partition Exchange hides

@@ -144,15 +144,14 @@ object TextStats {
     * document through a low-perplexity gate. Null fails safe — a
     * `ppl <= cut` gate admits nothing.
     *
-    * The LM table is `persist()`ed here: the scoring join, the context
-    * aggregation, and the vocab count each traverse it, and without the
-    * cache every reference re-derives the whole fit lineage (at corpus
-    * scale the LM tables are exactly the state a serving tier keeps hot).
+    * The scoring join, the context aggregation and the vocab count each
+    * traverse the (vocab-sized) LM table. It is not cached: the returned
+    * plan is lazy, so a cache taken here could never be released; where
+    * the references plan alike they share the table's exchange.
     */
   def scoreWithLm(trans: org.apache.spark.sql.DataFrame,
-      bigC0: org.apache.spark.sql.DataFrame,
+      bigC: org.apache.spark.sql.DataFrame,
       alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    val bigC = bigC0.persist()
     val dtf = trans.groupBy("doc_id", "prev", "w").agg(count(lit(1)).as("c"))
     val prevC = bigC.groupBy("prev").agg(sum("cbw").as("cp"))
     val voc = bigC.select(explode(array(col("prev"), col("w"))).as("term"))
@@ -221,9 +220,9 @@ object TextStats {
     * either branch, so the exact-oracle row is unaffected.
     */
   def scoreWithKn(trans: org.apache.spark.sql.DataFrame,
-      bigC0: org.apache.spark.sql.DataFrame,
+      bigC: org.apache.spark.sql.DataFrame,
       discount: Double = 0.75): org.apache.spark.sql.DataFrame = {
-    val bigC = bigC0.persist()
+    // uncached, like [[scoreWithLm]]
     val dtf = trans.groupBy("doc_id", "prev", "w").agg(count(lit(1)).as("c"))
     val prevC = bigC.groupBy("prev")
       .agg(sum("cbw").as("cp"), count(lit(1)).as("n1fw"))
@@ -290,7 +289,9 @@ object TextStats {
   def stupidBackoffScore(corpus: org.apache.spark.sql.DataFrame,
       batch: org.apache.spark.sql.DataFrame,
       lambda: Double = 0.4): org.apache.spark.sql.DataFrame = {
-    val t = sboTables(corpus)
+    // no cache: the returned plan is lazy, so nothing here could release
+    // one; the views share the single counting shuffle by exchange reuse
+    val t = sboViews(sboCounts(corpus))
     scoreWithSbo(batch, t.tri, t.bi, t.uni, lambda)
   }
 
@@ -314,51 +315,67 @@ object TextStats {
       uni: org.apache.spark.sql.DataFrame,
       shared: Option[org.apache.spark.sql.DataFrame] = None)
 
-  /** ONE tokenize pass and ONE keyed shuffle build all three tables:
+  /** [[sboCounts]] cached for a caller that runs SEVERAL actions over the
+    * three views (the streaming maintainer's three writes) and unpersists
+    * `shared` once they land.
+    */
+  def sboTables(corpus: org.apache.spark.sql.DataFrame): SboTables = {
+    val counted = sboCounts(corpus).persist()
+    sboViews(counted).copy(shared = Some(counted))
+  }
+
+  /** ONE tokenize pass and ONE keyed shuffle count all three orders:
     * every unigram/bigram/trigram occurrence explodes as a (p2, p1, w)
-    * row — lower orders carry null contexts, and tokens are never null,
+    * row — lower orders carry "" contexts, and tokens are never empty,
     * so the sentinel is unambiguous — and a single groupBy counts them
     * together (guide §2.3/§2.4: the old shape scanned the corpus and
     * shuffled once PER ORDER — 3 scans + 3 exchanges for the same total
-    * row volume). The counted table persists so the three views (and
-    * every downstream consumer — context sums, scoring joins, the
-    * maintainer's three writes) share the single pass instead of
-    * re-deriving it per reference; at corpus scale this is 3 corpus
-    * scans → 1 per model fit.
+    * row volume). Within one query every view reads the same exchange
+    * (reused), which takes two things: the order `n` rides as an
+    * AGGREGATE column, so the views' filters on it stay above the
+    * groupBy; and every key is NOT NULL, so the views' joins infer no
+    * null filters to push below it — either would give each view its
+    * own corpus pass.
     */
-  def sboTables(corpus: org.apache.spark.sql.DataFrame): SboTables = {
+  private def sboCounts(corpus: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val tk = corpus.select(tokens(col("text")).as("t"))
     val t = col("t")
-    val gramType = "array<struct<p2:string,p1:string,w:string>>"
+    val gramType = {
+      import org.apache.spark.sql.types._
+      ArrayType(StructType(Seq("p2", "p1", "w").map(
+          StructField(_, StringType, nullable = false)) :+
+        StructField("n", IntegerType, nullable = false)), containsNull = false)
+    }
+    def tok(i: Column): Column = coalesce(element_at(t, i), lit(""))
     // n-gram rows of order n: contexts from the bound token column (the
     // [[shingles]] lambda-binding rule — a tokenizer reference inside
     // the per-position lambda would re-evaluate per position)
     def grams(n: Int): Column = {
       val rows = transform(sequence(lit(1), size(t) - (n - 1)), i =>
         struct(
-          (if (n == 3) element_at(t, i)
-           else lit(null).cast("string")).as("p2"),
-          (if (n >= 2) element_at(t, i + (n - 2))
-           else lit(null).cast("string")).as("p1"),
-          element_at(t, i + (n - 1)).as("w")))
+          (if (n == 3) tok(i) else lit("")).as("p2"),
+          (if (n >= 2) tok(i + (n - 2)) else lit("")).as("p1"),
+          tok(i + (n - 1)).as("w"),
+          lit(n).as("n")))
       // size guard: sequence(1, 0) would generate DESCENDING indices
       when(size(t) >= n, rows).otherwise(array().cast(gramType))
     }
-    val counted = tk
-      .select(explode(concat(grams(1), grams(2), grams(3))).as("g"))
+    tk.select(explode(concat(grams(1), grams(2), grams(3))).as("g"))
       .groupBy(col("g.p2").as("p2"), col("g.p1").as("p1"),
         col("g.w").as("w"))
-      .agg(count(lit(1)).as("c"))
-      .persist()
-    SboTables(
-      counted.filter(col("p2").isNotNull)
-        .select(col("p2"), col("p1"), col("w"), col("c").as("c3")),
-      counted.filter(col("p2").isNull && col("p1").isNotNull)
-        .select(col("p1"), col("w"), col("c").as("c2")),
-      counted.filter(col("p2").isNull && col("p1").isNull)
-        .select(col("w"), col("c").as("c1")),
-      Some(counted))
+      .agg(count(lit(1)).as("c"), max(col("g.n")).as("n"))
   }
+
+  /** The three count tables as views over [[sboCounts]]. */
+  private def sboViews(counted: org.apache.spark.sql.DataFrame): SboTables =
+    SboTables(
+      counted.filter(col("n") === 3)
+        .select(col("p2"), col("p1"), col("w"), col("c").as("c3")),
+      counted.filter(col("n") === 2)
+        .select(col("p1"), col("w"), col("c").as("c2")),
+      counted.filter(col("n") === 1)
+        .select(col("w"), col("c").as("c1")))
 
   /** Score `batch` docs against (possibly incrementally maintained)
     * Stupid Backoff count tables — see [[stupidBackoffScore]] for the
@@ -369,15 +386,13 @@ object TextStats {
     * [[scoreWithLm]]'s empty-LM contract without a special case.
     */
   def scoreWithSbo(batch: org.apache.spark.sql.DataFrame,
-      tri0: org.apache.spark.sql.DataFrame,
-      bi0: org.apache.spark.sql.DataFrame,
-      uni0: org.apache.spark.sql.DataFrame,
+      tri: org.apache.spark.sql.DataFrame,
+      bi: org.apache.spark.sql.DataFrame,
+      uni: org.apache.spark.sql.DataFrame,
       lambda: Double = 0.4): org.apache.spark.sql.DataFrame = {
-    val tri = tri0.persist()
+    // uncached, like [[scoreWithLm]]
     val ctx3 = tri.groupBy("p2", "p1").agg(sum("c3").as("n3"))
-    val bi = bi0.persist()
     val ctx2 = bi.groupBy("p1").agg(sum("c2").as("n2"))
-    val uni = uni0.persist()
     val nTot = uni.agg(sum("c1").as("n_corpus"))
     val dtf = trigramTransitions(batch)
       .groupBy("doc_id", "p2", "p1", "w").agg(count(lit(1)).as("c"))
@@ -430,16 +445,18 @@ object TextStats {
   def dsirWeights(docs: org.apache.spark.sql.DataFrame,
       target: org.apache.spark.sql.DataFrame,
       alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    val tr = bigramTransitions(docs).persist()
-    val tC = bigramLmCounts(bigramTransitions(target)).persist()
+    // uncached, like [[scoreWithLm]]; the raw LM sums the per-doc counts
+    // instead of counting the transitions a second time
+    val dtf = bigramTransitions(docs)
+      .groupBy("doc_id", "prev", "w").agg(count(lit(1)).as("c"))
+    val tC = bigramLmCounts(bigramTransitions(target))
     val tP = tC.groupBy("prev").agg(sum("cbw").as("cp_t"))
     val tV = tC.select(explode(array(col("prev"), col("w"))).as("term"))
       .agg(count_distinct(col("term")).as("v_t"))
-    val rC = bigramLmCounts(tr).persist()
+    val rC = dtf.groupBy("prev", "w").agg(sum("c").as("cbw"))
     val rP = rC.groupBy("prev").agg(sum("cbw").as("cp_r"))
     val rV = rC.select(explode(array(col("prev"), col("w"))).as("term"))
       .agg(count_distinct(col("term")).as("v_r"))
-    val dtf = tr.groupBy("doc_id", "prev", "w").agg(count(lit(1)).as("c"))
     val lpT = log((coalesce(col("cbw_t"), lit(0L)) + alpha) /
       (coalesce(col("cp_t"), lit(0L)) + lit(alpha) * col("v_t")))
     val lpR = log((col("cbw_r") + alpha) / (col("cp_r") + lit(alpha) * col("v_r")))
@@ -473,12 +490,14 @@ object TextStats {
     */
   def collocations(docs: org.apache.spark.sql.DataFrame,
       minCount: Long = 5): org.apache.spark.sql.DataFrame = {
-    val tr = bigramTransitions(docs)
-      .select(col("prev").as("w1"), col("w").as("w2")).persist()
-    val big = tr.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-    val left = tr.groupBy("w1").agg(count(lit(1)).as("cl"))
-    val right = tr.groupBy("w2").agg(count(lit(1)).as("cr"))
-    val n = tr.agg(count(lit(1)).as("n_trans"))
+    // uncached, like [[scoreWithLm]]; the marginals and N sum the bigram
+    // counts instead of counting the transitions four times
+    val big = bigramTransitions(docs)
+      .groupBy(col("prev").as("w1"), col("w").as("w2"))
+      .agg(count(lit(1)).as("c"))
+    val left = big.groupBy("w1").agg(sum("c").as("cl"))
+    val right = big.groupBy("w2").agg(sum("c").as("cr"))
+    val n = big.agg(sum("c").as("n_trans"))
     big.filter(col("c") >= minCount)
       .join(left, Seq("w1"))
       .join(right, Seq("w2"))
@@ -510,7 +529,7 @@ object TextStats {
       : org.apache.spark.sql.DataFrame = {
     val sw = docs
       .select(col("source"), explode(tokens(col("text"))).as("w"))
-      .groupBy("source", "w").agg(count(lit(1)).as("csw")).persist()
+      .groupBy("source", "w").agg(count(lit(1)).as("csw"))
     val srcTot = sw.groupBy("source").agg(sum("csw").as("ns"))
     val cw = sw.groupBy("w").agg(sum("csw").as("cw"))
     val nTot = cw.agg(sum("cw").as("n"))
@@ -599,10 +618,11 @@ object TextStats {
     * model before any aggregate-level filter could discard it.
     */
   def scoreWithNb(batch: org.apache.spark.sql.DataFrame,
-      wc0: org.apache.spark.sql.DataFrame,
+      wc: org.apache.spark.sql.DataFrame,
       dc: org.apache.spark.sql.DataFrame,
       alpha: Double = 1.0): org.apache.spark.sql.DataFrame = {
-    val wc = wc0.persist() // pivot + totals + vocab each traverse it
+    // pivot + totals + vocab each traverse the count table, uncached
+    // like [[scoreWithLm]]
     val piv = wc.groupBy("w").agg(
       sum(when(col("is_target"), col("cw"))).as("cpos"),
       sum(when(!col("is_target"), col("cw"))).as("cneg"))

@@ -19,9 +19,10 @@ object PipelinePack extends QueryPack {
     * (exact `percentile`) and pl_ccnet_buckets_approx (one-pass
     * `approx_percentile` sketch, the 100-TB cut path) are THIS body with
     * different `cut` expressions, so the exact/approx twin relationship is
-    * code, not copy. The scored table is persisted: it feeds both the
-    * tercile aggregate and the final bucketing scan — without the cache
-    * the whole LM fit+score lineage would run twice.
+    * code, not copy. The scored table feeds both the tercile aggregate
+    * and the final bucketing scan; it is not cached (the returned plan is
+    * lazy, so nothing could release a cache) — the two references plan
+    * alike and share its exchanges.
     */
   private def ccnetBucketsWith(s: SparkSession, d: String,
       cut: Double => Column): DataFrame = {
@@ -29,7 +30,6 @@ object PipelinePack extends QueryPack {
     val scored = TextStats
       .bigramLmScore(docs.select(col("doc_id"), col("text")))
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .persist()
     val cuts = scored.groupBy("lang").agg(
       round(cut(1.0 / 3), 6).as("t1"),
       round(cut(2.0 / 3), 6).as("t2"))

@@ -142,6 +142,101 @@ object StreamingPack extends QueryPack {
     EventStream.foldLmCounts(s.read.parquet(s"$base/counts"))
   }
 
+  /** The embeddings as an arriving `(offset_id, embedding)` tail. */
+  private def vectorTail(s: SparkSession, d: String): DataFrame =
+    graft.Tables.embeddings(s, d)
+      .select(col("vec_id").as("offset_id"), col("embedding"))
+
+  /** The 3 query vectors every ANN `st_*` query searches with. */
+  private def streamQueries(s: SparkSession, d: String): DataFrame =
+    graft.Tables.embeddings(s, d).filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
+
+  /** An ANN result in its oracle's column shape and order. */
+  private def ranked(hits: DataFrame): DataFrame =
+    hits.select(col("query_id"), col("rank"),
+        col("dist").cast("float").as("dist"), col("offset_id"))
+      .orderBy(col("query_id"), col("rank"))
+
+  /** `st_ivf_upsert` and its exhaustive twin: stream-maintain postings
+    * against the served centroids, compact, and probe `nprobe` of the 16
+    * lists (all 16 is the exact KNN).
+    */
+  private def ivfUpsert(nprobe: Int)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    val vecs = vectorTail(s, d)
+    val centroids = graft.sources.CollectionStore.ivfServing(
+      vecs, graft.sources.CollectionStore.indexRoot(d),
+      nCentroids = 16, nReplica = 4).centroids
+    // stage the "arriving WAL tail" as 3 parquet files (once per sf)
+    val src = stagedSrc(d, "ivf_upsert_src", "parts3") { p =>
+      stageParts(vecs, "offset_id", 3, p) }
+    val base = java.nio.file.Files.createTempDirectory("ivf_upsert").toString
+    EventStream.ivfMaintain(s, src, centroids,
+      s"$base/postings", s"$base/ckpt", nReplica = 4, filesPerBatch = 2)
+    // compaction cadence: fold the per-batch file fragments back to one
+    // writer per centroid before serving
+    graft.operators.Ivf.compactPostings(s, s"$base/postings")
+    val model = graft.operators.Ivf.Model(
+      centroids, s.read.parquet(s"$base/postings"))
+    ranked(graft.operators.Ivf.search(model, streamQueries(s, d), k = 10,
+      nprobe = nprobe))
+  }
+
+  /** `st_hnsw_upsert` and its exhaustive twin: stream-maintain per-batch
+    * graphs and search them at `efSearch`.
+    */
+  private def hnswUpsert(efSearch: Int)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    val src = stagedSrc(d, "hnsw_upsert_src", "parts3") { p =>
+      stageParts(vectorTail(s, d), "offset_id", 3, p) }
+    val base = java.nio.file.Files.createTempDirectory("hnsw_upsert").toString
+    EventStream.hnswMaintain(s, src, base, s"$base/ckpt",
+      filesPerBatch = 2)
+    ranked(graft.operators.Hnsw.searchSaved(s, base, streamQueries(s, d),
+      k = 10, efSearch = efSearch))
+  }
+
+  /** `st_quantized_upsert` and its exhaustive twin: stream-maintain the
+    * rotated code table and re-rank `alpha`·k coarse survivors.
+    */
+  private def quantizedUpsert(alpha: Int)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    val vecs = vectorTail(s, d)
+    val src = stagedSrc(d, "q_upsert_src", "parts3") { p =>
+      stageParts(vecs, "offset_id", 3, p) }
+    val base = java.nio.file.Files.createTempDirectory("q_upsert").toString
+    EventStream.quantizedMaintain(s, src, s"$base/codes",
+      s"$base/ckpt", dim = 64, filesPerBatch = 2)
+    ranked(graft.operators.Quantized.searchRotatedServed(
+      s.read.parquet(s"$base/codes"), vecs, streamQueries(s, d), k = 10,
+      dim = 64, alpha = alpha))
+  }
+
+  /** `st_minhash_upsert` and its exhaustive twin: stream-maintain the
+    * banded signature table and find pairs at `threshold`. Threshold 1.0
+    * is the exhaustive mode: it runs over the planted-duplicate corpus
+    * with uncapped buckets.
+    */
+  private def minhashUpsert(threshold: Double)
+      : (SparkSession, String) => DataFrame = { (s, d) =>
+    val exhaustive = threshold >= 1.0
+    val docs =
+      if (exhaustive) DedupPack.doubled(graft.Tables.documents(s, d))
+      else graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val srcName = if (exhaustive) "mh_upsert_o_src" else "mh_upsert_src"
+    val src = stagedSrc(d, srcName, "parts3") { p =>
+      stageParts(docs, "doc_id", 3, p) }
+    val base = java.nio.file.Files.createTempDirectory("mh_upsert").toString
+    EventStream.minhashMaintain(s, src, s"$base/banded",
+      s"$base/ckpt", filesPerBatch = 2)
+    graft.operators.Dedup.minhashLshServed(docs,
+        s.read.parquet(s"$base/banded"), threshold = threshold,
+        maxBucket = if (exhaustive) Int.MaxValue
+          else graft.operators.Dedup.DefaultMaxBucket)
+      .orderBy(col("da"), col("db"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st_hourly_stream" -> { (s, d) =>
       val out = EventStream.runToTable(
@@ -298,31 +393,7 @@ object StreamingPack extends QueryPack {
     // against fixed centroids; the query then SEARCHES the
     // incrementally-built index. Approximate (no SQL oracle) — parity
     // with the batch-built postings is gated in StreamingSpec.
-    "st_ivf_upsert" -> { (s, d) =>
-      import graft.Tables
-      val vecs = Tables.embeddings(s, d)
-        .select(col("vec_id").as("offset_id"), col("embedding"))
-      val centroids = graft.sources.CollectionStore.ivfServing(
-        vecs, graft.sources.CollectionStore.indexRoot(d),
-        nCentroids = 16, nReplica = 4).centroids
-      // stage the "arriving WAL tail" as 3 parquet files (once per sf)
-      val src = stagedSrc(d, "ivf_upsert_src", "parts3") { p =>
-        stageParts(vecs, "offset_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("ivf_upsert").toString
-      EventStream.ivfMaintain(s, src, centroids,
-        s"$base/postings", s"$base/ckpt", nReplica = 4, filesPerBatch = 2)
-      // compaction cadence: fold the per-batch file fragments back to one
-      // writer per centroid before serving
-      graft.operators.Ivf.compactPostings(s, s"$base/postings")
-      val model = graft.operators.Ivf.Model(
-        centroids, s.read.parquet(s"$base/postings"))
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Ivf.search(model, queries, k = 10, nprobe = 4)
-        .select(col("query_id"), col("rank"),
-          col("dist").cast("float").as("dist"), col("offset_id"))
-        .orderBy(col("query_id"), col("rank"))
-    },
+    "st_ivf_upsert" -> ivfUpsert(nprobe = 4),
 
     // Exhaustive-mode oracle twin of st_ivf_upsert: the SAME streaming
     // maintenance pipeline (staged files → micro-batch appends →
@@ -332,28 +403,7 @@ object StreamingPack extends QueryPack {
     // contains every vector (a dropped or double-assigned row would
     // break it). The recall-knobbed variant above stays as the
     // realistic-path measurement.
-    "st_ivf_upsert_oracle" -> { (s, d) =>
-      import graft.Tables
-      val vecs = Tables.embeddings(s, d)
-        .select(col("vec_id").as("offset_id"), col("embedding"))
-      val centroids = graft.sources.CollectionStore.ivfServing(
-        vecs, graft.sources.CollectionStore.indexRoot(d),
-        nCentroids = 16, nReplica = 4).centroids
-      val src = stagedSrc(d, "ivf_upsert_src", "parts3") { p =>
-        stageParts(vecs, "offset_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("ivf_upsert_o").toString
-      EventStream.ivfMaintain(s, src, centroids,
-        s"$base/postings", s"$base/ckpt", nReplica = 4, filesPerBatch = 2)
-      graft.operators.Ivf.compactPostings(s, s"$base/postings")
-      val model = graft.operators.Ivf.Model(
-        centroids, s.read.parquet(s"$base/postings"))
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Ivf.search(model, queries, k = 10, nprobe = 16)
-        .select(col("query_id"), col("rank"),
-          col("dist").cast("float").as("dist"), col("offset_id"))
-        .orderBy(col("query_id"), col("rank"))
-    },
+    "st_ivf_upsert_oracle" -> ivfUpsert(nprobe = 16),
 
     // Incremental FTS maintenance: the corpus streams in (3 staged files
     // → 2 micro-batches — a compactor batches the accumulated tail, so
@@ -414,44 +464,13 @@ object StreamingPack extends QueryPack {
     // the query searches the stream-built index through the same
     // searchSaved path as the batch build. Approximate (no SQL oracle) —
     // recall vs exact KNN is gated in StreamingSpec.
-    "st_hnsw_upsert" -> { (s, d) =>
-      import graft.Tables
-      val vecs = Tables.embeddings(s, d)
-        .select(col("vec_id").as("offset_id"), col("embedding"))
-      val src = stagedSrc(d, "hnsw_upsert_src", "parts3") { p =>
-        stageParts(vecs, "offset_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("hnsw_upsert").toString
-      EventStream.hnswMaintain(s, src, base, s"$base/ckpt",
-        filesPerBatch = 2)
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Hnsw.searchSaved(s, base, queries, k = 10)
-        .select(col("query_id"), col("rank"),
-          col("dist").cast("float").as("dist"), col("offset_id"))
-        .orderBy(col("query_id"), col("rank"))
-    },
+    "st_hnsw_upsert" -> hnswUpsert(efSearch = 64),
 
     // Exhaustive-mode oracle twin of st_hnsw_upsert: ef ≥ every
     // stream-appended graph's node count → degenerate-exact scan of
     // every per-batch partition graph, exact merge — hash-exactness
     // proves the incremental maintenance lost no vector.
-    "st_hnsw_upsert_oracle" -> { (s, d) =>
-      import graft.Tables
-      val vecs = Tables.embeddings(s, d)
-        .select(col("vec_id").as("offset_id"), col("embedding"))
-      val src = stagedSrc(d, "hnsw_upsert_src", "parts3") { p =>
-        stageParts(vecs, "offset_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("hnsw_upsert_o").toString
-      EventStream.hnswMaintain(s, src, base, s"$base/ckpt",
-        filesPerBatch = 2)
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Hnsw.searchSaved(s, base, queries, k = 10,
-          efSearch = 1000000)
-        .select(col("query_id"), col("rank"),
-          col("dist").cast("float").as("dist"), col("offset_id"))
-        .orderBy(col("query_id"), col("rank"))
-    },
+    "st_hnsw_upsert_oracle" -> hnswUpsert(efSearch = 1000000),
 
     // Incremental quantized-code maintenance — the 4th index family's
     // streaming face: vectors stream in (3 staged files → 2 micro-
@@ -460,48 +479,14 @@ object StreamingPack extends QueryPack {
     // re-rank search over the incrementally-built codes. Approximate at
     // realistic alpha (no SQL oracle) — stream-built == batch-built code
     // rows and recall are gated in StreamingSpec.
-    "st_quantized_upsert" -> { (s, d) =>
-      import graft.Tables
-      val vecs = Tables.embeddings(s, d)
-        .select(col("vec_id").as("offset_id"), col("embedding"))
-      val src = stagedSrc(d, "q_upsert_src", "parts3") { p =>
-        stageParts(vecs, "offset_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("q_upsert").toString
-      EventStream.quantizedMaintain(s, src, s"$base/codes",
-        s"$base/ckpt", dim = 64, filesPerBatch = 2)
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Quantized.searchRotatedServed(
-          s.read.parquet(s"$base/codes"), vecs, queries, k = 10, dim = 64,
-          alpha = 5)
-        .select(col("query_id"), col("rank"),
-          col("dist").cast("float").as("dist"), col("offset_id"))
-        .orderBy(col("query_id"), col("rank"))
-    },
+    "st_quantized_upsert" -> quantizedUpsert(alpha = 5),
 
     // Exhaustive-mode oracle twin of st_quantized_upsert: α·k ≥ N keeps
     // every coded vector through the coarse phase, so the exact re-rank
     // is brute force — the hash-match proves the incrementally-appended
     // code table lost no vector (a dropped or doubled row would push a
     // true neighbor out of the survivor set or duplicate a rank).
-    "st_quantized_upsert_oracle" -> { (s, d) =>
-      import graft.Tables
-      val vecs = Tables.embeddings(s, d)
-        .select(col("vec_id").as("offset_id"), col("embedding"))
-      val src = stagedSrc(d, "q_upsert_src", "parts3") { p =>
-        stageParts(vecs, "offset_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("q_upsert_o").toString
-      EventStream.quantizedMaintain(s, src, s"$base/codes",
-        s"$base/ckpt", dim = 64, filesPerBatch = 2)
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 3)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Quantized.searchRotatedServed(
-          s.read.parquet(s"$base/codes"), vecs, queries, k = 10, dim = 64,
-          alpha = 200)
-        .select(col("query_id"), col("rank"),
-          col("dist").cast("float").as("dist"), col("offset_id"))
-        .orderBy(col("query_id"), col("rank"))
-    },
+    "st_quantized_upsert_oracle" -> quantizedUpsert(alpha = 200),
 
     // Incremental MinHash-LSH maintenance — the dedup index's streaming
     // face (6th maintained family): documents stream in (3 staged files
@@ -598,19 +583,7 @@ object StreamingPack extends QueryPack {
         .orderBy(col("batch_id"), col("doc_id"))
     },
 
-    "st_minhash_upsert" -> { (s, d) =>
-      import graft.Tables
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val src = stagedSrc(d, "mh_upsert_src", "parts3") { p =>
-        stageParts(docs, "doc_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("mh_upsert").toString
-      EventStream.minhashMaintain(s, src, s"$base/banded",
-        s"$base/ckpt", filesPerBatch = 2)
-      graft.operators.Dedup.minhashLshServed(docs,
-          s.read.parquet(s"$base/banded"), threshold = 0.5,
-          maxBucket = graft.operators.Dedup.DefaultMaxBucket)
-        .orderBy(col("da"), col("db"))
-    },
+    "st_minhash_upsert" -> minhashUpsert(threshold = 0.5),
 
     // Exhaustive-mode oracle twin of st_minhash_upsert: the SAME
     // streaming maintenance pipeline over the planted-duplicate corpus
@@ -621,19 +594,7 @@ object StreamingPack extends QueryPack {
     // sorted-set-key oracle (dd_minhash_oracle's SQL verbatim) proves
     // the incremental maintenance lost no signature row — a dropped
     // band row could silently drop a duplicate pair.
-    "st_minhash_upsert_oracle" -> { (s, d) =>
-      import graft.Tables
-      val docs = DedupPack.doubled(Tables.documents(s, d))
-      val src = stagedSrc(d, "mh_upsert_o_src", "parts3") { p =>
-        stageParts(docs, "doc_id", 3, p) }
-      val base = java.nio.file.Files.createTempDirectory("mh_upsert_o").toString
-      EventStream.minhashMaintain(s, src, s"$base/banded",
-        s"$base/ckpt", filesPerBatch = 2)
-      graft.operators.Dedup.minhashLshServed(docs,
-          s.read.parquet(s"$base/banded"), threshold = 1.0,
-          maxBucket = Int.MaxValue) // exhaustive proof twin: uncapped
-        .orderBy(col("da"), col("db"))
-    },
+    "st_minhash_upsert_oracle" -> minhashUpsert(threshold = 1.0),
 
     // Incremental C4-style span dedup: documents stream in ASCENDING
     // doc_id ranges (three sequentially-staged files → three

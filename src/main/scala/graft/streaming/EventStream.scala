@@ -15,6 +15,14 @@ import org.apache.spark.sql.types._
   * For verification the parquet file drives the stream with
   * `Trigger.AvailableNow` + a memory sink, processed synchronously —
   * the batch DuckDB oracle must match the streamed result exactly.
+  *
+  * Index maintenance runs through ONE driver, [[maintainStream]]: every
+  * maintained family (ivf, bloom, fts, hnsw, quantized, minhash,
+  * metaInverted, metaRange, lm, sbo, nb, sparse, substring, spanDedup,
+  * cluster), the [[compactorTick]] and `Client.maintainAttachedFunctions`
+  * supply only a source and a per-batch body; the driver owns the
+  * clone-session start, the checkpoint, `AvailableNow`, `foreachBatch` and
+  * the wait.
   */
 object EventStream extends Serializable {
 
@@ -179,6 +187,95 @@ object EventStream extends Serializable {
     start(s)
   }
 
+  /** The ONE stream-maintainer driver — the reference's single compaction
+    * loop (`rust/worker/src/compactor/compaction_manager.rs`) as one
+    * incremental query with a per-batch sink: start `source` on the
+    * [[maintained]] clone, drain what exists now (`AvailableNow`; the
+    * checkpoint carries the offset to the next run), hand each
+    * micro-batch and its id to `perBatch`, and block until the drain
+    * ends. Delivery is at-least-once, so `perBatch` must be replay-safe
+    * ([[idempotentAppend]]).
+    */
+  private[graft] def maintainStream(spark: SparkSession, checkpoint: String)
+      (source: SparkSession => DataFrame)
+      (perBatch: (DataFrame, Long) => Unit): Unit =
+    maintained(spark) { s =>
+      source(s).writeStream
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(perBatch)
+        .start()
+    }.awaitTermination()
+
+  /** [[maintainStream]] over the parquet files landing in `srcDir`,
+    * `filesPerBatch` files per micro-batch — every family's source.
+    */
+  private def maintainFiles(spark: SparkSession, srcDir: String,
+      schema: StructType, checkpoint: String, filesPerBatch: Int)
+      (perBatch: (DataFrame, Long) => Unit): Unit =
+    maintainStream(spark, checkpoint)(_.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerBatch).parquet(srcDir))(perBatch)
+
+  /** Source schema of the vector families: `(offset_id, embedding)`. */
+  private val vectorSource = StructType(Seq(
+    StructField("offset_id", LongType),
+    StructField("embedding", ArrayType(FloatType))))
+
+  /** Source schema of the document families: `(doc_id, text)`. */
+  private val textSource = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** Source schema of the per-key metadata families: `offset_id` plus the
+    * typed-meta map a shredded record carries for `vtype`, or None for a
+    * type with no typed map.
+    */
+  private def typedMetaSource(vtype: graft.sources.Catalog.ValueType)
+      : Option[StructType] = {
+    import graft.sources.Catalog._
+    (vtype match {
+      case VString => Some("meta_str" -> StringType)
+      case VInt => Some("meta_int" -> LongType)
+      case VFloat => Some("meta_float" -> DoubleType)
+      case VBool => Some("meta_bool" -> BooleanType)
+      case VStringArray => Some("meta_str_arr" -> ArrayType(StringType))
+      case VIntArray => Some("meta_int_arr" -> ArrayType(LongType))
+      case VFloatArray => Some("meta_float_arr" -> ArrayType(DoubleType))
+      case VBoolArray => Some("meta_bool_arr" -> ArrayType(BooleanType))
+      case _ => None
+    }).map { case (name, t) => StructType(Seq(
+      StructField("offset_id", LongType),
+      StructField(name, MapType(StringType, t)))) }
+  }
+
+  /** The bucket count a posting appender hashes with: the table's
+    * persisted `_nbuckets`, else `default`, recorded on the way. A table
+    * built by the adaptive serving build carries a sidecar that probes
+    * trust — rows hashed with a mismatched caller constant would land in
+    * buckets the probe prunes away (silent misses) — and the first
+    * append records the hashing it used for the same reason.
+    */
+  private def appendBuckets(dir: String, default: Int): Int = {
+    val nb = graft.operators.PostingTables.bucketCount(dir, default)
+    graft.operators.PostingTables.writeBucketCount(dir, nb)
+    nb
+  }
+
+  /** Run `side` on another thread while `main` runs on this one — the
+    * overlap of two independent per-batch jobs. The side is
+    * always awaited before returning, so no orphan writer outlives the
+    * batch to race a replay's rewrite of the same leaf: when `main`
+    * fails the side is joined best-effort and `main`'s exception stays
+    * primary; otherwise a failed side fails the batch.
+    */
+  private def alongside[A](side: => Unit)(main: => A): A = {
+    val done = java.util.concurrent.CompletableFuture.runAsync(() => side)
+    val out =
+      try main
+      finally if (!done.isDone) try done.join() catch { case _: Throwable => () }
+    done.join()
+    out
+  }
+
   /** Incremental ANN index maintenance — the reference's compaction loop
     * (WAL tail → vector-segment index writer,
     * `rust/worker/src/compactor/compaction_manager.rs`) as Structured
@@ -197,28 +294,14 @@ object EventStream extends Serializable {
     */
   def ivfMaintain(spark: SparkSession, srcDir: String, centroids: DataFrame,
       postingsDir: String, checkpoint: String, nReplica: Int = 2,
-      filesPerBatch: Int = 1): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("offset_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, vectorSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.Ivf.assign(batch, centroids, nReplica)
             .repartition(col("centroid_id")), // one writer per touched list
           postingsDir, batchId, Seq("centroid_id"))
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Incremental Bloom-prefilter maintenance — the EIGHTH stream-kept
     * family: each arriving doc micro-batch appends its `(pid, fp)`
@@ -239,25 +322,13 @@ object EventStream extends Serializable {
     // (a false NEGATIVE, the one error class the family must never make)
     val (partitions, _, _) = graft.operators.Dedup.bloomMeta(bloomRoot)
     val deltasDir = graft.operators.Dedup.bloomDeltasDir(bloomRoot)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.Dedup.bloomDeltaFps(batch, partitions)
             .coalesce(1), // a delta is a tiny long-pair table
           deltasDir, batchId)
-      }
-      .start() }
-    q.awaitTermination()
+    }
   }
 
   /** Incremental trigram-FTS maintenance: documents stream in and each
@@ -270,32 +341,14 @@ object EventStream extends Serializable {
   def ftsMaintain(spark: SparkSession, srcDir: String, postingsDir: String,
       checkpoint: String, nBuckets: Int = graft.operators.Fts.DefaultBuckets,
       filesPerBatch: Int = 1): Unit = {
-    // appends must hash with the TABLE's persisted bucket count: a table
-    // built by the adaptive serving build carries an `_nbuckets` sidecar
-    // that probes trust — rows hashed with a mismatched caller constant
-    // would land in buckets the probe prunes away (silent misses). The
-    // first append records the hashing it used for the same reason.
-    val nb = graft.operators.PostingTables.bucketCount(postingsDir, nBuckets)
-    graft.operators.PostingTables.writeBucketCount(postingsDir, nb)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val nb = appendBuckets(postingsDir, nBuckets)
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.Fts.postings(batch, nb)
             .repartition(col("bucket")), // one writer per touched bucket
           postingsDir, batchId, Seq("bucket"))
-      }
-      .start() }
-    q.awaitTermination()
+    }
   }
 
   /** Incremental HNSW maintenance: each arriving vector micro-batch
@@ -308,28 +361,14 @@ object EventStream extends Serializable {
     */
   def hnswMaintain(spark: SparkSession, srcDir: String, root: String,
       checkpoint: String, m: Int = 16, efConstruction: Int = 100,
-      space: String = "cosine", filesPerBatch: Int = 1): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("offset_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      space: String = "cosine", filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, vectorSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.Hnsw.graphRows(batch, m, efConstruction, space,
             pidOffset = batchId * 65536L),
           s"$root/hnsw/graphs", batchId)
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Incremental quantized-code maintenance — the fourth index family's
     * streaming face (IVF/FTS/HNSW above): each arriving vector
@@ -345,29 +384,15 @@ object EventStream extends Serializable {
     */
   def quantizedMaintain(spark: SparkSession, srcDir: String, codesDir: String,
       checkpoint: String, dim: Int, seed: Long = 42L, rounds: Int = 3,
-      filesPerBatch: Int = 1): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("offset_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, vectorSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.Quantized.rotatedCodeRows(batch, dim, seed, rounds)
             .select("offset_id", "code", "corr", "vnorm")
             .coalesce(1), // one entry-sized file per micro-batch
           codesDir, batchId)
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Incremental MinHash-LSH maintenance — the dedup index's streaming
     * face (the sixth maintained family: IVF/FTS/HNSW/quantized/sparse
@@ -382,16 +407,9 @@ object EventStream extends Serializable {
     */
   def minhashMaintain(spark: SparkSession, srcDir: String, bandedDir: String,
       checkpoint: String, n: Int = 3, bands: Int = 16, rows: Int = 4,
-      filesPerBatch: Int = 1): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.Dedup.bandedRows(batch, n, bands, rows)
             .repartition(col("band")), // one writer per touched band
@@ -400,10 +418,7 @@ object EventStream extends Serializable {
         // rows) would silently miss candidates — persist the build
         // parameters beside the table so probes can validate
         graft.operators.Dedup.writeLshParams(bandedDir, n, bands, rows)
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Incremental per-key METADATA-INVERTED-index maintenance — the
     * streaming face of [[graft.operators.MetaInverted]] (the seventh
@@ -429,46 +444,17 @@ object EventStream extends Serializable {
       vtype: graft.sources.Catalog.ValueType,
       nBuckets: Int = graft.operators.MetaInverted.DefaultBuckets,
       filesPerBatch: Int = 1): Unit = {
-    val metaCol = vtype match {
-      case graft.sources.Catalog.VString => StructField("meta_str",
-        MapType(StringType, StringType))
-      case graft.sources.Catalog.VInt => StructField("meta_int",
-        MapType(StringType, LongType))
-      case graft.sources.Catalog.VFloat => StructField("meta_float",
-        MapType(StringType, DoubleType))
-      case graft.sources.Catalog.VBool => StructField("meta_bool",
-        MapType(StringType, BooleanType))
-      case graft.sources.Catalog.VStringArray => StructField("meta_str_arr",
-        MapType(StringType, ArrayType(StringType)))
-      case graft.sources.Catalog.VIntArray => StructField("meta_int_arr",
-        MapType(StringType, ArrayType(LongType)))
-      case graft.sources.Catalog.VFloatArray => StructField("meta_float_arr",
-        MapType(StringType, ArrayType(DoubleType)))
-      case graft.sources.Catalog.VBoolArray => StructField("meta_bool_arr",
-        MapType(StringType, ArrayType(BooleanType)))
-      case other => throw new IllegalArgumentException(
-        s"no inverted index for value type ${other.name}")
-    }
-    // hash appended rows with the table's persisted bucket count (see
-    // [[ftsMaintain]]) and record the hashing on first append
-    val nb = graft.operators.PostingTables.bucketCount(tableDir, nBuckets)
-    graft.operators.PostingTables.writeBucketCount(tableDir, nb)
-    val schema = StructType(Seq(
-      StructField("offset_id", LongType), metaCol))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val schema = typedMetaSource(vtype).getOrElse(
+      throw new IllegalArgumentException(
+        s"no inverted index for value type ${vtype.name}"))
+    val nb = appendBuckets(tableDir, nBuckets)
+    maintainFiles(spark, srcDir, schema, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.MetaInverted.postings(batch, key, vtype, nb)
             .repartition(col("bucket")), // one writer per touched bucket
           tableDir, batchId, Seq("bucket"))
-      }
-      .start() }
-    q.awaitTermination()
+    }
   }
 
   /** Incremental VALUE-ORDERED range-posting maintenance — the ninth
@@ -495,29 +481,18 @@ object EventStream extends Serializable {
       checkpoint: String, key: String,
       vtype: graft.sources.Catalog.ValueType,
       filesPerBatch: Int = 1): Unit = {
-    val metaCol = vtype match {
-      case graft.sources.Catalog.VString => StructField("meta_str",
-        MapType(StringType, StringType))
-      case graft.sources.Catalog.VInt => StructField("meta_int",
-        MapType(StringType, LongType))
-      case graft.sources.Catalog.VFloat => StructField("meta_float",
-        MapType(StringType, DoubleType))
-      case other => throw new IllegalArgumentException(
-        s"no range index for value type ${other.name}")
-    }
+    import graft.sources.Catalog.{VFloat, VInt, VString}
+    // only the ordered scalar types carry a range index
+    val schema = typedMetaSource(vtype)
+      .filter(_ => Seq(VString, VInt, VFloat).contains(vtype)).getOrElse(
+        throw new IllegalArgumentException(
+          s"no range index for value type ${vtype.name}"))
     val bounds = graft.operators.MetaRange.baseBounds(spark, root, key)
     require(bounds.nonEmpty,
       s"metaRangeMaintain($root, $key) needs a base MetaRange build " +
         "first — there are no bucket ranges to route new values into")
-    val schema = StructType(Seq(
-      StructField("offset_id", LongType), metaCol))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    maintainFiles(spark, srcDir, schema, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         val rows = graft.operators.MetaRange
           .postingsInto(batch, key, vtype, bounds)
         idempotentAppend(rows.repartition(col("rbucket")),
@@ -528,9 +503,7 @@ object EventStream extends Serializable {
         idempotentAppend(rows.groupBy(col("rbucket"))
             .agg(min(col("value")).as("lo"), max(col("value")).as("hi")),
           graft.operators.MetaRange.boundsDeltaDir(root, key), batchId)
-      }
-      .start() }
-    q.awaitTermination()
+    }
   }
 
   /** Incremental n-gram-LM maintenance — the perplexity filter's
@@ -547,24 +520,14 @@ object EventStream extends Serializable {
     * ([[foldLmCounts]] at read time, or rewrite the table).
     */
   def lmMaintain(spark: SparkSession, srcDir: String, countsDir: String,
-      checkpoint: String, filesPerBatch: Int = 1): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpoint: String, filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         idempotentAppend(
           graft.operators.TextStats.bigramLmCounts(
             graft.operators.TextStats.bigramTransitions(batch)),
           countsDir, batchId)
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Fold a [[lmMaintain]]-maintained per-batch count table to the final
     * corpus LM counts (sum over batches — the read-time compaction).
@@ -585,16 +548,9 @@ object EventStream extends Serializable {
     * the compaction cadence ([[foldSboCounts]]).
     */
   def sboMaintain(spark: SparkSession, srcDir: String, countsDir: String,
-      checkpoint: String, filesPerBatch: Int = 1): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpoint: String, filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         val t = graft.operators.TextStats.sboTables(batch)
         // the three writes are filters over sboTables' ONE cached pass
         // (the first materializes it); drop the per-batch cache after
@@ -603,10 +559,7 @@ object EventStream extends Serializable {
           idempotentAppend(t.bi, s"$countsDir/bi", batchId)
           idempotentAppend(t.uni, s"$countsDir/uni", batchId)
         } finally t.shared.foreach { c => c.unpersist(); () }
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Fold [[sboMaintain]]-maintained per-batch count tables to the final
     * corpus model (sum over batches — the read-time compaction).
@@ -633,25 +586,14 @@ object EventStream extends Serializable {
     * vocabulary, folded on the compaction cadence ([[foldNbCounts]]).
     */
   def nbMaintain(spark: SparkSession, srcDir: String, countsDir: String,
-      checkpoint: String, filesPerBatch: Int = 1): Unit = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("is_target", BooleanType)))
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentAppend(graft.operators.TextStats.nbWordCounts(batch),
-          s"$countsDir/wc", batchId)
-        idempotentAppend(graft.operators.TextStats.nbDocCounts(batch),
-          s"$countsDir/dc", batchId)
-      }
-      .start() }
-    q.awaitTermination()
-  }
+      checkpoint: String, filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource.add("is_target", BooleanType),
+        checkpoint, filesPerBatch) { (batch, batchId) =>
+      idempotentAppend(graft.operators.TextStats.nbWordCounts(batch),
+        s"$countsDir/wc", batchId)
+      idempotentAppend(graft.operators.TextStats.nbDocCounts(batch),
+        s"$countsDir/dc", batchId)
+    }
 
   /** Fold [[nbMaintain]]-maintained per-batch count tables to the final
     * corpus model (sum over batches): (word counts, doc counts).
@@ -682,27 +624,16 @@ object EventStream extends Serializable {
       key: String, checkpoint: String, nBuckets: Int = 64,
       blockSpan: Long = graft.sources.CollectionStore.SparseBlockSpan,
       filesPerBatch: Int = 1): Unit = {
-    // hash appended rows with the table's persisted bucket count (see
-    // [[ftsMaintain]]) and record the hashing on first append
     val postingsDir = s"$root/sparse_$key/postings"
-    val nb = graft.operators.PostingTables.bucketCount(postingsDir, nBuckets)
-    graft.operators.PostingTables.writeBucketCount(postingsDir, nb)
-    val schema = spark.read.parquet(srcDir).schema
-    val q = maintained(spark) { s => s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentAppend(
-          graft.sources.CollectionStore
-            .sparsePostingRows(batch, key, nb, blockSpan)
-            .repartition(col("bucket")), // one writer per touched bucket
-          postingsDir, batchId, Seq("bucket"))
-      }
-      .start() }
-    q.awaitTermination()
+    val nb = appendBuckets(postingsDir, nBuckets)
+    maintainFiles(spark, srcDir, spark.read.parquet(srcDir).schema,
+        checkpoint, filesPerBatch) { (batch, batchId) =>
+      idempotentAppend(
+        graft.sources.CollectionStore
+          .sparsePostingRows(batch, key, nb, blockSpan)
+          .repartition(col("bucket")), // one writer per touched bucket
+        postingsDir, batchId, Seq("bucket"))
+    }
   }
 
   /** Incremental Lee-et-al substring dedup — [[spanDedupMaintain]]'s
@@ -723,15 +654,9 @@ object EventStream extends Serializable {
     * persisted dedup state, the batch side is ingest-sized.
     */
   def substringMaintain(spark: SparkSession, srcDir: String, root: String,
-      checkpoint: String, k: Int = 10, filesPerBatch: Int = 1): Unit = {
-    val q = maintained(spark) { s => s.readStream.schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpoint: String, k: Int = 10, filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         val seenDir = s"$root/seen"
         // skew-safe first-occurrence flag (aggregate+join, no window fn)
         val wins = graft.operators.Dedup.markFirstWindows(
@@ -761,32 +686,23 @@ object EventStream extends Serializable {
           // guard instead of hiding inside the first write's critical
           // path, and the two writes below can consume the cache
           // concurrently without racing its population.
-          val markedReady = java.util.concurrent.CompletableFuture
-            .runAsync(() => { marked.count(); () })
-          try enforceAscendingBatches(
-            batchDocs, root, batchId, "substringMaintain")
-          finally if (!markedReady.isDone)
-            try markedReady.join() catch { case _: Throwable => () }
-          markedReady.join()
-          // the two appends are independent given the cached marks —
-          // overlap them (guide §2.6), the same async-write pattern as
-          // clusterMaintain's posting append
-          val outDone = java.util.concurrent.CompletableFuture.runAsync(() =>
+          alongside { marked.count(); () } {
+            enforceAscendingBatches(
+              batchDocs, root, batchId, "substringMaintain")
+          }
+          // the two appends are independent given the cached marks
+          alongside {
             idempotentAppend(graft.operators.Dedup.substringReconstruct(
                 batchDocs,
                 graft.operators.Dedup.coveredPositions(
                   marked.filter(col("removed")).select("doc_id", "start"), k)),
-              s"$root/out", batchId))
-          try idempotentAppend(marked.filter(!col("removed")).select("win"),
-            seenDir, batchId)
-          finally if (!outDone.isDone)
-            try outDone.join() catch { case _: Throwable => () }
-          outDone.join(); ()
+              s"$root/out", batchId)
+          } {
+            idempotentAppend(marked.filter(!col("removed")).select("win"),
+              seenDir, batchId)
+          }
         } finally { marked.unpersist(); batchDocs.unpersist(); () }
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Incremental C4-style span dedup — the exact-dedup pipeline's
     * streaming face: each arriving document micro-batch cuts into
@@ -806,15 +722,9 @@ object EventStream extends Serializable {
     * side is ingest-sized).
     */
   def spanDedupMaintain(spark: SparkSession, srcDir: String, root: String,
-      checkpoint: String, span: Int = 8, filesPerBatch: Int = 1): Unit = {
-    val q = maintained(spark) { s => s.readStream.schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpoint: String, span: Int = 8, filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         val seenDir = s"$root/seen"
         // skew-safe batch-first flag (aggregate+join, no window fn)
         val withFirst = graft.operators.Dedup.markFirstSegments(
@@ -849,25 +759,19 @@ object EventStream extends Serializable {
           // batch recomputes against exactly the pre-batch seen state and
           // rewrites identical rows instead of appending duplicates.
           // The two appends are independent given the cached marks (the
-          // guard's agg just materialized them) — overlap them
-          // (guide §2.6), the same async-write pattern as
-          // clusterMaintain's posting append; replay stays idempotent in
-          // either completion order because the seen read above excludes
-          // this batch's own leaf (`batch < batchId`).
-          val outDone = java.util.concurrent.CompletableFuture.runAsync(() =>
+          // guard's agg just materialized them) — overlap them; replay
+          // stays idempotent in either completion order because the seen
+          // read above excludes this batch's own leaf (`batch < batchId`).
+          alongside {
             idempotentAppend(graft.operators.Dedup
               .spanReconstruct(marked.select("doc_id", "seg_idx", "seg", "is_first")),
-              s"$root/out", batchId))
-          try idempotentAppend(marked.filter(col("is_first")).select("seg"),
-            seenDir, batchId)
-          finally if (!outDone.isDone)
-            try outDone.join() catch { case _: Throwable => () }
-          outDone.join(); ()
+              s"$root/out", batchId)
+          } {
+            idempotentAppend(marked.filter(col("is_first")).select("seg"),
+              seenDir, batchId)
+          }
         } finally marked.unpersist()
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Runtime guard for the maintainers whose exactness claim needs
     * ascending-doc_id batch arrival: record each batch's max doc_id in a
@@ -943,15 +847,9 @@ object EventStream extends Serializable {
     */
   def clusterMaintain(spark: SparkSession, srcDir: String, root: String,
       checkpoint: String, threshold: Double = 0.5,
-      filesPerBatch: Int = 1): Unit = {
-    val q = maintained(spark) { s => s.readStream.schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      filesPerBatch: Int = 1): Unit =
+    maintainFiles(spark, srcDir, textSource, checkpoint, filesPerBatch) {
+      (batch, batchId) =>
         // plan every per-batch job off the STREAM's cloned session so the
         // reduced maintenance fan-out applies to the probe/fold shuffles,
         // not only the state store
@@ -994,43 +892,37 @@ object EventStream extends Serializable {
           // new leaf, no reader ever selects it) overlaps
           val leafExists = java.nio.file.Files.isDirectory(
             java.nio.file.Paths.get(postDir, s"batch=$batchId"))
-          val appendDone =
-            if (foldedReplay || leafExists) {
-              idempotentAppend(batchPost, postDir, batchId)
-              java.util.concurrent.CompletableFuture
-                .completedFuture(null: Void)
-            } else java.util.concurrent.CompletableFuture.runAsync(
-              () => idempotentAppend(batchPost, postDir, batchId))
-          val corpus =
-            if (foldedReplay) dropBatch(ss.read.parquet(postDir))
-            else {
-              // explicit schema: no plan-time footer reads, so planning
-              // never touches files of a leaf being written
-              val priorSchema = StructType(batchPost.schema.fields :+
-                StructField("batch", LongType))
-              val prior =
-                if (hadPrior) dropBatch(ss.read.schema(priorSchema)
-                  .parquet(postDir)
-                  .filter(col("batch") =!= batchId))
-                else batchPost.limit(0)
-              prior.unionByName(batchPost)
-            }
-          val labels =
-            if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(labDir)))
-              ss.read.parquet(labDir)
-            else ss.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              StructType(Seq(StructField("doc_id", LongType),
-                StructField("cluster", LongType))))
-          // one pruning scan of the accumulated postings per batch: the
-          // corpus side semi-joins the batch's broadcast shingle set
-          // before anything else ([[graft.operators.Dedup.jaccardBatchProbe]]);
-          // the probe's pruning scan is referenced twice (df count +
-          // pair join) — persist it for the batch's lifetime so the
-          // accumulated posting table is scanned ONCE per micro-batch.
-          // The (tiny) pair set is persisted too: foldClusterStep
-          // references it twice (component solve + label write).
-          try {
+          def append(): Unit = idempotentAppend(batchPost, postDir, batchId)
+          def probeAndStage(): Unit = {
+            val corpus =
+              if (foldedReplay) dropBatch(ss.read.parquet(postDir))
+              else {
+                // explicit schema: no plan-time footer reads, so planning
+                // never touches files of a leaf being written
+                val priorSchema = StructType(batchPost.schema.fields :+
+                  StructField("batch", LongType))
+                val prior =
+                  if (hadPrior) dropBatch(ss.read.schema(priorSchema)
+                    .parquet(postDir)
+                    .filter(col("batch") =!= batchId))
+                  else batchPost.limit(0)
+                prior.unionByName(batchPost)
+              }
+            val labels =
+              if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(labDir)))
+                ss.read.parquet(labDir)
+              else ss.createDataFrame(
+                new java.util.ArrayList[org.apache.spark.sql.Row](),
+                StructType(Seq(StructField("doc_id", LongType),
+                  StructField("cluster", LongType))))
+            // one pruning scan of the accumulated postings per batch: the
+            // corpus side semi-joins the batch's broadcast shingle set
+            // before anything else ([[graft.operators.Dedup.jaccardBatchProbe]]);
+            // the probe's pruning scan is referenced twice (df count +
+            // pair join) — persist it for the batch's lifetime so the
+            // accumulated posting table is scanned ONCE per micro-batch.
+            // The (tiny) pair set is persisted too: foldClusterStep
+            // references it twice (component solve + label write).
             val hits = graft.operators.Dedup.batchProbeHits(
               batchPost, corpus).persist()
             val pairs = graft.operators.Dedup.jaccardBatchProbeFromHits(
@@ -1043,29 +935,19 @@ object EventStream extends Serializable {
               updated.coalesce(4).write.mode("overwrite")
                 .parquet(s"${labDir}_staged")
             } finally { pairs.unpersist(); hits.unpersist() }
-            // postings must be durable before the labels that summarize
-            // them publish (either order replays idempotently, but this
-            // order keeps the table pair always-consistent for readers)
-            appendDone.join()
-          } finally {
-            // the FAILURE path must not leave an orphan append writer
-            // racing a replay's synchronous overwrite of the same leaf —
-            // await it best-effort (a failed append already fails the
-            // success path via the join above; here the primary
-            // exception stays primary)
-            if (!appendDone.isDone)
-              try appendDone.join() catch { case _: Throwable => () }
           }
+          // postings are durable before the labels that summarize them
+          // publish (either order replays idempotently, but this order
+          // keeps the table pair always-consistent for readers)
+          if (foldedReplay || leafExists) { append(); probeAndStage() }
+          else alongside(append())(probeAndStage())
           if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(labDir)))
             graft.sources.CollectionStore.swapDirectory(labDir, s"${labDir}_staged")
           else org.apache.commons.io.FileUtils.moveDirectory(
             new java.io.File(s"${labDir}_staged"), new java.io.File(labDir))
           graft.sources.CollectionStore.invalidateRoot(labDir)
         } finally batchPost.unpersist()
-      }
-      .start() }
-    q.awaitTermination()
-  }
+    }
 
   /** Run a streaming DataFrame to completion into a memory sink, return
     * the materialized result.
@@ -1274,12 +1156,8 @@ object EventStream extends Serializable {
     // growth. (A long-running scheduler would leave this stream up with
     // a ProcessingTime trigger and tick from its batches; AvailableNow
     // is the one-shot form.)
-    val q = maintained(spark) { s => WalStore.streamEntries(s, dataRoot)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (_: DataFrame, _: Long) => () }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow()).start() }
-    q.awaitTermination()
+    maintainStream(spark, checkpoint)(WalStore.streamEntries(_, dataRoot)) {
+      (_, _) => () }
     // Policy runs on marker arithmetic EVERY tick (zero Spark jobs), not
     // only on growth: a backlog a prior tick declined — or failed to
     // compact — must still compact once it crosses the threshold.

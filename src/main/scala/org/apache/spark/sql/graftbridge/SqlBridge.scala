@@ -34,4 +34,12 @@ object SqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** How many datasets the session's cache holds (`numCachedEntries` is
+    * private[sql]) — the probe for "no persisted dataset outlives its
+    * owner".
+    */
+  def cachedEntries(s: org.apache.spark.sql.SparkSession): Int =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

@@ -637,4 +637,26 @@ class ClientSpec extends AnyFunSuite {
       coll.delete(ids = None, where = None)
     }
   }
+
+  test("asCollection: racing first reads of an epoch share ONE persisted view") {
+    val coll = new Client(spark, freshRoot()).createCollection("race")
+    coll.add(Seq(("a", "alpha doc", Map("k" -> "1")),
+      ("b", "beta doc", Map("k" -> "2"))).toDF("id", "document", "meta"))
+    coll.state // fold the WAL first, so only the view build is counted
+    def cached() = org.apache.spark.sql.graftbridge.SqlBridge.cachedEntries(spark)
+    val before = cached()
+    val gate = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val reads = Seq.fill(2)(pool.submit(
+        (() => { gate.await(); coll.asCollection })
+          : java.util.concurrent.Callable[graft.api.Collection]))
+      val Seq(c1, c2) = reads.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(c1 eq c2, "two first reads of one epoch built two views")
+      assert(cached() == before + 1,
+        s"expected exactly one persisted view, cache went $before -> " +
+          cached())
+      assert(c1.records.count() == 2)
+    } finally pool.shutdown()
+  }
 }

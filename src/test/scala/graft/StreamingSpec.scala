@@ -1061,6 +1061,84 @@ class StreamingSpec extends AnyFunSuite {
       s"$base/ckpt_sp")
     assert(outKey() == o1, "replayed span dedup changed the output")
     assert(seenCount() == s1, "replayed span dedup duplicated seen segments")
+
+    // every other family through the same drill: run, lose the
+    // checkpoint, run again — each maintained table must come back
+    // row-for-row (a doubled row is a second copy in the sorted multiset)
+    def tableRows(dirs: Seq[String]): Seq[String] = dirs.flatMap { d =>
+      spark.read.parquet(d).collect().map(_.toSeq.map {
+        case b: Array[Byte] => java.util.Arrays.toString(b)
+        case v => String.valueOf(v)
+      }.mkString("|"))
+    }.sorted
+    def replays(family: String, dirs: String*)(run: String => Unit): Unit = {
+      val ckpt = s"$base/ckpt_$family"
+      run(ckpt)
+      val once = tableRows(dirs)
+      assert(once.nonEmpty, s"$family maintained no rows")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+      run(ckpt)
+      assert(tableRows(dirs) == once,
+        s"replayed $family maintenance changed its table")
+    }
+    def stage3(df: org.apache.spark.sql.DataFrame, idCol: String,
+        dir: String): String = {
+      df.withColumn("part", pmod(col(idCol), lit(3)))
+        .repartitionByRange(3, col("part")).drop("part")
+        .write.parquet(s"$base/$dir")
+      s"$base/$dir"
+    }
+
+    val vecs = Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("offset_id"), col("embedding"))
+    val vsrc = stage3(vecs, "offset_id", "vsrc")
+    val centroids = graft.operators.Ivf.build(vecs, nCentroids = 8,
+      nReplica = 2).centroids
+    replays("ivf", s"$base/ivf")(EventStream.ivfMaintain(spark, vsrc,
+      centroids, s"$base/ivf", _))
+    replays("hnsw", s"$base/hnsw/hnsw/graphs")(
+      EventStream.hnswMaintain(spark, vsrc, s"$base/hnsw", _))
+    replays("quantized", s"$base/codes")(EventStream.quantizedMaintain(
+      spark, vsrc, s"$base/codes", _, dim = 64))
+
+    replays("fts", s"$base/fts")(
+      EventStream.ftsMaintain(spark, s"$base/src", s"$base/fts", _))
+    replays("sbo", s"$base/sbo/tri", s"$base/sbo/bi", s"$base/sbo/uni")(
+      EventStream.sboMaintain(spark, s"$base/src", s"$base/sbo", _))
+    val nbsrc = stage3(docs.withColumn("is_target", col("doc_id") % 2 === 0),
+      "doc_id", "nbsrc")
+    replays("nb", s"$base/nb/wc", s"$base/nb/dc")(
+      EventStream.nbMaintain(spark, nbsrc, s"$base/nb", _))
+
+    val spsrc = stage3(graft.queries.FacadePack.docsSparseCollection(spark, sf)
+      .records.select(col("offset_id"), col("meta_sparse")), "offset_id", "spsrc")
+    replays("sparse", s"$base/sparse/sparse_tf_bow/postings")(
+      EventStream.sparseMaintain(spark, spsrc, s"$base/sparse", "tf_bow", _))
+
+    // range postings: the base build fixes the buckets, the rest streams
+    import graft.operators.MetaRange
+    val parRecs = Tables.documents(spark, sf).select(
+      col("doc_id").as("offset_id"), map(lit("par"), col("doc_id")).as("meta_int"))
+    MetaRange.buildAndSave(parRecs.filter(col("offset_id") % 3 =!= 0),
+      s"$base/mr", "par", Catalog.VInt)
+    val mrsrc = stage3(parRecs.filter(col("offset_id") % 3 === 0),
+      "offset_id", "mrsrc")
+    replays("metaRange", MetaRange.tableDeltaDir(s"$base/mr", "par"),
+        MetaRange.boundsDeltaDir(s"$base/mr", "par"))(
+      EventStream.metaRangeMaintain(spark, mrsrc, s"$base/mr", _, "par",
+        Catalog.VInt))
+
+    // bloom deltas over a base built from the other two thirds
+    import graft.operators.Dedup
+    Dedup.saveBloomIndex(docs.filter(col("doc_id") % 3 =!= 0), s"$base/bloom",
+      partitions = 4)
+    val blsrc = stage3(docs.filter(col("doc_id") % 3 === 0), "doc_id", "blsrc")
+    replays("bloom", Dedup.bloomDeltasDir(s"$base/bloom"))(
+      EventStream.bloomMaintain(spark, blsrc, s"$base/bloom", _))
+
+    // substring dedup needs the ascending-ordered source span dedup used
+    replays("substring", s"$base/sub/out", s"$base/sub/seen")(
+      EventStream.substringMaintain(spark, s"$base/ssrc", s"$base/sub", _))
   }
 
   // One guard contract for every ordered-arrival maintainer: stage the

@@ -257,6 +257,24 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got.length == 1 && got(0).isNullAt(2) && got(0).isNullAt(3))
   }
 
+  test("ta_stupid_backoff leaves no cached dataset behind its collect") {
+    def cached() = org.apache.spark.sql.graftbridge.SqlBridge.cachedEntries(spark)
+    val before = cached()
+    val df = SparkEntry.queries("ta_stupid_backoff")(spark, sf)
+    assert(df.collect().nonEmpty)
+    assert(cached() <= before,
+      s"cache grew $before -> ${cached()} entries")
+    // uncached, the three count views still share ONE counting pass: the
+    // final plan holds one count aggregate and the others reuse its
+    // exchange (a local corpus, so no other spec's cache can serve it)
+    val corpus = Seq((1L, "a b c a b c"), (2L, "x y")).toDF("doc_id", "text")
+    val scored = TextStats.stupidBackoffScore(corpus, corpus)
+    scored.collect()
+    val finalPlan = scored.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert("partial_max\\(".r.findAllIn(finalPlan).size == 1, finalPlan)
+  }
+
   test("chunkWindows cuts sliding windows with the last-chunk-reaches-end rule") {
     // chunkSize=4, overlap=2 -> stride=2
     val docs = Seq(
