@@ -2010,13 +2010,13 @@ final class CollectionHandle(spark: SparkSession,
     // commit then releases the claim and the unpublished data, so the
     // visible contract is unchanged. Schema-less collections accept
     // arbitrary metadata (the reference only enforces declared per-key
-    // config).
+    // config; saveRecords holds that rule for both write paths).
     if (ref.schema.keys.nonEmpty || ref.schema.embedding.isDefined)
       Catalog.validateShape(records, ref.schema)
     // Publish through the versioned conditional commit — the reference's
     // compaction transaction (`conditional_transaction.rs`): the new
     // segment lands in its own version directory and becomes visible
-    // only when the version marker claims atomically, so a crash
+    // only when its version marker publishes by CAS, so a crash
     // mid-compaction leaves the previous version serving (never a
     // half-written only-copy), and a concurrent compactor loses the race
     // loudly instead of silently clobbering. Old versions retire via
@@ -2030,8 +2030,7 @@ final class CollectionHandle(spark: SparkSession,
     // commit even if it reads currentVersion fresh — its folded state is
     // missing the other writer's records (the classic lost update)
     CollectionStore.conditionalCommit(ref.dataRoot, baseVersion, { dir =>
-      CollectionStore.saveRecords(records, dir,
-        if (ref.schema.keys.nonEmpty) Some(ref.schema) else None)
+      CollectionStore.saveRecords(records, dir, ref.schema)
       // the segment folded exactly the log prefix this handle has seen —
       // record it so opens of this version replay only entries past it
       WalStore.writeMark(dir, walSeen)
@@ -2080,12 +2079,13 @@ final class CollectionHandle(spark: SparkSession,
 
   /** Retire compacted-segment versions older than the newest `keepLast`
     * — the reference's garbage-collection service, driven through the
-    * client. Also sweeps commit claims orphaned by a crashed committer
-    * (age-guarded: a claim younger than `staleClaimAgeMs` is presumed
-    * live and left alone — without this, a crash between claim and
-    * publish blocks the collection's next version slot forever, the
-    * decision the reference parks in its GC service). Returns the
-    * versions removed.
+    * client. Also voids commit claims orphaned by a crashed committer
+    * and reaps their data (age-guarded: a claim younger than
+    * `staleClaimAgeMs` is presumed live and left alone — without this, a
+    * crash between claim and publish blocks the collection's next
+    * version slot forever, the decision the reference parks in its GC
+    * service); the next commit claims the slot above the void. Returns
+    * the versions removed.
     */
   def gcVersions(keepLast: Int = 2,
       staleClaimAgeMs: Long = 10 * 60 * 1000L): Seq[Long] = {

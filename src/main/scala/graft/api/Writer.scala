@@ -10,10 +10,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * current segment into the next compacted state (the compactor's job,
   * SURVEY §3.4).
   *
-  * Offsets are assigned monotonically per writer — the single-writer-per-
-  * collection discipline the reference's log service provides; cross-writer
-  * ordering comes from the WAL service (or conditional commit,
-  * `CollectionStore.conditionalCommit`).
+  * Offsets are assigned monotonically per writer; cross-writer ordering
+  * comes from the durable log — a commit rebases its ops into the WAL
+  * position it claims (`WalStore.appendAt`), the reference's log-service
+  * order. Compactions publish segment versions through the same
+  * claim → publish → void protocol (`CollectionStore.conditionalCommit`).
   */
 final class Writer(spark: SparkSession, var segment: Dataset[Rec],
     startOffset: Long = 0L) {

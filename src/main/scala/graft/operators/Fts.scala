@@ -87,8 +87,10 @@ object Fts {
     * batches, so a lost postings dir could NOT be regenerated) until the
     * compacted one is in place, and the no-live-dir window shrinks to
     * the gap between two directory renames instead of a full recursive
-    * delete. On an object store compact into a versioned directory via
-    * [[graft.sources.CollectionStore.conditionalCommit]] instead.
+    * delete. Object stores have no atomic rename, so there this swap is
+    * not crash-safe; posting tables do not yet publish through the
+    * conditional commit that segment versions use
+    * ([[graft.sources.CollectionStore.conditionalCommit]]).
     */
   def compactPostings(spark: SparkSession, root: String): Unit =
     PostingTables.compact(spark, s"$root/fts/postings", "trigram")

@@ -237,8 +237,10 @@ object Ivf {
     * rename-in → delete-old, `CollectionStore.swapDirectory` — the old
     * dir survives until the new one is in place), the same
     * compaction-cadence rewrite the reference's compactor applies to its
-    * posting blockfiles. Filesystem swap; object stores version through
-    * `CollectionStore.conditionalCommit` instead.
+    * posting blockfiles. Filesystem swap: object stores have no atomic
+    * rename, and posting tables do not yet publish through the
+    * conditional commit segment versions use
+    * (`CollectionStore.conditionalCommit`).
     */
   def compactPostings(spark: SparkSession, postingsDir: String): Unit = {
     val tmp = postingsDir + "_compacting"

@@ -20,8 +20,8 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * serving indexes [[provision]] builds (vector → IVF+HNSW, document →
   * trigram FTS); sparse keys are computed columns and need no build step.
   * On a cluster `root` is shared storage; descriptor writes use
-  * create-new (no overwrite) for the same lost-race atomicity as
-  * [[CollectionStore.conditionalCommit]].
+  * create-new (no overwrite) for lost-race atomicity, like
+  * [[CollectionStore.conditionalCommit]]'s conditional puts.
   */
 object Catalog {
 
@@ -1049,14 +1049,22 @@ object Catalog {
     CollectionStore.runBuilds(builds.toSeq)
   }
 
-  /** Write records (validated) + provision declared indexes + open. */
+  /** Write records (validated) as the collection's next segment version
+    * + provision declared indexes + open. The write publishes through the
+    * same conditional commit as compaction, so records that fail key
+    * validation leave the previous segment serving.
+    */
   def writeCollection(spark: SparkSession, ref: CollectionRef,
       records: DataFrame): Collection = {
     // key validation rides the write job as observed metrics (one pass);
     // shape checks stay job-free up front
     validateShape(records, ref.schema)
-    CollectionStore.saveRecords(records, ref.dataRoot,
-      if (ref.schema.keys.nonEmpty) Some(ref.schema) else None)
+    val base = CollectionStore.currentVersion(ref.dataRoot)
+    if (CollectionStore.conditionalCommit(ref.dataRoot, base,
+        CollectionStore.saveRecords(records, _, ref.schema)).isEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"collection ${ref.name}: a version past $base was committed " +
+          "concurrently")
     provision(spark, ref)
     openCollection(spark, ref)
   }

@@ -40,20 +40,24 @@ object CollectionStore {
     * drop any stale meta instead.
     */
   def saveRecords(records: DataFrame, root: String): Unit =
-    saveRecords(records, root, None)
+    saveRecords(records, root, Catalog.Schema())
 
-  /** [[saveRecords]] with schema validation RIDING THE WRITE JOB as
-    * observed metrics — one pass over the segment instead of a separate
-    * validate aggregate plus the write (guide §1.4). A violation throws
-    * AFTER the files land but BEFORE the caller publishes (persist's
+  /** [[saveRecords]] with `schema`'s key validation RIDING THE WRITE JOB
+    * as observed metrics — one pass over the segment instead of a
+    * separate validate aggregate plus the write (guide §1.4). A violation
+    * throws AFTER the files land but BEFORE the caller publishes (the
     * conditional commit releases the claim and the unpublished data on
-    * exception), so the visible contract is unchanged: a schema-violating
-    * compaction fails and publishes nothing.
+    * exception), so a schema-violating write fails and publishes nothing.
+    * A schema that declares no keys (embedding-only or empty) accepts
+    * arbitrary metadata: the reference only enforces declared per-key
+    * config. The one place that rule lives — compaction and
+    * [[Catalog.writeCollection]] both save through here.
     */
   def saveRecords(records0: DataFrame, root: String,
-      schema: Option[Catalog.Schema]): Unit = {
-    val valAggs = schema.map(Catalog.validationAggs(records0, _))
-      .getOrElse(Seq.empty)
+      schema: Catalog.Schema): Unit = {
+    val valAggs =
+      if (schema.keys.isEmpty) Seq.empty
+      else Catalog.validationAggs(records0, schema)
     val valObs = org.apache.spark.sql.Observation()
     val records =
       if (valAggs.isEmpty) records0
@@ -155,8 +159,7 @@ object CollectionStore {
 
   /** Does `root` hold a readable record segment (any layout)? */
   def hasRecords(root: String): Boolean =
-    java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(recordsRoot(root), "records"))
+    MetaIO.exists(s"${recordsRoot(root)}/records")
 
   def loadRecords(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"${recordsRoot(root)}/records")
@@ -209,11 +212,10 @@ object CollectionStore {
     * on a real cluster this is the table's snapshot/version id instead.
     */
   def indexRoot(sfDir: String): String = {
-    val dir = new java.io.File(sfDir)
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-    val tag = files.filter(_.isFile).sortBy(_.getName)
-      .foldLeft(17L)((h, f) =>
-        h * 1000003L + f.getName.## * 31L + f.length * 7L + f.lastModified)
+    val tag = MetaIO.children(sfDir).filter(_.isFile)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      .sortBy(_._1).foldLeft(17L) { case (h, (name, len, mtime)) =>
+        h * 1000003L + name.## * 31L + len * 7L + mtime }
     sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "/tmp/graft_index") + "/" +
       sfDir.replaceAll("[^A-Za-z0-9._-]", "_") +
       "_" + java.lang.Long.toHexString(tag)
@@ -368,9 +370,8 @@ object CollectionStore {
         // centroids — new data, new seed — changes the marker and forces
         // the graph to rebuild over the NEW centroid table, instead of
         // silently routing through an HNSW over stale centroids.
-        val ivfKey = try new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(root, "ivf", "_built")), "UTF-8")
-          catch { case _: Throwable => s"ivf-$nCentroids-$nReplica-$seed" }
+        val ivfKey = MetaIO.read(s"$root/ivf/_built")
+          .getOrElse(s"ivf-$nCentroids-$nReplica-$seed")
         once(s"ivf-cgraph-$root-$ivfKey-$space") {
           ensureBuilt(root, "ivf/centroid_graph", s"cgraph-$ivfKey-$space") {
             Hnsw.buildAndSave(
@@ -863,7 +864,7 @@ object CollectionStore {
     */
   def swapDirectory(live: String, staged: String): Unit = {
     healSwap(live)
-    // Hadoop FS from the path's scheme (java.io.File would silently
+    // Hadoop FS from the path's scheme (a local-file API would silently
     // resolve an object-store root against local disk); rename is the
     // same O(1) syscall on file:. Sweep a leftover `_old` from a prior
     // crash FIRST — Hadoop rename onto an existing directory nests the
@@ -907,139 +908,79 @@ object CollectionStore {
     * `expectedVersion`. Returns the new version, or None on a lost race /
     * stale expectation.
     *
-    * Two-phase marker, CLAIM-FIRST: the committer atomically creates
-    * `v{next}.claim` (`Files.createFile`; object-store equivalent:
-    * if-none-match put) BEFORE writing any data, so of two racers with
-    * the same expectation exactly one ever touches the shared
-    * `$root/v{next}` directory — the loser exits on the failed claim
-    * having written nothing (writing data first and claiming after opens
-    * a lost-update window where the loser's `SaveMode.Overwrite` replaces
-    * the winner's already-committed files). The version becomes VISIBLE
-    * only when the claim is atomically RENAMED into the final `v{next}`
-    * marker after a successful write ([[currentVersion]] reads final
-    * markers only), so a crash mid-write leaves the previous version
-    * serving, never a registered version with half-written data. The
-    * claim file doubles as the CAS token between publish and the stale
-    * sweep: [[recoverStaleClaims]] consumes it with an atomic delete
-    * before reaping data, the publish consumes it with the rename, and
-    * whichever loses the claim backs off — a registered version can
-    * never point at swept data. A failed write releases its claim and
-    * partial data; a claim orphaned by a process crash blocks that
-    * version slot until the sweep (the reference parks the same decision
-    * in its garbage-collection service).
+    * The version slot commits through [[SlotCommit]], the WAL's own
+    * protocol: claim `_versions/v{n}.claim` BEFORE writing any data (of
+    * two racers exactly one ever touches `$root/v{n}`), write, then
+    * publish the `_versions/v{n}` marker with a conditional put. The
+    * version is visible only once its marker lands, so a crash mid-write
+    * leaves the previous version serving; a sweeper that voided the slot
+    * mid-write ([[recoverStaleClaims]]) wins the marker and the publish
+    * loses loudly — a published version never points at reaped data.
+    *
+    * `n` is one above the HIGHEST marker, published or void: a voided
+    * slot is never reused, so a stalled committer can only ever publish
+    * into a slot nobody else writes. Each publish marker carries a
+    * per-attempt token, which keeps the byte-compare on a mis-reported
+    * publish sound.
     */
   def conditionalCommit(root: String, expectedVersion: Long,
       write: String => Unit): Option[Long] = {
-    val dir = java.nio.file.Paths.get(root, "_versions")
-    java.nio.file.Files.createDirectories(dir)
-    if (currentVersion(root) != expectedVersion) return None
-    val next = expectedVersion + 1
-    if (java.nio.file.Files.exists(dir.resolve(s"v$next"))) return None
-    val claim = dir.resolve(s"v$next.claim")
-    try java.nio.file.Files.createFile(claim) // atomic claim, BEFORE data
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => return None // lost
-    }
-    // Re-check the final marker AFTER winning the claim: the winner
-    // publishes by RENAMING the claim into the marker, which frees the
-    // claim path — a loser whose exists() check raced the publish wins
-    // the freed claim here, and without this check would Overwrite the
-    // registered version's data and then delete it when its own rename
-    // fails. Marker visible ⇒ lose cleanly, having touched nothing.
-    if (java.nio.file.Files.exists(dir.resolve(s"v$next"))) {
-      java.nio.file.Files.deleteIfExists(claim)
-      return None
-    }
+    val markers = versionMarkers(root)
+    if (newestPublished(root, markers) != expectedVersion) return None
+    val next = markers.lastOption.getOrElse(0L) + 1
     val dataDir = s"$root/v$next"
-    try {
+    val published = SlotCommit.commit(s"${versionsDir(root)}/v$next",
+        dataDir, isVoid = b => !isPublish(b)) {
       write(dataDir)
-      // Publish by atomically RENAMING the claim into the final marker:
-      // the claim file is the CAS token, so a sweeper that voided this
-      // claim mid-write (only possible past its age guard) makes the
-      // rename throw instead of letting a registered version point at
-      // data the sweeper is deleting. Exactly one of
-      // {publish-rename, sweep-delete} consumes the claim.
-      try java.nio.file.Files.move(claim, dir.resolve(s"v$next"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.NoSuchFileException =>
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(dataDir))
-          return None // claim swept while writing; slot verdict stands
-      }
-      Some(next)
-    } catch {
-      case e: Throwable =>
-        // release the slot so a retry can commit: claim last, so another
-        // committer never sees a free slot with partial data in place.
-        // Defense in depth: never reap data under a REGISTERED marker
-        // (unreachable after the post-claim re-check, but a delete here
-        // would destroy a committed version — fail safe).
-        if (!java.nio.file.Files.exists(dir.resolve(s"v$next")))
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(dataDir))
-        java.nio.file.Files.deleteIfExists(claim)
-        throw e
+      s"""{"token": "${java.util.UUID.randomUUID}"}""".getBytes("UTF-8")
     }
+    if (published) Some(next) else None
   }
 
-  /** Sweep claims whose commit died before publishing (process crash
-    * between claim and final marker): deletes the claim and its partial
-    * data directory so the version slot frees up. MUST only run when no
-    * commit is in flight for `root` — a claim cannot be distinguished
-    * from a live committer mid-write by the filesystem alone (the
-    * reference makes this call in its GC service, where the sysdb knows).
-    * `minAgeMs` is the defense-in-depth for that rule: a claim younger
-    * than it is presumed to belong to a live committer and is left
-    * alone, so the GC-cadence caller (gcVersions) can't reap a commit
-    * that is mid-write right now. Pass 0 only when the caller KNOWS no
-    * commit is in flight. Returns the versions whose claims were swept.
+  /** Void version claims whose commit died before publishing (a crash
+    * between claim and marker): [[SlotCommit.sweep]] lands a void marker
+    * by CAS, reaps the partial data and drops the claim, so the next
+    * commit claims the slot above it. `minAgeMs` is the guard for live
+    * committers — a younger claim is left alone; pass 0 only when the
+    * caller KNOWS no commit is in flight (the reference makes this call
+    * in its GC service, where the sysdb knows). Returns the voided
+    * versions.
     */
-  def recoverStaleClaims(root: String, minAgeMs: Long = 0L): Seq[Long] = {
-    val dir = java.nio.file.Paths.get(root, "_versions")
-    if (!java.nio.file.Files.isDirectory(dir)) return Seq.empty
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    val out = scala.collection.mutable.ArrayBuffer[Long]()
-    listDir(dir).foreach { p =>
-      val n = p.getFileName.toString
-      if (n.matches("v\\d+\\.claim") &&
-          java.nio.file.Files.getLastModifiedTime(p).toMillis <= cutoff) {
-        val v = n.stripPrefix("v").stripSuffix(".claim").toLong
-        if (!java.nio.file.Files.exists(dir.resolve(s"v$v"))) {
-          // CAS: consume the claim FIRST — conditionalCommit publishes by
-          // renaming it away, so winning this delete proves the commit
-          // cannot publish anymore and its data is safe to reap. Deleting
-          // data before winning the claim could destroy a version that
-          // publishes concurrently.
-          if (java.nio.file.Files.deleteIfExists(dir.resolve(n))) {
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$root/v$v"))
-            out += v
-          }
-        } else java.nio.file.Files.deleteIfExists(dir.resolve(n)) // published, stale claim
-      }
-    }
-    out.toSeq
-  }
+  def recoverStaleClaims(root: String, minAgeMs: Long = 0L): Seq[Long] =
+    SlotCommit.sweep(versionsDir(root), "v", v => s"$root/v$v",
+      VoidVersion, minAgeMs)
 
-  // Final version markers only: `v\d+` exactly — claims (`v3.claim`),
-  // editor temps, or partial files in _versions must never parse (a stray
-  // `v1.tmp` would otherwise throw in every open/commit/gc for the
-  // collection) and never count as committed.
-  private def finalVersions(root: String): Seq[Long] = {
-    val dir = java.nio.file.Paths.get(root, "_versions")
-    listDir(dir).map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted
-  }
+  private def cs: ConditionalStore = WalStore.conditional
+  private def versionsDir(root: String) = s"$root/_versions"
+  private val VersionName = "v(\\d+)".r
+  private val VoidVersion = """{"void": true}""".getBytes("UTF-8")
+  private val PublishMarker = """\{"token": "[0-9a-f-]+"\}""".r
+  // an empty marker is a publish too: the format of versions committed
+  // before markers carried a token, still on disk in existing roots
+  private def isPublish(bytes: Array[Byte]): Boolean =
+    bytes.isEmpty || PublishMarker.matches(new String(bytes, "UTF-8"))
+  private def isPublished(root: String, v: Long): Boolean =
+    cs.read(s"${versionsDir(root)}/v$v").exists(isPublish)
 
-  def currentVersion(root: String): Long = {
-    val vs = finalVersions(root)
-    if (vs.isEmpty) 0L else vs.last
-  }
+  // every slot marker, publish or void, ascending: `v\d+` exactly, so
+  // claims (`v3.claim`) and stray temps never parse as a version
+  private def versionMarkers(root: String): Seq[Long] =
+    cs.list(versionsDir(root))
+      .collect { case VersionName(n) => n.toLong }.sorted
+
+  private def newestPublished(root: String, markers: Seq[Long]): Long =
+    markers.reverseIterator.find(isPublished(root, _)).getOrElse(0L)
+
+  /** The newest PUBLISHED version (0 when none): void markers never
+    * count. Usually one marker read — the top marker is a void only
+    * after a swept commit.
+    */
+  def currentVersion(root: String): Long =
+    newestPublished(root, versionMarkers(root))
 
   /** Committed versions under `root` ordered ascending. */
-  def listVersions(root: String): Seq[Long] = finalVersions(root)
+  def listVersions(root: String): Seq[Long] =
+    versionMarkers(root).filter(isPublished(root, _))
 
   /** Version garbage collection — the reference runs this as its own
     * service (`rust/garbage_collector/`): committed versions older than
@@ -1047,7 +988,8 @@ object CollectionStore {
     * data directory: markers are the source of truth, so a crash between
     * the two leaves an unreferenced data directory (harmless, swept by a
     * re-run) — never a registered version whose data is gone. The current
-    * version is never collected. Returns the versions removed.
+    * version is never collected, nor is any void marker (it keeps its
+    * slot from being reused). Returns the versions removed.
     *
     * READER CONTRACT: a DataFrame constructed over a retired version's
     * path keeps reading that path — deletion under it fails the read.
@@ -1061,31 +1003,22 @@ object CollectionStore {
     */
   def gcVersions(root: String, keepLast: Int = 2): Seq[Long] = {
     require(keepLast >= 1, "gcVersions must keep at least the current version")
-    val versions = listVersions(root)
-    val retire = versions.dropRight(keepLast)
-    val dir = java.nio.file.Paths.get(root, "_versions")
+    val retire = listVersions(root).dropRight(keepLast)
     retire.foreach { v =>
-      // marker first: a crash between the two deletes leaves an orphaned
-      // data dir, never a registered version whose data is gone
-      java.nio.file.Files.deleteIfExists(dir.resolve(s"v$v"))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/v$v"))
+      cs.delete(s"${versionsDir(root)}/v$v")
+      MetaIO.deleteDir(s"$root/v$v")
     }
-    // sweep orphans from earlier crashes: vN data dirs with no marker.
-    // Only below currentVersion — an IN-FLIGHT conditionalCommit holds
-    // its claim and writes its data dir at current+1; sweeping there
-    // would race the commit (recoverStaleClaims owns that slot, under
-    // its no-commit-in-flight contract).
-    val live = listVersions(root).toSet
-    val cur = currentVersion(root)
-    val rootDir = new java.io.File(root)
-    if (rootDir.isDirectory) rootDir.listFiles().foreach { f =>
-      val n = f.getName
-      if (f.isDirectory && n.matches("v\\d+")) {
-        val v = n.drop(1).toLong
-        if (!live.contains(v) && v < cur)
-          org.apache.commons.io.FileUtils.deleteQuietly(f)
+    // sweep data no publish references: a voided slot's (its verdict is
+    // final), and below the current version an orphan of a crashed
+    // retire. A marker-less dir ABOVE current may be an in-flight
+    // commit's — recoverStaleClaims owns that slot.
+    val markers = versionMarkers(root).toSet
+    val live = markers.filter(isPublished(root, _))
+    val cur = live.maxOption.getOrElse(0L)
+    MetaIO.childNames(root).collect { case VersionName(n) => n.toLong }
+      .foreach { v =>
+        if (!live(v) && (markers(v) || v < cur)) MetaIO.deleteDir(s"$root/v$v")
       }
-    }
     retire
   }
 }

@@ -1,9 +1,9 @@
 package graft.sources
 
-/** The minimal conditional-write storage contract the durable WAL's
-  * claim/publish/void CAS rides on ([[WalStore]]) — six primitives, each
-  * with a direct object-store mapping, so swapping the local-FS
-  * implementation for an S3/GCS/ABS one changes NO WAL logic (the
+/** The minimal conditional-write storage contract the claim/publish/void
+  * CAS rides on ([[SlotCommit]]) — six primitives, each with a direct
+  * object-store mapping, so swapping the local-FS implementation for an
+  * S3/GCS/ABS one changes NO commit logic (the
   * reference's wal3 makes the same cut: log correctness lives in
   * CAS-on-position, storage supplies only the conditional put,
   * `rust/wal3/README.md:1-17`).
@@ -26,23 +26,17 @@ package graft.sources
   *     the guard window, never correctness (the void itself is a
   *     [[putIfAbsent]] CAS).
   *
-  * Entry DATA does not route through this interface: it is parquet
+  * Entry and segment DATA do not route through this interface: it is parquet
   * written/read by Spark, already object-store-native via the Hadoop
   * filesystem connectors. Only the O(1)-sized markers — the
   * linearization state — need conditional semantics.
   *
-  * NOT covered (deliberately): [[CollectionStore.conditionalCommit]]'s
-  * version publish consumes its claim token with an atomic RENAME —
-  * correct on POSIX/HDFS, but object stores have no atomic rename, and
-  * emulating it (read src → putIfAbsent dst → delete src) opens a
-  * sweeper race where a registered marker can point at reaped data. The
-  * object-store translation is the WAL's own void-marker protocol (the
-  * sweeper CASes the MARKER with a void verdict via [[putIfAbsent]], the
-  * committer's marker putIfAbsent then loses loudly — exactly
-  * [[WalStore.recoverStaleClaims]]'s shape, with void slots skipped in
-  * the version chain). That is a protocol change, not a storage shim, so
-  * it stays documented here rather than hidden behind a pseudo-atomic
-  * rename primitive.
+  * Both slot-numbered publishes in `sources/` ride this interface through
+  * ONE protocol, [[SlotCommit]]: WAL entries (`b{n}`, [[WalStore]]) and
+  * segment versions (`v{n}`, [[CollectionStore.conditionalCommit]]). A
+  * slot's verdict is its marker, written once by [[putIfAbsent]] — either
+  * the holder's publish or the sweeper's void — so no step needs an
+  * atomic rename, which object stores do not have.
   */
 trait ConditionalStore {
   /** Atomically create `path` with `bytes` iff it does not exist; true
@@ -156,4 +150,105 @@ final class InMemoryConditionalStore extends ConditionalStore {
   /** Test hook: age a key backwards so stale-claim guards can fire. */
   def backdate(path: String, ms: Long): Unit =
     Option(m.get(path)).foreach { case (b, t) => m.put(path, (b, t - ms)) }
+}
+
+/** The one conditional-commit protocol: claim → publish → void CAS on a
+  * numbered slot, over [[WalStore.conditional]]. A slot is three objects:
+  * `{marker}.claim` (an append or commit in flight), `{marker}` (the
+  * verdict: the holder's publish or the sweeper's void, whichever
+  * [[ConditionalStore.putIfAbsent]] lands first) and the slot's data
+  * directory. The marker is the source of truth for readers; data is
+  * reaped only under a void, never under a publish.
+  */
+private[sources] object SlotCommit {
+  private def cs: ConditionalStore = WalStore.conditional
+
+  /** Claim the slot at `marker`, run `write` (which lands the data at
+    * `dataDir` and returns the marker bytes) and publish. True when this
+    * caller's publish stands; false when the slot was taken, or voided
+    * while `write` ran — the loser's data is reaped and its claim
+    * released. `isVoid` tells a void marker from a publish. A throwing
+    * `write` releases the claim and its partial data and rethrows.
+    */
+  def commit(marker: String, dataDir: String,
+      isVoid: Array[Byte] => Boolean)(write: => Array[Byte]): Boolean = {
+    val claim = s"$marker.claim"
+    if (cs.exists(marker)) return false
+    // atomic claim, BEFORE data (S3: If-None-Match put)
+    if (!cs.putIfAbsent(claim, Array.emptyByteArray)) return false
+    // Re-check the marker AFTER winning the claim: the winner's publish
+    // deletes its claim only after its marker lands, so a loser whose
+    // exists() check raced the publish can win the freed claim here —
+    // without this check it would overwrite the published slot's data
+    // and then delete it on its own CAS failure. At this point the
+    // marker is either visible (lose cleanly, touching nothing) or the
+    // slot is genuinely ours.
+    if (cs.exists(marker)) {
+      cs.delete(claim)
+      return false
+    }
+    var published = false
+    try {
+      val bytes = write
+      // CAS publish: putIfAbsent, never overwrite. If the marker already
+      // exists, either [[sweep]] voided this slot while the data write
+      // was in flight (only possible past its age guard), or a RETRYING
+      // backend mis-reported our own APPLIED publish as a loss
+      // (HttpConditionalStore documents the lost-response ambiguity).
+      // Only the claim holder publishes and only the sweeper voids, so
+      // byte-equality with what we tried to write identifies the marker
+      // as ours and the publish STANDS — callers make the bytes unique
+      // to the attempt where the payload alone would not be.
+      published = cs.putIfAbsent(marker, bytes) ||
+        cs.read(marker).exists(java.util.Arrays.equals(_, bytes))
+      // lost to a void: the slot can never publish, so its data goes.
+      // Defense in depth: never reap under a marker that is not a void
+      if (!published && cs.read(marker).forall(isVoid))
+        MetaIO.deleteDir(dataDir)
+      cs.delete(claim)
+      published
+    } catch {
+      case e: Throwable =>
+        // release the slot: data first, claim last, so no other
+        // committer sees a free slot with partial data in place. Never
+        // reap after our publish landed, nor under a marker that may be
+        // ours (a publish whose response was lost) or a void (its data
+        // is the sweeper's to reap)
+        if (!published &&
+            !scala.util.Try(cs.exists(marker)).getOrElse(true))
+          MetaIO.deleteDir(dataDir)
+        cs.delete(claim)
+        throw e
+    }
+  }
+
+  /** Void the claims under `markersDir` whose holder died before
+    * publishing: a `{prefix}{n}.claim` older than `minAgeMs` with no
+    * marker gets the `void` marker by CAS, then its data is reaped and
+    * the claim deleted. A younger claim is presumed live and left alone;
+    * a claim whose slot already has a marker is a leftover and is
+    * deleted. Marker FIRST: a holder publishing concurrently either
+    * loses its CAS to the void (and [[commit]] reaps) or wins it, in
+    * which case this sweep touches nothing of its data. Returns the
+    * voided slots.
+    */
+  def sweep(markersDir: String, prefix: String, dataDir: Long => String,
+      void: Array[Byte], minAgeMs: Long): Seq[Long] = {
+    val cutoff = System.currentTimeMillis() - minAgeMs
+    val claimName = s"$prefix(\\d+)\\.claim".r
+    cs.list(markersDir).collect { case claimName(n) => n.toLong }
+      .filter { n =>
+        val marker = s"$markersDir/$prefix$n"
+        val claim = s"$marker.claim"
+        if (cs.exists(marker)) {
+          cs.delete(claim) // published; stale claim
+          false
+        } else if (cs.lastModifiedMs(claim).exists(_ <= cutoff)) {
+          val voided = cs.putIfAbsent(marker, void)
+          if (voided) MetaIO.deleteDir(dataDir(n))
+          cs.delete(claim)
+          voided
+        } else false
+      }
+  }
 }

@@ -44,15 +44,17 @@ final class HttpConditionalStore(endpoint: String) extends ConditionalStore {
     * exactly what every S3 SDK does. Request bodies are byte-array
     * publishers, so a retry re-streams identically. One ambiguity is
     * inherent: a conditional PUT APPLIED server-side whose response was
-    * lost reads as 412 on retry — a win reported as a loss. The WAL
-    * handles each of its two conditional writes explicitly: a
-    * mis-reported CLAIM is abandoned and ages into
-    * [[WalStore.recoverStaleClaims]]'s void (liveness hiccup only),
-    * and a mis-reported PUBLISH is detected by
-    * [[WalStore.appendAt]]'s byte-compare of the surviving marker
-    * against what it tried to write (sound there: only the claim
-    * holder publishes), so the publish stands instead of the batch
-    * re-appending at the next slot.
+    * lost reads as 412 on retry — a win reported as a loss. The one
+    * slot protocol ([[SlotCommit]]), shared by WAL entries and segment
+    * versions, handles each of its two conditional writes explicitly: a
+    * mis-reported CLAIM is abandoned and ages into the sweep's void
+    * (liveness hiccup only), and a mis-reported PUBLISH is detected by
+    * a byte-compare of the surviving marker against what the holder
+    * tried to write (sound: only the claim holder publishes, only a
+    * void can stand in for its marker, and a version marker carries a
+    * per-attempt token), so the publish stands instead of a WAL batch
+    * re-appending at the next slot or a compaction reporting a lost
+    * race for a version it published.
     */
   private def send[T](req: HttpRequest,
       h: HttpResponse.BodyHandler[T]): HttpResponse[T] = {

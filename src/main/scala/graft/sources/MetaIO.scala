@@ -94,13 +94,15 @@ object MetaIO {
       throw new java.io.IOException(s"rename $src -> $dst failed")
   }
 
-  /** Immediate child names of `dir` (empty when the directory is
-    * missing) — the marker-protocol directory listings.
+  /** Immediate children of `dir` (empty when the directory is missing)
+    * — the marker-protocol directory listings.
     */
-  def childNames(dir: String): Seq[String] = {
+  def children(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new Path(dir)
     val fs = fsFor(p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+    if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq
   }
+
+  def childNames(dir: String): Seq[String] =
+    children(dir).map(_.getPath.getName)
 }

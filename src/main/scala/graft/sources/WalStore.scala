@@ -13,9 +13,9 @@ import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
   *   b{n}/                entry data: parquet of Materialize.LogOp rows
   * }}}
   *
-  * ORDERING CONTRACT. An append claims the next log position with an
-  * atomic file create (object-store equivalent: if-none-match put) and
-  * only then writes data; the entry becomes visible when its final
+  * ORDERING CONTRACT. An append claims the next log position with a
+  * conditional put ([[SlotCommit]], the protocol segment versions share)
+  * and only then writes data; the entry becomes visible when its final
   * marker lands. Of two writers racing one position, exactly one claims
   * it — the loser re-reads the log and retries at the next slot, so
   * concurrent appends serialize into a total order fixed at append time
@@ -50,7 +50,8 @@ object WalStore {
   val OffsetStride: Long = 1L << 20
 
   /** The conditional-write backend EVERY marker/claim operation routes
-    * through — the only storage primitive the CAS protocol needs
+    * through, for WAL entries and segment versions alike — the only
+    * storage primitive the CAS protocol needs
     * ([[ConditionalStore]] documents the per-op S3/GCS mapping). Local
     * POSIX by default; swap for an object-store implementation at
     * deployment (entry DATA is Spark parquet and already rides the
@@ -64,8 +65,6 @@ object WalStore {
   private def walDir(root: String) = s"$root/_wal"
   private def markersDir(root: String) = s"${walDir(root)}/_entries"
   private def markerPath(root: String, n: Long) = s"${markersDir(root)}/b$n"
-  private def claimPath(root: String, n: Long) =
-    s"${markersDir(root)}/b$n.claim"
   def entryDataDir(root: String, n: Long): String = s"${walDir(root)}/b$n"
 
   /** Append `ops` at log position `n` (claim-first). Returns true when
@@ -75,23 +74,9 @@ object WalStore {
     * releases the claim and its partial data, leaving the slot free.
     */
   def appendAt(root: String, n: Long,
-      ops: Dataset[graft.operators.Materialize.LogOp]): Boolean = {
-    if (cs.exists(markerPath(root, n))) return false
-    // atomic claim, BEFORE data (S3: If-None-Match put)
-    if (!cs.putIfAbsent(claimPath(root, n), Array.emptyByteArray)) return false
-    // Re-check the final marker AFTER winning the claim: the winner's
-    // publish deletes its claim only after its marker lands, so a loser
-    // whose exists() check raced the publish can win the freed claim
-    // here — without this check it would Overwrite the published entry's
-    // data and then delete it on its own CAS failure (lost acknowledged
-    // writes). At this point the marker is either visible (lose cleanly,
-    // touching nothing) or the slot is genuinely ours.
-    if (cs.exists(markerPath(root, n))) {
-      cs.delete(claimPath(root, n))
-      return false
-    }
-    val dataDir = entryDataDir(root, n)
-    try {
+      ops: Dataset[graft.operators.Materialize.LogOp]): Boolean =
+    SlotCommit.commit(markerPath(root, n), entryDataDir(root, n),
+        isVoid = b => parseMeta(b).forall(_._1 == 0L)) {
       // an entry is ONE log batch (bounded by the per-entry offset range
       // and the client batch quota) — write it as a handful of files, not
       // one per shuffle partition: entry file count is what a streamed
@@ -107,60 +92,29 @@ object WalStore {
             org.apache.spark.sql.functions.lit(1)).as("cnt"),
           org.apache.spark.sql.functions.max(
             org.apache.spark.sql.functions.col("log_offset")).as("mo"))
-        .write.mode(SaveMode.Overwrite).parquet(dataDir)
+        .write.mode(SaveMode.Overwrite).parquet(entryDataDir(root, n))
       val m = obs.get
       val cnt = m.get("cnt").collect { case l: Long => l }.getOrElse(0L)
       val mo = m.get("mo").collect { case l: Long => l }.getOrElse(-1L)
-      // CAS publish: putIfAbsent, never overwrite. If the marker already
-      // exists, either [[recoverStaleClaims]] voided this slot while the
-      // data write was in flight (only possible past its age guard), or
-      // a RETRYING conditional backend mis-reported our own APPLIED
-      // publish as a loss (HttpConditionalStore documents the
-      // lost-response ambiguity). Disambiguation is sound HERE because
-      // only the claim HOLDER (us) publishes a real marker and only the
-      // voider CASes a void: byte-equality with what we tried to write
-      // identifies the marker as ours, and the publish STANDS — without
-      // this check the writer would re-append the same batch at the next
-      // slot and every reader would replay it twice.
-      val markerBytes =
-        s"""{"count": $cnt, "max_offset": $mo}""".getBytes("UTF-8")
-      if (!cs.putIfAbsent(markerPath(root, n), markerBytes)) {
-        if (cs.read(markerPath(root, n)).exists(
-            java.util.Arrays.equals(_, markerBytes))) {
-          cs.delete(claimPath(root, n))
-          return true
-        }
-        // post-claim re-check makes a PUBLISHED marker unreachable
-        // here; defense in depth: only reap the data when the marker
-        // is a void (count 0) — never delete under a published entry
-        if (entryMeta(root, n).forall(_._1 == 0L))
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(dataDir))
-        cs.delete(claimPath(root, n))
-        return false
-      }
-      cs.delete(claimPath(root, n))
-      true
-    } catch {
-      case e: Throwable =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dataDir))
-        cs.delete(claimPath(root, n))
-        throw e
+      // only a void can stand in for this marker, and its bytes differ
+      // from any non-empty entry's; an empty entry (a read-only fence)
+      // matches the void byte-for-byte, and both replay as nothing — so
+      // the byte-compare on a mis-reported publish needs no token here
+      s"""{"count": $cnt, "max_offset": $mo}""".getBytes("UTF-8")
     }
-  }
 
   /** `(count, max_offset)` from a published entry's marker; None when the
     * position is unpublished.
     */
   def entryMeta(root: String, n: Long): Option[(Long, Long)] =
-    cs.read(markerPath(root, n)).flatMap { bytes =>
-      try {
-        val j = org.json4s.jackson.JsonMethods.parse(
-          new String(bytes, "UTF-8"))
-        implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-        Some(((j \ "count").extract[Long], (j \ "max_offset").extract[Long]))
-      } catch { case _: Throwable => None }
-    }
+    cs.read(markerPath(root, n)).flatMap(parseMeta)
+
+  private def parseMeta(bytes: Array[Byte]): Option[(Long, Long)] =
+    try {
+      val j = org.json4s.jackson.JsonMethods.parse(new String(bytes, "UTF-8"))
+      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+      Some(((j \ "count").extract[Long], (j \ "max_offset").extract[Long]))
+    } catch { case _: Throwable => None }
 
   /** Op counts over RETAINED published entries split at `mark`
     * (indexed = entry position ≤ mark): the two numbers
@@ -225,40 +179,13 @@ object WalStore {
     * `minAgeMs` with no final marker publishes as an EMPTY entry (marker
     * with count 0, partial data deleted), so the contiguous prefix can
     * advance past the dead slot — without this a crashed claimant blocks
-    * consumption forever. Age is the same defense-in-depth as version
-    * claim recovery ([[CollectionStore.recoverStaleClaims]]): a younger
-    * claim is presumed live and left alone. Returns voided positions.
+    * consumption forever. A younger claim is presumed live and left
+    * alone ([[SlotCommit.sweep]], the sweep segment versions share).
+    * Returns voided positions.
     */
-  def recoverStaleClaims(root: String, minAgeMs: Long = 0L): Seq[Long] = {
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    val out = scala.collection.mutable.ArrayBuffer[Long]()
-    val claims = cs.list(markersDir(root))
-      .collect { case nme if nme.matches("b\\d+\\.claim") =>
-        nme.stripPrefix("b").stripSuffix(".claim").toLong }
-    claims.foreach { v =>
-      val claim = claimPath(root, v)
-      if (cs.exists(markerPath(root, v))) {
-        cs.delete(claim) // published; stale claim
-      } else if (cs.lastModifiedMs(claim).exists(_ <= cutoff)) {
-        // CAS void, marker FIRST: claim the verdict before touching data,
-        // so a claimant that publishes concurrently (putIfAbsent on its
-        // side too) either loses the CAS here — in which case its data
-        // must survive — or wins it, in which case appendAt cleans up.
-        // The old delete-data-then-mark order could destroy a just-
-        // published entry's data.
-        if (cs.putIfAbsent(markerPath(root, v),
-            """{"count": 0, "max_offset": -1}""".getBytes("UTF-8"))) {
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(entryDataDir(root, v)))
-          cs.delete(claim)
-          out += v
-        } else {
-          cs.delete(claim) // published after all
-        }
-      }
-    }
-    out.toSeq
-  }
+  def recoverStaleClaims(root: String, minAgeMs: Long = 0L): Seq[Long] =
+    SlotCommit.sweep(markersDir(root), "b", entryDataDir(root, _),
+      """{"count": 0, "max_offset": -1}""".getBytes("UTF-8"), minAgeMs)
 
   /** Drop entries at positions ≤ `through` — they are covered by every
     * retained compacted version (call with the OLDEST retained version's
@@ -270,8 +197,7 @@ object WalStore {
     val published = cs.list(markersDir(root))
       .collect { case nme if nme.matches("b\\d+") => nme.drop(1).toLong }
     published.filter(_ <= through).sorted.foreach { v =>
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(entryDataDir(root, v)))
+      MetaIO.deleteDir(entryDataDir(root, v))
       cs.delete(markerPath(root, v))
       out += v
     }
@@ -307,16 +233,7 @@ object WalStore {
       filesPerBatch: Int = 4): org.apache.spark.sql.DataFrame = {
     val stage = java.nio.file.Paths.get(walDir(root), "_stream_stage")
     java.nio.file.Files.createDirectories(stage)
-    // stage from the first RETAINED position: GC deletes consumed
-    // entries' markers, so walking from 0 would stop at the hole where
-    // entry 1 used to be and never stage anything again
-    var firstRetained = Long.MaxValue
-    cs.list(markersDir(root)).foreach { nme =>
-      if (nme.matches("b\\d+")) firstRetained =
-        math.min(firstRetained, nme.drop(1).toLong)
-    }
-    val from = if (firstRetained == Long.MaxValue) 0L else firstRetained - 1
-    publishedAfter(root, from).foreach { n =>
+    retainedPrefix(root).foreach { n =>
       val data = java.nio.file.Paths.get(entryDataDir(root, n))
       CollectionStore.listDir(data).foreach { f =>
         if (f.getFileName.toString.endsWith(".parquet")) {
@@ -334,18 +251,11 @@ object WalStore {
       .parquet(stage.toString)
   }
 
-  /** Every RETAINED entry's ops as one batch DataFrame — the batch twin
-    * of [[streamEntries]] for consumers that process the whole durable
-    * log in one plan (revision_history's incremental catch-up). Reads
-    * only published positions from the retained floor, so voided
-    * appends and GC'd entries are invisible, the same contract as the
-    * stream. The per-entry union is driver-assembled over the retained
-    * entry COUNT (bounded by GC cadence, not data size); each entry is
-    * still a distributed parquet scan.
-    */
   /** The contiguous RETAINED published positions — what a log consumer
     * can read right now: from the lowest retained marker through the
-    * first gap (an in-flight claim or the true tail).
+    * first gap (an in-flight claim or the true tail). Starts at the
+    * lowest retained marker, not 0: GC deletes consumed entries'
+    * markers, so walking from 0 would stop at the first GC'd hole.
     */
   def retainedPrefix(root: String): Seq[Long] = {
     var firstRetained = Long.MaxValue
@@ -375,6 +285,15 @@ object WalStore {
     ops
   }
 
+  /** Every RETAINED entry's ops as one batch DataFrame — the batch twin
+    * of [[streamEntries]] for consumers that process the whole durable
+    * log in one plan (revision_history's incremental catch-up). Reads
+    * only published positions from the retained floor, so voided
+    * appends and GC'd entries are invisible, the same contract as the
+    * stream. The per-entry union is driver-assembled over the retained
+    * entry COUNT (bounded by GC cadence, not data size); each entry is
+    * still a distributed parquet scan.
+    */
   def readAllEntries(spark: SparkSession,
       root: String): org.apache.spark.sql.DataFrame =
     readEntries(spark, root, retainedPrefix(root))

@@ -145,7 +145,7 @@ class ConcurrentWriterSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dataRoot/v2").exists, "partial data removed")
     coll.add(df(Seq("b" -> "beta")))
     coll.persist() // v2 commits through the freed slot
-    assert(CollectionStore.currentVersion(dataRoot) == 2L)
+    assert(CollectionStore.currentVersion(dataRoot) == 3L)
     val got = client.getCollection("cg").state.collect()
       .map(r => r.id -> r.document.get).toMap
     assert(got == Map("a" -> "alpha", "b" -> "beta"))

@@ -177,7 +177,7 @@ class StorageSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$root/v1").exists(), "swept data survived")
     // the slot is free again: a retry commits cleanly
     assert(CollectionStore.conditionalCommit(root, 0, { dir =>
-      new java.io.File(dir).mkdirs() }) == Some(1))
+      new java.io.File(dir).mkdirs() }) == Some(2))
   }
 
   test("a swap crashed between its two renames heals on the next touch") {
