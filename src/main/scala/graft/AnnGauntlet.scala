@@ -110,31 +110,60 @@ object AnnGauntlet {
       case _ => (first, None)
     }
 
-  /** Current `ann_ref.json` contents (empty when absent). */
-  def readRatchet(): Map[String, Double] = readFlat("ann_ref.json")
-
-  private def readFlat(name: String): Map[String, Double] = {
-    val path = java.nio.file.Paths.get(name)
-    if (!java.nio.file.Files.exists(path)) Map.empty
-    else """"([^"]+)":([0-9.]+)""".r
-      .findAllMatchIn(new String(
-        java.nio.file.Files.readAllBytes(path), "UTF-8"))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  /** A cell's builds (untimed, persisted once per (root, params)), one
+    * list per planted cluster: the IVF model, the rotated sign codes and
+    * the routed HNSW index's root.
+    */
+  private def servedBuilds(vecs: DataFrame, root: String, n: Long,
+      tag: String) = {
+    import graft.sources.CollectionStore
+    val nCentroids = clustersFor(n)
+    val fitSample = math.min(n, 50000L)
+    val ivfModel = CollectionStore.ivfServing(vecs, root,
+      nCentroids = nCentroids, nReplica = 2, keyTag = s"$tag$n",
+      fitSampleMax = fitSample)
+    val codes = CollectionStore.rotatedCodesServing(vecs, root, dim = Dim,
+      keyTag = s"$tag$n")
+    val hnswRoot = s"$root/hnsw_routed"
+    val hnswKey = s"hnsw-$tag-n$n-c$nCentroids-r2"
+    val marker = java.nio.file.Paths.get(hnswRoot, "_gauntlet_built")
+    val built = java.nio.file.Files.exists(marker) &&
+      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == hnswKey
+    if (!built) {
+      // in-place idempotent overwrite build — post-hoc marker is safe
+      // (a half-built dir just rebuilds; nothing swaps aside)
+      graft.operators.Hnsw.buildRoutedAndSave(vecs, hnswRoot,
+        nCentroids = nCentroids, nReplica = 2, space = "cosine",
+        knownCount = Some(n), fitSampleMax = fitSample)
+      java.nio.file.Files.createDirectories(marker.getParent)
+      java.nio.file.Files.write(marker, hnswKey.getBytes("UTF-8"))
+    }
+    (ivfModel, codes, hnswRoot)
   }
 
-  /** Host-calibration sidecar (`ann_ref_cal.json`, Bench's r13 protocol):
-    * per ratcheted row, the `host_cal_sec` of the run that set it; rows
-    * from the pre-sidecar era seed at the 0.33–0.45 s fast-window class
-    * midpoint. [[scaleToHost]] re-expresses the committed bests in THIS
-    * box's seconds, so every existing raw band comparison becomes a
-    * calibration-normalized one.
+  private def ids(df: DataFrame): Map[Long, Set[Long]] =
+    df.select(col("query_id"), col("offset_id")).collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.map(_.getLong(1)).toSet
+      }
+
+  /** `runs` timed collections of `plan`'s result batch (the recall input
+    * IS the latency action): latency band plus recall@k against `want`
+    * from the last run.
     */
-  val SeedCal = 0.40
-  def readRatchetCal(): Map[String, Double] = readFlat("ann_ref_cal.json")
-  def scaleToHost(ratchet: Map[String, Double], cal: Map[String, Double],
-      hostCal: Double): Map[String, Double] =
-    ratchet.map { case (k, v) =>
-      k -> v * (hostCal / cal.getOrElse(k, SeedCal)) }
+  private def measure(plan: () => DataFrame, want: Map[Long, Set[Long]],
+      runs: Int): PathResult = {
+    var got: Map[Long, Set[Long]] = Map.empty
+    val times = (1 to runs).map { _ =>
+      val t0 = System.nanoTime()
+      got = ids(plan())
+      (System.nanoTime() - t0) / 1e9
+    }
+    val recall = want.map { case (q, t) =>
+      got.getOrElse(q, Set.empty).count(t).toDouble / t.size
+    }.sum / want.size
+    PathResult(times.min, times.max, recall)
+  }
 
   /** All four serving paths over one corpus size. Builds persist under
     * `root` (untimed); each path's timed runs collect the full result
@@ -145,9 +174,7 @@ object AnnGauntlet {
       timedRuns: Int = 2, ratchet: Map[String, Double] = Map.empty,
       keyPrefix: String = ""): Map[String, PathResult] = {
     import graft.operators.{Hnsw, Ivf, Knn}
-    import graft.sources.CollectionStore
-    val parts = 32
-    val vecs = corpus(spark, n, parts)
+    val vecs = corpus(spark, n, parts = 32)
     val qs = queries(spark, n).cache()
     qs.count()
 
@@ -160,57 +187,14 @@ object AnnGauntlet {
     // growth the compactor's split maintenance bounds the lists instead
     // (Ivf.rebalance splitThreshold — measured separately as
     // vs_ann_ivf_rebalanced); a global refit never reruns.
-    val nCentroids = clustersFor(n)
+    val (ivfModel, codes, hnswRoot) = servedBuilds(vecs, root, n, "gauntlet")
     val nprobe = 16
-    val fitSample = math.min(n, 50000L)
-
-    // ---- builds (untimed, persisted once per (root, params)) ----
-    val ivfModel = CollectionStore.ivfServing(vecs, root,
-      nCentroids = nCentroids, nReplica = 2, keyTag = s"gauntlet$n",
-      fitSampleMax = fitSample)
-    val codes = CollectionStore.rotatedCodesServing(vecs, root, dim = Dim,
-      keyTag = s"gauntlet$n")
-    val hnswRoot = s"$root/hnsw_routed"
-    val hnswCentroids = nCentroids
-    val hnswKey = s"hnsw-gauntlet-n$n-c$hnswCentroids-r2"
-    val marker = java.nio.file.Paths.get(hnswRoot, "_gauntlet_built")
-    val built = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == hnswKey
-    if (!built) {
-      // in-place idempotent overwrite build — post-hoc marker is safe
-      // (a half-built dir just rebuilds; nothing swaps aside)
-      Hnsw.buildRoutedAndSave(vecs, hnswRoot, nCentroids = hnswCentroids,
-        nReplica = 2, space = "cosine", knownCount = Some(n),
-        fitSampleMax = fitSample)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, hnswKey.getBytes("UTF-8"))
-    }
-
-    def ids(df: DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("offset_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.map(_.getLong(1)).toSet
-        }
 
     // ---- ground truths (the diverse one is also the exact path) ----
     val truth = ids(Knn.exact(vecs, qs, K))
     val qsN = queriesNarrow(spark, n).cache()
     qsN.count()
     val truthN = ids(Knn.exact(vecs, qsN, K))
-
-    def measure(plan: () => DataFrame,
-        want: Map[Long, Set[Long]]): (PathResult, Map[Long, Set[Long]]) = {
-      var got: Map[Long, Set[Long]] = Map.empty
-      val times = (1 to timedRuns).map { _ =>
-        val t0 = System.nanoTime()
-        got = ids(plan())
-        (System.nanoTime() - t0) / 1e9
-      }
-      val recall = want.map { case (q, t) =>
-        got.getOrElse(q, Set.empty).count(t).toDouble / t.size
-      }.sum / want.size
-      (PathResult(times.min, times.max, recall), got)
-    }
 
     // the quantized path's exact-rerank window must cover the coarse
     // code's TIE mass: within a planted cluster the sign codes are
@@ -238,9 +222,9 @@ object AnnGauntlet {
         nprobe, Dim, alpha = alpha), truth))
     paths.map { case (name, plan, want) =>
       plan().count() // warm: JIT + file listings + broadcast reuse
-      val (res0, _) = measure(plan, want)
+      val res0 = measure(plan, want, timedRuns)
       val (kept, pair) = restampIfDrifted(s"$keyPrefix$name", ratchet,
-        res0.secMin, () => measure(plan, want)._1.secMin)
+        res0.secMin, () => measure(plan, want, timedRuns).secMin)
       val res = res0.copy(secMin = kept, restamp = pair)
       System.err.println(
         f"[gauntlet] n=$n%-8d $name%-20s ${res.secMin}%.2f-${res.secMax}%.2f s recall@$K=${res.recall}%.4f")
@@ -354,38 +338,13 @@ object AnnGauntlet {
       keyPrefix: String = ""): (Seq[HardResult], Double) = {
     import graft.operators.{Hnsw, Ivf, Knn}
     import graft.sources.CollectionStore
-    val parts = 32
-    val vecs = hardCorpus(spark, n, parts)
+    val vecs = hardCorpus(spark, n, parts = 32)
     val qs = hardQueries(spark, n).cache()
     qs.count()
     val nCentroids = clustersFor(n)
-    val fitSample = math.min(n, 50000L)
-
-    val ivfModel = CollectionStore.ivfServing(vecs, root,
-      nCentroids = nCentroids, nReplica = 2, keyTag = s"gauntletH$n",
-      fitSampleMax = fitSample)
-    val codes = CollectionStore.rotatedCodesServing(vecs, root, dim = Dim,
-      keyTag = s"gauntletH$n")
+    val (ivfModel, codes, hnswRoot) = servedBuilds(vecs, root, n, "gauntletH")
     val mbCodes = CollectionStore.mbCodesServing(vecs, root, MbBits,
       MbLo, MbHi, keyTag = s"gauntletH$n")
-    val hnswRoot = s"$root/hnsw_routed"
-    val hnswKey = s"hnsw-gauntletH-n$n-c$nCentroids-r2"
-    val marker = java.nio.file.Paths.get(hnswRoot, "_gauntlet_built")
-    val built = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == hnswKey
-    if (!built) {
-      Hnsw.buildRoutedAndSave(vecs, hnswRoot, nCentroids = nCentroids,
-        nReplica = 2, space = "cosine", knownCount = Some(n),
-        fitSampleMax = fitSample)
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.write(marker, hnswKey.getBytes("UTF-8"))
-    }
-
-    def ids(df: DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("offset_id")).collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.map(_.getLong(1)).toSet
-        }
     val truth = ids(Knn.exact(vecs, qs, K))
     val cross = crossMass(truth, nCentroids)
 
@@ -434,99 +393,35 @@ object AnnGauntlet {
 
     val results = ladder.map { case (path, setting, plan) =>
       plan().count() // warm
-      def once(): (Double, Map[Long, Set[Long]]) = {
-        val t0 = System.nanoTime()
-        val got = ids(plan())
-        ((System.nanoTime() - t0) / 1e9, got)
-      }
-      var got: Map[Long, Set[Long]] = Map.empty
-      val times = (1 to timedRuns).map { _ =>
-        val (t, g) = once(); got = g; t
-      }
-      val recall = truth.map { case (q, t) =>
-        got.getOrElse(q, Set.empty).count(t).toDouble / t.size
-      }.sum / truth.size
+      val res = measure(plan, truth, timedRuns)
       val (kept, pair) = restampIfDrifted(s"$keyPrefix$path[$setting]",
-        ratchet, times.min, () => once()._1)
+        ratchet, res.secMin, () => measure(plan, truth, 1).secMin)
       System.err.println(f"[gauntlet-hard] n=$n%-8d $path%-14s " +
-        f"$setting%-18s ${kept}%.2f-${times.max}%.2f s " +
-        f"recall@$K=$recall%.4f")
-      HardResult(path, setting, kept, times.max, recall, pair)
+        f"$setting%-18s ${kept}%.2f-${res.secMax}%.2f s " +
+        f"recall@$K=${res.recall}%.4f")
+      HardResult(path, setting, kept, res.secMax, res.recall, pair)
     }
     (results, cross)
   }
 
-  /** Downward-only latency ratchet over the gauntlet cells —
-    * `ann_ref.json`, NOW the bench's exact protocol (r10 asks #3 and
-    * ADVICE): rows restamp in isolation at [[RatchetBand]] (1.3×) inside
-    * the runs, a row still past the band after its restamp FLAGS, and
-    * the written ratchet keeps ONLY keys the current run produced —
-    * a superseded ladder setting (e.g. `ef=400` → `ef=800`) is pruned
-    * instead of accreting as a dead entry that can never flag.
-    */
-  def foldRatchet(rows: Map[String, Double],
-      hostCal: Double = SeedCal): (Map[String, Double], Seq[String]) = {
-    val path = java.nio.file.Paths.get("ann_ref.json")
-    val old = readRatchet()
-    val cal = readRatchetCal()
-    // flags fire on calibration-normalized ratios (Bench's r13 rule):
-    // the committed best is re-expressed in this box's seconds first
-    val scaled = scaleToHost(old, cal, hostCal)
-    val flagged = rows.collect {
-      case (k, v) if scaled.get(k).exists(r => v > r * RatchetBand) =>
-        f"$k: $v%.3f s > ${RatchetBand}x host-scaled ratchet " +
-          f"${scaled(k)}%.3f s (raw ${old(k)}%.3f)"
-    }.toSeq.sorted
-    // fold down where the key survives; DROP keys the run no longer
-    // measures (stable ladder membership is the run's responsibility)
-    val merged = rows.map { case (k, v) =>
-      k -> math.min(old.getOrElse(k, Double.MaxValue), v)
-    }
-    val body = merged.toSeq.sorted.map { case (k, v) =>
-      f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    java.nio.file.Files.write(path, (body + "\n").getBytes("UTF-8"))
-    // stamp this box's calibration on every row this run ratcheted down
-    val mergedCal = merged.keys.toSeq.sorted.flatMap { k =>
-      if (rows.get(k).exists(v => v < old.getOrElse(k, Double.MaxValue)))
-        Some(f""""$k":$hostCal%.3f""")
-      else cal.get(k).map(c => f""""$k":$c%.3f""")
-    }.mkString("{", ",", "}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("ann_ref_cal.json"),
-      (mergedCal + "\n").getBytes("UTF-8"))
-    (merged, flagged)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  def main(args: Array[String]): Unit = Harness.withSession() { spark =>
     val base = sys.env.getOrElse("SPARK_GRAFT_ANN_DIR", "/tmp/graft_ann")
-    // host-speed calibration (Bench's fixed CPU job): the downward-only
-    // latency ratchet keeps best-ever times across rounds on whatever
-    // box each round got — flags must be readable against the box speed
-    val hostCal = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(1L << 31).selectExpr("sum(xxhash64(id) % 1000000)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    // the downward-only latency ratchet keeps best-ever times across
+    // rounds on whatever box each round got — flags must be readable
+    // against the box speed
+    val hostCal = Harness.hostCal(spark)
+    val ratchet = Harness.Ratchet.read("ann_ref.json", "ann_ref_cal.json")
     // the restamp trigger compares against the committed bests scaled
     // to THIS box (r13 normalized protocol) — raw comparisons re-measure
     // host noise on slow boxes and under-flag on fast ones
-    val ratchet = scaleToHost(readRatchet(), readRatchetCal(), hostCal)
+    val onHost = ratchet.onHost(hostCal)
     val cells = Seq("x200k" -> 200000L, "x1m" -> 1000000L)
     val results = cells.map { case (cell, n) =>
-      cell -> runCell(spark, s"$base/$cell", n, ratchet = ratchet,
+      cell -> runCell(spark, s"$base/$cell", n, ratchet = onHost,
         keyPrefix = s"$cell/")
     }
     val (hard, hardCross) = runHardCell(spark, s"$base/hard_x1m", 1000000L,
-      ratchet = ratchet, keyPrefix = "hard_x1m/")
+      ratchet = onHost, keyPrefix = "hard_x1m/")
     def restampJson(p: Option[(Double, Double)]): String =
       p.map { case (a, b) => f""","restamp":[$a%.3f,$b%.3f]""" }.getOrElse("")
     val json = results.map { case (cell, rs) =>
@@ -560,12 +455,23 @@ object AnnGauntlet {
           f""""sec":${r.secMin}%.3f,"recall":${r.recall}%.4f}""")
         .getOrElse("null")
     }.mkString("{", ",", "}")
-    // downward-only 2x latency ratchet over every measured row
+    // Downward-only latency ratchet over every measured row: rows restamp
+    // in isolation at RatchetBand (1.3x) inside the runs, a row still
+    // past the band after its restamp FLAGS, and the written ratchet
+    // keeps ONLY keys this run produced — a superseded ladder setting
+    // (e.g. `ef=400` → `ef=800`) is pruned instead of accreting as a
+    // dead entry that can never flag.
     val ratchetRows =
       results.flatMap { case (cell, rs) =>
         rs.map { case (p, r) => s"$cell/$p" -> r.secMin } }.toMap ++
       hard.map(r => s"hard_x1m/${r.path}[${r.setting}]" -> r.secMin).toMap
-    val (_, flagged) = foldRatchet(ratchetRows, hostCal)
+    val flagged = ratchetRows.collect {
+      case (k, v) if ratchet.norm(k, v, hostCal).exists(_ > RatchetBand) =>
+        f"$k: $v%.3f s > ${RatchetBand}x host-scaled ratchet " +
+          f"${onHost(k)}%.3f s (raw ${ratchet.best(k)}%.3f)"
+    }.toSeq.sorted
+    ratchet.fold(ratchetRows.map { case (k, v) => k -> Some(v) }, hostCal)
+      .write("ann_ref.json", "ann_ref_cal.json")
     flagged.foreach(f => System.err.println(s"[gauntlet] RATCHET-FLAG $f"))
     val line = s"""{"metric":"ann_gauntlet","dim":$Dim,"k":$K,""" +
       f""""host_cal_sec":$hostCal%.3f,""" +
@@ -574,9 +480,7 @@ object AnnGauntlet {
       s""""advisor":$advisorJson,"note":"$note"},""" +
       s""""ratchet_flags":${flagged.map(f => s""""$f"""")
         .mkString("[", ",", "]")}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("ANN_GAUNTLET.json"),
-      (line + "\n").getBytes("UTF-8"))
+    Harness.writeLine("ANN_GAUNTLET.json", line)
     println(line)
-    spark.stop()
   }
 }

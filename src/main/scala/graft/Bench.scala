@@ -1,44 +1,18 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.withSession()(run)
+
+  private def run(spark: org.apache.spark.sql.SparkSession): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // a positive core count or nothing: it is stamped unquoted into the
-    // JSON result line, so a value like `*` must fail here, not there
-    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = cpusEnv.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpusEnv'"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
     sys.env.get("SPARK_GRAFT_STREAM_PARTS").foreach(p =>
       spark.conf.set("spark.graft.stream.shufflePartitions", p))
     // JVM/codegen warmup on the smallest SF so the first timed query isn't
     // charged for session + whole-stage-codegen compilation.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // Host-speed calibration: a fixed CPU-bound job (hash-sum over 2^31
-    // longs, one stage, no I/O) timed min-of-3 AFTER warmup. Rounds run on
-    // whatever box the driver got — per-query ratios against the committed
-    // best-known ref conflate code with host speed unless the artifact
-    // carries a normalizer. (The r11 A/B re-measured the r10 BINARY 2.03x
-    // slow in the same window; this constant makes that check automatic.)
-    val hostCal = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      // modulo keeps the ANSI-mode sum far from Long overflow
-      spark.range(1L << 31).selectExpr("sum(xxhash64(id) % 1000000)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    // after warmup, so session start and JIT compilation stay out of it
+    val hostCal = Harness.hostCal(spark)
+    val selected = Harness.selected
     // Compaction-time index build, untimed: the reference builds ANN
     // indexes in the compactor and serves queries from them — the timed
     // vs_ann_* numbers below measure the serving path (route + probe), not
@@ -82,27 +56,18 @@ object Bench {
          if selected.contains(n)) {
       try { selected(n)(spark, sfDir).count() } catch { case _: Throwable => }
     }
-    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      // Queries are independent: drop cached storage from the previous
-      // query so 60+ queries in one JVM don't accumulate into memory
-      // pressure that taxes later queries.
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      System.err.println(s"[bench] start $name")
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] done  $name $dt%.2f s")
-      dt
-    }
-    val firstPass = selected.map { case (name, fn) => name -> timeOne(name, fn) }
+    def minOfRuns(name: String, n: Int): Option[Double] =
+      Harness.timed(spark, name, n)(selected(name)(spark, sfDir).count()).map(_.min)
+    val firstPass = selected.map { case (name, _) => name -> minOfRuns(name, 1) }
     // The host exhibits bursty multi-second I/O stalls that land on random
     // queries (observed 10-60x single-run inflation with flat GC and idle
     // CPU). Re-measure only the outliers and keep the min — min-of-N
     // measures the code, not the stall lottery; bounded to the slow tail.
     val results = firstPass.map { case (name, t1) =>
-      if (t1 > 1.5) name -> math.min(t1, timeOne(name, selected(name)))
-      else name -> t1
+      name -> t1.flatMap(t =>
+        if (t > 1.5) minOfRuns(name, 1).map(math.min(t, _)) else Some(t))
     }
+    val suite = results.collect { case (n, Some(t)) => n -> t }
     // Stall-proofing against the previous round: min-of-2 back-to-back
     // runs can BOTH land inside one multi-second stall burst, so a query
     // that still sits >1.5x above its last-round artifact value
@@ -113,53 +78,35 @@ object Bench {
     // up as isolated ≈ suite, a stall as isolated << suite.
     // One reference file per scale factor — a local full run at sf0.01
     // can never poison the driver's sf0.1 comparison.
-    val refPath = java.nio.file.Paths.get(
-      s"bench_ref_${new java.io.File(sfDir).getName}.json")
-    def readFlatDict(p: java.nio.file.Path): Map[String, Double] =
-      if (java.nio.file.Files.exists(p))
-        """"([A-Za-z0-9_]+)":([0-9.]+)""".r
-          .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      else Map.empty
-    val ref: Map[String, Double] = readFlatDict(refPath)
-    // Host calibration sidecar: for each ratcheted row, the host_cal_sec
-    // of the run that SET its current best-ever value — so ratios compare
-    // like with like. Rows with no stamp yet (set before the sidecar
-    // existed) default to the 0.33-0.45 s class the committed bests came
-    // from (r11/r12 calibrations; the r11 same-window binary A/B pinned
-    // those windows) — midpoint 0.40. Each future ratchet-down replaces
-    // the seed with a measured value.
-    val calPath = java.nio.file.Paths.get(
-      s"bench_ref_cal_${new java.io.File(sfDir).getName}.json")
-    val SeedCal = 0.40
-    val refCal: Map[String, Double] = readFlatDict(calPath)
-    // Normalized ratio: (this run / committed best) corrected by how much
-    // slower/faster THIS box is than the box that set the best. Flagging
-    // on raw ratios re-measured 99 rows of pure host noise in r12; the
-    // normalized band measures the code.
+    val sfName = new java.io.File(sfDir).getName
+    val (refPath, calPath) = (s"bench_ref_$sfName.json", s"bench_ref_cal_$sfName.json")
+    val ratchet = Harness.Ratchet.read(refPath, calPath)
     def normRatio(n: String, v: Double): Double =
-      ref.get(n).map(r =>
-        (v / r) * (refCal.getOrElse(n, SeedCal) / hostCal)).getOrElse(1.0)
-    val flagged = results.keys.filter { n =>
+      ratchet.norm(n, v, hostCal).getOrElse(1.0)
+    val flagged = suite.keys.filter { n =>
       // either a material slowdown (>1.3x normalized and >0.3s raw) or
       // ANY >2x normalized ratio — sub-second rows sit under the
       // absolute guard yet a 2x+ ratio on them still reads as a
       // regression in the artifact, so they get the isolated pass too
       // (costs <1s each). The 1.3x band (was 1.5x) exists because a
       // 1.33x drift on st_session_window once shipped un-re-measured
-      // and read as an unexplained regression.
-      ref.get(n).exists(r =>
-        (normRatio(n, results(n)) > 1.3 && results(n) - r > 0.3) ||
-          normRatio(n, results(n)) > 2)
+      // and read as an unexplained regression. Flagging on raw ratios
+      // re-measured 99 rows of pure host noise in r12; the normalized
+      // band measures the code.
+      ratchet.best.get(n).exists(r =>
+        (normRatio(n, suite(n)) > 1.3 && suite(n) - r > 0.3) ||
+          normRatio(n, suite(n)) > 2)
     }.toSeq.sorted
-    val isolatedRuns = flagged.map { n =>
-      // three isolated runs: two can both land inside one stall burst;
-      // the min over three measures the code
-      n -> Seq.fill(3)(timeOne(n, selected(n))).min
-    }.toMap
-    val finalResults = results.map { case (n, t) =>
-      n -> math.min(t, isolatedRuns.getOrElse(n, t))
+    // three isolated runs: two can both land inside one stall burst;
+    // the min over three measures the code
+    val isolated = flagged.map(n => n -> minOfRuns(n, 3)).toMap
+    val official = results.map { case (n, r) =>
+      n -> r.flatMap(t => isolated.getOrElse(n, Some(t)).map(math.min(t, _)))
     }
+    val timings = official.collect { case (n, Some(t)) => n -> t }
+    val failed = official.collect { case (n, None) => n }.toSeq.sorted
+    // (query, suite, isolated) for every flagged row that never failed
+    val restamps = flagged.flatMap(n => isolated(n).map(i => (n, suite(n), i)))
     // Emission contract: the driver keeps only the last ~2000 chars of
     // combined output and json-parses a line from that tail. A flat
     // 232-query dict (or the old centisecond array) overflows that
@@ -169,48 +116,37 @@ object Bench {
     // FULL restamp dict (every flagged row's suite/isolated pair), and
     // the host calibration. The complete 3-decimal per-query dict is
     // written to BENCH_FULL.json in the repo root for direct reading.
-    val sorted = finalResults.toSeq.sortBy(_._1)
+    // Failed queries enter no total, dict or ratchet; both lines list
+    // them under "failed".
+    val sorted = timings.toSeq.sortBy(_._1)
     val total = sorted.map(_._2).sum
+    val failedJson = Harness.failedJson(failed)
     val fullDict = sorted.map { case (k, v) => f""""$k":$v%.3f""" }
       .mkString("{", ",", "}")
-    val restamped = flagged.map { n =>
-      f""""$n":{"suite":${results(n)}%.3f,"isolated":${isolatedRuns(n)}%.3f,""" +
-      f""""ref":${ref(n)}%.3f,"ref_cal":${refCal.getOrElse(n, SeedCal)}%.3f,""" +
-      f""""norm":${normRatio(n, finalResults(n))}%.2f}"""
+    val restamped = restamps.map { case (n, s, i) =>
+      f""""$n":{"suite":$s%.3f,"isolated":$i%.3f,""" +
+      f""""ref":${ratchet.best(n)}%.3f,""" +
+      f""""ref_cal":${ratchet.cal.getOrElse(n, Harness.Ratchet.SeedCal)}%.3f,""" +
+      f""""norm":${normRatio(n, timings(n))}%.2f}"""
     }.mkString("{", ",", "}")
     // "cpus" is stamped so the driver's scaling probe can see the core
     // count the run honored (r13's suspect_cpus_ignored flag fired false
     // because the artifact did not carry it) — additions-only
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","host_cal_sec":$hostCal%.3f,"cpus":$cpus,"queries":$fullDict,"restamped":$restamped,"sf":"$sfDir"}"""
-    // only full runs own the committed artifact — a SPARK_GRAFT_ONLY
-    // subset must not clobber the 160+-query dict with its handful
-    if (only.isEmpty) {
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_FULL.json"),
-        (fullLine + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => }
-    }
-    // Full (un-subsetted) runs refresh this SF's comparison baseline as a
-    // downward ratchet — per-query min of the old reference and this
-    // run's official value. The reference thus tracks "the code's best
-    // known time": one globally-stalled run can't relax it, and a REAL
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","host_cal_sec":$hostCal%.3f,"cpus":$cpus,"queries":$fullDict,"restamped":$restamped$failedJson,"sf":"$sfDir"}"""
+    // only full runs own the committed artifacts — a SPARK_GRAFT_ONLY
+    // subset must not clobber the 160+-query dict with its handful.
+    // Full runs refresh this SF's comparison baseline as a downward
+    // ratchet — per-query min of the old reference and this run's
+    // official value. The reference thus tracks "the code's best known
+    // time": one globally-stalled run can't relax it, and a REAL
     // regression keeps getting flagged (and its {suite, isolated, ref}
     // triple recorded) until it's fixed or accepted.
-    if (only.isEmpty) {
-      val merged = finalResults.toSeq.sortBy(_._1).map { case (k, v) =>
-        f""""$k":${math.min(v, ref.getOrElse(k, v))}%.3f"""
-      }.mkString("{", ",", "}")
-      try java.nio.file.Files.write(refPath, (merged + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => }
-      // stamp THIS run's calibration onto every row it ratcheted down —
-      // future flags then compare that row against the box that set it
-      val mergedCal = finalResults.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-        if (v < ref.getOrElse(k, Double.MaxValue)) Some(f""""$k":$hostCal%.3f""")
-        else refCal.get(k).map(c => f""""$k":$c%.3f""")
-      }.mkString("{", ",", "}")
-      try java.nio.file.Files.write(calPath, (mergedCal + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => }
+    if (Harness.only.isEmpty) {
+      try {
+        Harness.writeLine("BENCH_FULL.json", fullLine)
+        ratchet.fold(official, hostCal).write(refPath, calPath)
+      } catch { case _: Throwable => }
     }
     val slowest = sorted.sortBy(-_._2).take(12)
       .map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
@@ -218,22 +154,17 @@ object Bench {
       "norm-ratio]} per flagged row (>1.3x NORMALIZED vs committed best; " +
       "norm=(v/ref)*(ref_cal/host_cal), ref_cal from bench_ref_cal, " +
       "seed 0.40); official=min over runs; full dict in BENCH_FULL.json"
-    // the driver's artifact is THIS line — it must stay under the ~2000
-    // char tail the driver parses, so: slowest12 + the FULL restamp dict
-    // (flagged rows only, two decimals) + the calibration, and the
-    // complete dict lives in BENCH_FULL.json
     // worst-ratio-first so if a pathological round flags half the suite,
     // the capped dict still carries every row a reader would ask about
     // (the uncapped dict is in BENCH_FULL.json regardless)
-    val restampCompact = flagged
-      .sortBy(n => -normRatio(n, finalResults(n)))
-      .take(30).sorted.map { n =>
-        f""""$n":[${results(n)}%.2f,${isolatedRuns(n)}%.2f,${normRatio(n, finalResults(n))}%.2f]"""
+    val restampCompact = restamps
+      .sortBy { case (n, _, _) => -normRatio(n, timings(n)) }
+      .take(30).sortBy(_._1).map { case (n, s, i) =>
+        f""""$n":[$s%.2f,$i%.2f,${normRatio(n, timings(n))}%.2f]"""
       }.mkString("{", ",", "}")
     System.out.flush()
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","host_cal_sec":$hostCal%.3f,"cpus":$cpus,"qn":${sorted.size},"queries":$slowest,"restamp":$restampCompact,"note":"$note","sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","host_cal_sec":$hostCal%.3f,"cpus":$cpus,"qn":${sorted.size},"queries":$slowest,"restamp":$restampCompact$failedJson,"note":"$note","sf":"$sfDir"}""")
     System.out.flush()
-    spark.stop()
   }
 }

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: formatted physical plans for the headline queries,
   * with a one-paragraph audit each — the plan-shape evidence the specs
   * assert (PlanSpec/FtsSpec/CompactionMergeSpec) in human-readable form.
-  * Run: `sbt "runMain graft.PlanDump"` (regenerates the committed file).
+  * Run: `sbt "runMain graft.PlanDump"` (regenerates the committed file);
+  * `sbt "runMain graft.PlanDump plans/r15"` dumps a round's plans instead.
   */
 object PlanDump {
 
@@ -251,14 +250,37 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 8 cores: plan text carries partition counts, so a
+    // host-dependent count would make the output differ per host
+    Harness.withSession(cores = 8) { spark =>
+      def plan(name: String): String =
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      args.headOption match {
+        case Some(dir) => dumpRound(dir, plan)
+        case None => writePlansMd(sfDir, plan)
+      }
+    }
+  }
+
+  /** Round evidence: the full formatted plan of each `SPARK_GRAFT_ONLY`
+    * query to `<dir>/<query>_<SPARK_GRAFT_PLAN_TAG>.txt` (default tag
+    * `after`; tag the baseline checkout's dump `before`).
+    */
+  private def dumpRound(dir: String, plan: String => String): Unit = {
+    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "after")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    Harness.only.getOrElse(throw new IllegalArgumentException(
+      "a round dump needs the queries in SPARK_GRAFT_ONLY")).foreach { n =>
+      val out = s"$dir/${n}_$tag.txt"
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(out), plan(n).getBytes("UTF-8"))
+        println(s"[plandump] wrote $out")
+      } catch { case e: Throwable => println(s"[plandump] $n failed: ${e.getMessage}") }
+    }
+  }
+
+  private def writePlansMd(sfDir: String, plan: String => String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan evidence for the headline queries\n\n")
     sb.append(s"Generated by `graft.PlanDump` against `$sfDir` " +
@@ -266,13 +288,10 @@ object PlanDump {
       "The same properties are asserted programmatically in PlanSpec / " +
       "FtsSpec / CompactionMergeSpec / StorageSpec.\n")
     audited.foreach { case (name, audit) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n$audit\n\n```\n")
       // the node tree (before the per-node "(1) Scan ..." detail section)
       // carries the shape; of the details, only scan evidence matters
-      val lines = plan.linesIterator.toVector
+      val lines = plan(name).linesIterator.toVector
       val detailStart = lines.indexWhere(_.matches("^\\(\\d+\\) .*"))
       val (tree, details) =
         if (detailStart < 0) (lines, Vector.empty[String])
@@ -287,6 +306,5 @@ object PlanDump {
     java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
       sb.toString.getBytes("UTF-8"))
     println(s"wrote PLANS.md (${audited.size} queries)")
-    spark.stop()
   }
 }

@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): for each selected
   * query, runs it via the noop sink and reports wall seconds, Spark job
   * count, stage count, task count, and shuffle read/write bytes from a
   * SparkListener — the empirical side of "measure first". Subset with
-  * SPARK_GRAFT_ONLY; same env contract as Bench. Output: one TSV line per
-  * query on stdout.
+  * SPARK_GRAFT_ONLY; the env contract is [[Harness]]'s. Output: one TSV
+  * line per query on stdout.
   */
 object Profile {
 
@@ -51,48 +50,28 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val counts = new Counts
-    spark.sparkContext.addSparkListener(counts)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
-    println("query\tsec\tjobs\tstages\ttasks\tshuf_read_mb\tshuf_write_mb")
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      spark.catalog.clearCache()
-      // min-of-N wall time; counters from the LAST run (warm caches =
-      // steady-state job shape, and the host stall lottery doesn't
-      // change counters)
-      var best = Double.MaxValue
-      (1 to runs).foreach { _ =>
-        spark.catalog.clearCache()
-        counts.reset()
-        val t0 = System.nanoTime()
+    Harness.withSession() { spark =>
+      val counts = new Counts
+      spark.sparkContext.addSparkListener(counts)
+      try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+      val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
+      println("query\tsec\tjobs\tstages\ttasks\tshuf_read_mb\tshuf_write_mb")
+      Harness.selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        // min-of-N wall time; counters from the LAST run (warm caches =
+        // steady-state job shape, and the host stall lottery doesn't
+        // change counters). A query that throws on any run prints
+        // `failed` in place of its time.
         spark.sparkContext.setJobDescription(s"profile:$name")
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[profile] $name failed: ${e.getMessage}")
-        }
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
+        val sec = Harness.timed(spark, name, runs) {
+          counts.reset()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }.fold("failed")(ts => f"${ts.min}%.3f")
+        println(f"$name\t$sec\t${counts.jobs}\t${counts.stages}\t" +
+          f"${counts.tasks}\t${counts.shuffleRead / 1e6}%.1f\t" +
+          f"${counts.shuffleWrite / 1e6}%.1f")
+        if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
+          counts.jobLines.foreach(println)
       }
-      println(f"$name\t$best%.3f\t${counts.jobs}\t${counts.stages}\t" +
-        f"${counts.tasks}\t${counts.shuffleRead / 1e6}%.1f\t" +
-        f"${counts.shuffleWrite / 1e6}%.1f")
-      if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-        counts.jobLines.foreach(println)
     }
-    spark.stop()
   }
 }

@@ -122,16 +122,6 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     // Diagnosis subsetting: SPARK_GRAFT_PROBE_ONLY=dd_substring_dedup
     // SPARK_GRAFT_PROBE_SCALES=100 SPARK_GRAFT_PROBE_RUNS=5 re-measures
@@ -143,47 +133,43 @@ object ScaleProbe {
       .map(_.split(",").map(_.toInt).toSet)
     val nRuns = sys.env.get("SPARK_GRAFT_PROBE_RUNS").map(_.toInt).getOrElse(2)
     val subset = onlyProbes.isDefined || onlyScales.isDefined
-    val results = Scales.filter(m => onlyScales.forall(_(m))).map { m =>
-      val dir = s"$base/x$m"
-      stage(spark, srcDir, dir, m)
-      val times = Probes.filter(n => onlyProbes.forall(_(n))).map { name =>
-        val fn = SparkEntry.queries(name)
-        // materialize EVERY column through the noop sink — a bare
-        // count() lets Catalyst prune computed columns and can erase
-        // the operator under test (a window with no referenced outputs
-        // collapses entirely)
-        def run(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.mode("overwrite").format("noop").save()
-        // warm pass builds served indexes (compactor work, untimed —
-        // same contract as Bench) and JIT-warms the plan
-        try run(fn(spark, dir)) catch { case _: Throwable => }
-        def once(): Double = {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          try run(fn(spark, dir)) catch { case _: Throwable => return -1.0 }
-          (System.nanoTime() - t0) / 1e9
+    val results = Harness.withSession() { spark =>
+      Scales.filter(m => onlyScales.forall(_(m))).map { m =>
+        val dir = s"$base/x$m"
+        stage(spark, srcDir, dir, m)
+        val times = Probes.filter(n => onlyProbes.forall(_(n))).map { name =>
+          val fn = SparkEntry.queries(name)
+          // materialize EVERY column through the noop sink — a bare
+          // count() lets Catalyst prune computed columns and can erase
+          // the operator under test (a window with no referenced outputs
+          // collapses entirely)
+          def run(df: DataFrame): Unit =
+            df.write.mode("overwrite").format("noop").save()
+          // warm pass builds served indexes (compactor work, untimed —
+          // same contract as Bench) and JIT-warms the plan
+          try run(fn(spark, dir)) catch { case _: Throwable => }
+          // each cell is [min, max] of >= 2 runs: the big-output x100
+          // cells swing with memory pressure, and a single number would
+          // let a future regression hide inside the noise band. A probe
+          // that throws on any run is failed: no bound at all.
+          val runs = Harness.timed(spark, name, nRuns)(run(fn(spark, dir)))
+          System.err.println(f"[scale] x$m%-4d $name%-20s " +
+            runs.fold("failed")(rs => f"${rs.min}%.2f-${rs.max}%.2f s"))
+          name -> runs.map(rs => (rs.min, rs.max))
         }
-        // each cell is [min, max] of >= 2 runs: the big-output x100 cells
-        // swing with memory pressure, and a single number would let a
-        // future regression hide inside the noise band
-        val runs = Seq.fill(nRuns)(once())
-        val (lo, hi) = (runs.min, runs.max)
-        System.err.println(f"[scale] x$m%-4d $name%-20s $lo%.2f-$hi%.2f s " +
-          runs.map(r => f"$r%.1f").mkString("(", ",", ")"))
-        name -> (lo, hi)
+        m -> times
       }
-      m -> times
     }
     val json = results.map { case (m, ts) =>
-      s""""x$m":${ts.map { case (n, (lo, hi)) =>
+      s""""x$m":${ts.collect { case (n, Some((lo, hi))) =>
           f""""$n":[$lo%.3f,$hi%.3f]""" }
         .mkString("{", ",", "}")}"""
     }.mkString("{", ",", "}")
-    val line = s"""{"metric":"scale_probe","src":"$srcDir","scales":$json}"""
-    if (!subset)
-      java.nio.file.Files.write(java.nio.file.Paths.get("SCALE_PROBE.json"),
-        (line + "\n").getBytes("UTF-8"))
+    val failed = results.flatMap { case (m, ts) =>
+      ts.collect { case (n, None) => s"x$m/$n" } }
+    val line = s"""{"metric":"scale_probe","src":"$srcDir","scales":$json""" +
+      Harness.failedJson(failed) + "}"
+    if (!subset) Harness.writeLine("SCALE_PROBE.json", line)
     println(line)
-    spark.stop()
   }
 }

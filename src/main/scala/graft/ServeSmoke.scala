@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   * must be clean 422s (the reference's quota error), never a hang, a
   * 500, or a connection error.
   *
-  * The p95 ratchet normalizes by host calibration like Bench's: the
-  * committed best carries the `host_cal_sec` of the run that set it,
-  * and the flag fires on `(p95/ref)*(ref_cal/host_cal) > 1.3` — raw
-  * ratios conflate code with box speed.
+  * The p95 ratchet is [[Harness.Ratchet]], like Bench's: the committed
+  * best (`serve_ref.json`) carries in `serve_ref_cal.json` the
+  * `host_cal_sec` of the run that set it, and the flag fires on
+  * `(p95/ref)*(ref_cal/host_cal) > 1.3` — raw ratios conflate code with
+  * box speed.
   *
   * Run: `sbt "runMain graft.ServeSmoke"` → one JSON line +
   * SERVE_SMOKE.json. Indexes persist under the bench index root and
@@ -39,38 +40,37 @@ object ServeSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val violation = Harness.withSession() { spark =>
+      // isolate the concurrency quota: everything else unlimited so record
+      // shape caps never interfere with the corpus load
+      val limits = graft.api.Quotas.Unlimited.copy(maxConcurrentReads = Threads)
+      val root = graft.sources.CollectionStore.indexRoot(sfDir) + "/serve_smoke"
+      val client = new graft.api.Client(spark, root, limits = limits)
+      val coll = client.getOrCreateCollection("emb",
+        graft.sources.Catalog.Schema(vectorIndex = Some(
+          graft.sources.Catalog.SpannIndexConfig(space = "cosine",
+            searchNprobe = 8, nReplica = 2))))
+      if (coll.count() == 0L) {
+        coll.add(Tables.embeddings(spark, sfDir).select(
+          concat(lit("v"), col("vec_id")).as("id"),
+          lit("e").as("document"), col("embedding")))
+        coll.persist()
+      }
 
-    // isolate the concurrency quota: everything else unlimited so record
-    // shape caps never interfere with the corpus load
-    val limits = graft.api.Quotas.Unlimited.copy(maxConcurrentReads = Threads)
-    val root = graft.sources.CollectionStore.indexRoot(sfDir) + "/serve_smoke"
-    val client = new graft.api.Client(spark, root, limits = limits)
-    val coll = client.getOrCreateCollection("emb",
-      graft.sources.Catalog.Schema(vectorIndex = Some(
-        graft.sources.Catalog.SpannIndexConfig(space = "cosine",
-          searchNprobe = 8, nReplica = 2))))
-    if (coll.count() == 0L) {
-      coll.add(Tables.embeddings(spark, sfDir).select(
-        concat(lit("v"), col("vec_id")).as("id"),
-        lit("e").as("document"), col("embedding")))
-      coll.persist()
+      // the measured surface: the HTTP face over the same catalog root,
+      // 2x-overload-wide pool so the admission gate (not the socket
+      // accept queue) is what turns requests away
+      val face = new graft.api.HttpFace(spark, root, limits,
+        poolSize = Threads * 2 + 4)
+      val port = face.start()
+      try measure(spark, sfDir, port) finally face.stop()
     }
+    // exit 1 on an admission violation, after the session has stopped
+    if (violation) sys.exit(1)
+  }
 
-    // the measured surface: the HTTP face over the same catalog root,
-    // 2x-overload-wide pool so the admission gate (not the socket
-    // accept queue) is what turns requests away
-    val face = new graft.api.HttpFace(spark, root, limits,
-      poolSize = Threads * 2 + 4)
-    val port = face.start()
+  /** Both phases; true when the admission contract was violated. */
+  private def measure(spark: SparkSession, sfDir: String, port: Int): Boolean = {
     val url = java.net.URI.create(
       s"http://127.0.0.1:$port/api/v2/tenants/default_tenant/databases/" +
         s"default_database/collections/emb/query")
@@ -104,14 +104,9 @@ object ServeSmoke {
     // warm untimed: lazy IVF build + file listings + codegen, through
     // the wire so the face's own path is warm too
     require(post(batchJson(0, 0)) == 200, "warmup query failed over HTTP")
-    // host-speed calibration (Bench's fixed CPU job) — the p95 ratchet
-    // keeps the best-ever window's value; a flag must be readable
-    // against the box this round ran on
-    val hostCal = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(1L << 31).selectExpr("sum(xxhash64(id) % 1000000)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    // the p95 ratchet keeps the best-ever window's value; a flag must be
+    // readable against the box this round ran on
+    val hostCal = Harness.hostCal(spark)
 
     def phase(nThreads: Int): (Seq[Double], Int, Int, Double) = {
       val rejected = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -158,36 +153,25 @@ object ServeSmoke {
     // separates host stall from real regression), the kept stats are the
     // faster pass's, and the flag fires only if the KEPT p95 still
     // exceeds the normalized band
-    val refPath = java.nio.file.Paths.get("serve_ref.json")
-    val refTxt =
-      if (java.nio.file.Files.exists(refPath))
-        new String(java.nio.file.Files.readAllBytes(refPath), "UTF-8")
-      else ""
-    def field(k: String): Option[Double] =
-      (s""""$k":([0-9.]+)""").r.findFirstMatchIn(refTxt).map(_.group(1).toDouble)
-    val refP95: Option[Double] = field("p95_sec")
-    // pre-sidecar refs (and the pre-HTTP direct-path ref) carry no cal:
-    // seed with the fast-window class the committed bests came from
-    val refCal: Double = field("cal").getOrElse(0.40)
+    val ratchet = Harness.Ratchet.read("serve_ref.json", "serve_ref_cal.json")
     def norm(p: Double): Double =
-      refP95.map(r => (p / r) * (refCal / hostCal)).getOrElse(1.0)
+      ratchet.norm("p95_sec", p, hostCal).getOrElse(1.0)
     var restamp: Option[(Double, Double)] = None
-    if (refP95.isDefined && norm(pct(ls, 0.95)) > 1.3) {
+    if (norm(pct(ls, 0.95)) > 1.3) {
       Thread.sleep(2000)
       val (ls1, rej1, err1, wall1) = phase(Threads)
       restamp = Some((pct(ls, 0.95), pct(ls1, 0.95)))
       // admission violations from EITHER pass count; latency keeps the min
       rejectedAtCap += rej1; errAtCap += err1
-      if (pct(ls1, 0.95) < pct(ls, 0.95)) { ls = ls1; wall = wall1 }
+      if (ls1.nonEmpty && pct(ls1, 0.95) < pct(ls, 0.95)) { ls = ls1; wall = wall1 }
     }
     val p95 = pct(ls, 0.95)
-    val ratchetFlag = refP95.isDefined && norm(p95) > 1.3
-    val newRef = math.min(refP95.getOrElse(Double.MaxValue), p95)
-    // stamp this box's calibration when this run set the ratchet
-    val newCal = if (p95 < refP95.getOrElse(Double.MaxValue)) hostCal else refCal
-    java.nio.file.Files.write(refPath,
-      f"""{"p95_sec":$newRef%.3f,"cal":$newCal%.3f,"http":true}%n"""
-        .getBytes("UTF-8"))
+    val ratchetFlag = norm(p95) > 1.3
+    // a phase with no admitted request has no p95: it keeps the ratchet
+    val folded = ratchet.fold(Map("p95_sec" -> Option.when(ls.nonEmpty)(p95)), hostCal)
+    folded.write("serve_ref.json", "serve_ref_cal.json")
+    val newRef = folded.best.getOrElse("p95_sec", -1.0)
+    val newCal = folded.cal.getOrElse("p95_sec", Harness.Ratchet.SeedCal)
     // phase 2 — OVER the cap (2x threads): the gate may turn requests
     // away; every turn-away must be a clean 422
     val (ls2, rejectedOver, errOver, _) = phase(Threads * 2)
@@ -218,11 +202,8 @@ object ServeSmoke {
         f""""p95_restamp":[$a%.3f,$b%.3f],""" }.getOrElse("") +
       f""""p95_ratchet_flag":$ratchetFlag,""" +
       f""""admission_violation":$violation}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("SERVE_SMOKE.json"),
-      (line + "\n").getBytes("UTF-8"))
+    Harness.writeLine("SERVE_SMOKE.json", line)
     println(line)
-    face.stop()
-    if (violation) sys.exit(1)
-    spark.stop()
+    violation
   }
 }

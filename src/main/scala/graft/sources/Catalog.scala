@@ -427,42 +427,32 @@ object Catalog {
     atomicWrite(f, json.getBytes("UTF-8"), createNew)
   }
 
-  /** Descriptor writes readers can never see torn: create-new keeps the
-    * exclusive-create race contract (the sysdb unique constraint), but
-    * the bytes land via a temp sibling + ATOMIC_MOVE so a concurrent
-    * `getCollection` reads either the old or the new complete JSON —
-    * a TRUNCATE_EXISTING overwrite has a window where the file is
-    * empty/partial and the parse would throw on a perfectly healthy
-    * catalog (same bug class as the WAL's torn marker publish).
+  /** Descriptor writes readers can never see torn: create-new is the
+    * conditional store's create-with-content CAS
+    * ([[LocalFsConditionalStore.putIfAbsent]]), keeping the
+    * exclusive-create race contract (the sysdb unique constraint) — the
+    * loser gets `FileAlreadyExistsException`. An overwrite lands via a
+    * temp sibling + ATOMIC_MOVE so a concurrent `getCollection` reads
+    * either the old or the new complete JSON — a TRUNCATE_EXISTING
+    * overwrite has a window where the file is empty/partial and the parse
+    * would throw on a perfectly healthy catalog (same bug class as the
+    * WAL's torn marker publish).
     */
   private def atomicWrite(f: java.nio.file.Path, bytes: Array[Byte],
-      createNew: Boolean): Unit = {
-    val tmp = f.resolveSibling(
-      s".${f.getFileName}.${java.util.UUID.randomUUID}.tmp")
-    java.nio.file.Files.write(tmp, bytes,
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    try {
-      if (createNew) {
-        // atomic create-new with full content: link(2) — EEXIST = lost
-        try java.nio.file.Files.createLink(f, tmp)
-        catch {
-          case e: java.nio.file.FileAlreadyExistsException => throw e
-          case _: UnsupportedOperationException |
-               _: java.nio.file.FileSystemException
-              if !java.nio.file.Files.exists(f) =>
-            // no hard links on this filesystem (SMB/FAT/FUSE mounts):
-            // degrade to the plain exclusive create these mounts always
-            // used, accepting its narrow torn-read window
-            java.nio.file.Files.write(f, bytes,
-              java.nio.file.StandardOpenOption.CREATE_NEW)
-        }
-      } else {
-        java.nio.file.Files.move(tmp, f,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
+      createNew: Boolean): Unit =
+    if (createNew) {
+      if (!LocalFsConditionalStore.putIfAbsent(f.toString, bytes))
+        throw new java.nio.file.FileAlreadyExistsException(f.toString)
+    } else {
+      val tmp = f.resolveSibling(
+        s".${f.getFileName}.${java.util.UUID.randomUUID}.tmp")
+      java.nio.file.Files.write(tmp, bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      try java.nio.file.Files.move(tmp, f,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      finally java.nio.file.Files.deleteIfExists(tmp)
+    }
 
   /** The reference's `collection.modify(name=…, metadata=…)`
     * (`service_based_frontend.rs` update_collection route): rename and/or
