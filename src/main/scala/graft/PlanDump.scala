@@ -73,7 +73,7 @@ object PlanDump {
       ("IndexAndWal served read (the reference's default read level): the " +
         "index leg routes + probes the persisted IVF partitions while the " +
         "KnnLog leg brute-forces ONLY the un-compacted tail — " +
-        "Writer.stateOf semi-joins segment and pending ops to the " +
+        "ReaderState.stateOf semi-joins segment and tail ops to the " +
         "touched-id set BEFORE the fold, so no full-state materialization " +
         "appears anywhere in the plan; legs merge by id with a per-query " +
         "window bounded by k. Tail ids shadow the index leg (anti-join) " +

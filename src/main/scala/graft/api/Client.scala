@@ -104,6 +104,7 @@ final class Client(spark: SparkSession, root: String,
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
       root, "_sysdb", tenant, database, s"$name.json"))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ref.dataRoot))
+    ReaderStates.retire(_ == ref.dataRoot)
   }
 
   /** Wipe the entire deployment under `root` — every tenant, database,
@@ -119,6 +120,7 @@ final class Client(spark: SparkSession, root: String,
       "reset() is disabled by default — pass allowReset=true " +
         "(the reference's ALLOW_RESET gate)")
     org.apache.commons.io.FileUtils.cleanDirectory(new java.io.File(root))
+    ReaderStates.retire(_.startsWith(s"$root/"))
     Catalog.createTenant(root, tenant)
     Catalog.createDatabase(root, tenant, database)
     true
@@ -547,81 +549,96 @@ final class CollectionHandle(spark: SparkSession,
     }
   }
 
-  /** Nearest ancestor (self first, then the fork chain) with a persisted
-    * segment — copy-on-write: a fork reads its source's immutable files
-    * until its own first compaction.
+  // The handle's references on the reader states it reads — the shared
+  // committed state and, with local writes pending, its private layer.
+  // Released by close(), or after a handle never closed is collected.
+  private val lease = new CollectionHandle.Lease(ReaderStates.open(spark, ref))
+  private val cleanable = ReaderStates.register(this, lease)
+
+  /** Release this handle's reader states. A state shared with other
+    * handles stays until the last of them lets go; this handle's reads
+    * fail afterwards.
     */
-  private def segmentDataRoot(r: Catalog.CollectionRef,
-      hops: Int = 16): Option[String] = {
-    if (CollectionStore.hasRecords(r.dataRoot)) Some(r.dataRoot)
-    else r.forkedFrom match {
-      case Some(src) if hops > 0 => segmentDataRoot(
-        Catalog.getCollection(r.root, r.tenant, r.database, src), hops - 1)
-      case _ => None
-    }
-  }
+  def close(): Unit = cleanable.clean()
 
   /** Segment version this handle opened against — the OCC expectation
     * its next compaction commits with (`conditional_transaction.rs`).
+    * Zero while the collection reads no segment of its own (never
+    * compacted, or a fork still reading its source's).
     */
-  private var baseVersion: Long = CollectionStore.currentVersion(ref.dataRoot)
+  private var baseVersion: Long = lease.committed.segment
+    .filter(_.root == ref.dataRoot).map(_.version).getOrElse(0L)
 
-  private val writer: Writer = segmentDataRoot(ref) match {
-    case Some(dataRoot) =>
-      // the persisted segment is the SHREDDED serving schema; map it back
-      // to WAL-record shape for the materializer. The typed maps
-      // tag-encode into the wire string map (TypedMeta) so int/float/bool
-      // metadata — declared or not — survives the persist/reopen cycle.
-      val seg = TypedMeta.encodeArrays(TypedMeta.encodeSparse(
-          TypedMeta.encodeUri(TypedMeta.encode(
-          CollectionStore.loadRecords(spark, dataRoot)
-            .withColumnRenamed("meta_str", "meta")))))
-        .select(col("id"), col("document"), col("meta"),
-          col("embedding"), col("offset_id").as("first_offset")).as[Rec]
-      // _segmeta (written at compaction) makes the open job-free; a
-      // segment stored without it (raw writeCollection) pays one agg
-      val next = CollectionStore.readSegMeta(dataRoot).map(_._1 + 1)
-        .getOrElse {
-          seg.agg(max(col("first_offset"))).collect()(0) match {
-            case r if r.isNullAt(0) => 0L
-            case r => r.getLong(0) + 1
-          }
-        }
-      new Writer(spark, seg, next)
-    case None => new Writer(spark, spark.emptyDataset[Rec])
+  // this handle's not-yet-committed ops
+  private val writer: Writer = Writer.empty(spark)
+
+  private def committed: ReaderState = {
+    if (lease.closed)
+      throw new IllegalStateException(s"collection handle ${ref.name} is closed")
+    lease.committed
   }
 
-  /** Durable-log prefix this handle has folded into its view: starts at
-    * the mark the current segment recorded at compaction, advances as
+  /** Durable-log prefix this handle's committed state folds: starts at
+    * the mark the opened segment recorded at compaction, advances as
     * committed entries replay ([[refreshLog]]) or this handle's own
     * appends commit ([[commitLog]]). Always a CONTIGUOUS published
     * prefix — the only prefix a reader may consume (WalStore's read
     * contract).
     */
-  private var walSeen: Long =
-    WalStore.readMark(CollectionStore.recordsRoot(ref.dataRoot))
-  refreshLog() // replay entries the current segment does not cover
+  private def walSeen: Long = lease.synchronized(committed.head)
+
+  /** Switch to committed state `next` (acquired for this handle). */
+  private def moveTo(next: ReaderState): Unit = lease.synchronized {
+    val prev = committed
+    if (next eq prev) prev.release()
+    else {
+      lease.committed = next
+      lease.local.foreach(_.release())
+      lease.local = None
+      prev.release()
+    }
+  }
+
+  /** The state a read runs over, acquired for the caller: the committed
+    * state, or with local writes pending, this handle's private layer
+    * over it (built once per writer epoch).
+    */
+  private def acquireState(): ReaderState = lease.synchronized {
+    val c = committed
+    val st =
+      if (writer.pending.isEmpty) c
+      else lease.local.filter(_.epoch == writer.epoch).getOrElse {
+        lease.local.foreach(_.release())
+        val l = c.layer(writer.pending, writer.epoch)
+        lease.local = Some(l)
+        l
+      }
+    require(st.acquire(), "reading a retired state")
+    st
+  }
+
+  /** Run `f` over the current state, holding it until `f` returns. */
+  private def reading[T](f: ReaderState => T): T = {
+    val st = acquireState()
+    try f(st) finally st.release()
+  }
+
+  /** The state a read would run over now (tests). */
+  private[graft] def readerState: ReaderState = reading(identity)
 
   /** Fold committed log entries this handle has not seen (other writers'
-    * appends, or a crash-survived tail at open) into the writer's view,
-    * stopping at the first unpublished position.
+    * appends) into its committed state, stopping at the first
+    * unpublished position. The segment version stays the opened one.
     */
-  private def refreshLog(): Unit =
-    WalStore.publishedAfter(ref.dataRoot, walSeen).iterator
-      .map(n => n -> WalStore.entryMeta(ref.dataRoot, n))
-      // an existing-but-unparseable marker is a publish in flight on a
-      // store without atomic content visibility — STOP the prefix walk
-      // and retry next refresh. Advancing would mistake it for a void
-      // and skip ops this handle then never folds: a conditional commit
-      // reading that view validates a window missing them (lost update)
-      .takeWhile(_._2.isDefined)
-      .foreach { case (n, meta) =>
-        val maxOff = meta.get._2
-        if (maxOff >= 0) // count-0 marker = voided crashed append
-          writer.loadCommitted(
-            WalStore.readEntry(spark, ref.dataRoot, n), maxOff)
-        walSeen = n
-      }
+  private def refreshLog(): Unit = moveTo(ReaderStates.advance(committed))
+
+  /** Run a mutation of the writer: its offsets stay above the committed
+    * state's.
+    */
+  private def mutate[T](f: => T): T = {
+    writer.advanceTo(committed.nextOffset)
+    f
+  }
 
   /** Commit every pending write to the durable log — the reference's
     * wal3 append (`rust/wal3/README.md:1-17`: durable, linearizable,
@@ -664,11 +681,11 @@ final class CollectionHandle(spark: SparkSession,
               element_at(typedLit(rebase), col("log_offset")))
             .as[graft.operators.Materialize.LogOp]
           if (WalStore.appendAt(ref.dataRoot, n, rebased)) {
-            val maxOff = WalStore.entryMeta(ref.dataRoot, n).map(_._2)
-              .getOrElse(-1L)
-            writer.replaceCommitted(
-              WalStore.readEntry(spark, ref.dataRoot, n), maxOff, rebase)
-            walSeen = n
+            // the committed state now folds the entry from the durable
+            // copy, at its rebased offsets — exactly what a cold reopen
+            // replaying the log sees
+            writer.committed()
+            moveTo(ReaderStates.advance(committed, through = n))
             done = true
           } else {
             // lost the slot: enforce the deadline on EVERY retry — under
@@ -912,16 +929,18 @@ final class CollectionHandle(spark: SparkSession,
     Quotas.Gates.withWrite(ref.dataRoot, limits) {
       Quotas.validateRecordShapes(records, limits)
       val r = withDefaults(records); checkWriteQuotas(r, op)
-      writer.addBatch(r, op = op)
+      mutate(writer.addBatch(r, op = op))
     }
   def add(records: DataFrame): Unit = write(records, "Add")
   def upsert(records: DataFrame): Unit = write(records, "Upsert")
   def update(records: DataFrame): Unit = write(records, "Update")
   def delete(ids: Seq[String]): Unit =
-    Quotas.Gates.withWrite(ref.dataRoot, limits) { ids.foreach(writer.delete) }
+    Quotas.Gates.withWrite(ref.dataRoot, limits) { mutate(ids.foreach(writer.delete)) }
   def deleteWhere(where: graft.model.Where.Expr): Long = {
     Quotas.validateWhere(where, limits)
-    Quotas.Gates.withWrite(ref.dataRoot, limits) { writer.deleteWhere(where) }
+    Quotas.Gates.withWrite(ref.dataRoot, limits) {
+      mutate(writer.deleteWhere(state, where))
+    }
   }
 
   /** Tombstone every live id not in `keep` — the refresh sweep's delete
@@ -936,10 +955,10 @@ final class CollectionHandle(spark: SparkSession,
     Quotas.Gates.withWrite(ref.dataRoot, limits) {
       val stale = state.toDF().select(col("id"))
         .join(keep.select(col("id")), Seq("id"), "left_anti")
-      writer.addBatch(stale
+      mutate(writer.addBatch(stale
         .withColumn("document", lit(null).cast("string"))
         .withColumn("meta", map_from_arrays(array(), array())
-          .cast("map<string,string>")), op = "Delete")
+          .cast("map<string,string>")), op = "Delete"))
     }
 
   /** The reference DeleteRequest's three separate filter fields —
@@ -965,165 +984,48 @@ final class CollectionHandle(spark: SparkSession,
   }
 
   /** Read-your-writes live state (pending WAL folded over the segment). */
-  def state: Dataset[Rec] = writer.flush()
+  def state: Dataset[Rec] = reading(_.fold)
 
   /** The live state in the standard shredded record schema, driving the
-    * Count/Get/Knn/Search plans. `offset_id` is assigned HERE — dense
-    * row numbers over (first_offset, id) — because assigning offset ids
-    * to materialized records is MaterializeLogs' contract in the
-    * reference (batch appends share a WAL offset base, so first_offset
-    * alone is not unique). Assignment is DISTRIBUTED: a range
-    * repartition on the sort key plus `zipWithIndex` partition bases —
-    * no single-partition window Exchange, so an aggressive writer
-    * between compactions cannot funnel the whole tail through one task.
-    * The view is rebuilt only when the writer's mutation epoch moves;
-    * repeated reads between writes reuse the same cached plan.
-    *
-    * Metadata shreds by the DECLARED schema: keys typed int/float/bool
-    * in the collection schema cast out of the WAL's string map into the
-    * typed maps (the reference's typed metadata indexes), so numeric and
-    * boolean Where predicates work through the facade; undeclared keys
-    * stay strings.
+    * Count/Get/Knn/Search plans, with dense offset ids over
+    * (first_offset, id) ([[ReaderState.denseOffsets]]). The view belongs
+    * to the reader state: every handle on the same committed version
+    * shares one, built once; a handle with local writes builds its own
+    * once per write epoch, so repeated reads between writes reuse the
+    * same cached plan.
     */
-  def asCollection: Collection = {
-    def cached(ep: Long): Option[Collection] =
-      collectionCache.collect { case (e, c) if e == ep => c }
-    // a hit on the current epoch takes no lock; a miss builds under it,
-    // so concurrent first reads of an epoch share ONE persisted view
-    // (two racing builds would each persist one, and the later would
-    // unpersist the earlier's view while its reader still used it)
-    cached(writer.epoch).getOrElse(viewLock.synchronized {
-      val ep = writer.epoch
-      cached(ep).getOrElse {
-        val c = buildCollection()
-        collectionCache = Some((ep, c))
-        c
-      }
-    })
-  }
-  @volatile private var collectionCache: Option[(Long, Collection)] = None
-  private val viewLock = new Object
+  def asCollection: Collection = reading(_.view)
 
   /** The offset-assignment input BEFORE the zipWithIndex RDD boundary —
     * exposed so PlanSpec can assert no single-partition Exchange hides
     * UPSTREAM of the boundary (the post-boundary plan cannot show it).
     */
   private[graft] def offsetSortedState: DataFrame =
-    rangeSortedByOffset(state.toDF())
-
-  private def rangeSortedByOffset(df: DataFrame): DataFrame =
-    df.repartitionByRange(col("first_offset"), col("id"))
-      .sortWithinPartitions(col("first_offset"), col("id"))
-
-  /** Dense 1-based offset ids over the (first_offset, id) total order
-    * WITHOUT a global window: the input range-partitions on the sort key
-    * (partition ranges are ordered by partition index), sorts within,
-    * and zipWithIndex adds per-partition bases — bit-identical to
-    * `row_number().over(orderBy(first_offset, id))` with no
-    * single-partition Exchange. The repo standard for offset numbering,
-    * shared by the full RYW view and the IndexAndWal tail leg.
-    */
-  private def denseOffsets(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val sorted = rangeSortedByOffset(df)
-    spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(r.toSeq :+ (i + 1L))
-      },
-      sorted.schema.add("offset_id", LongType))
-  }
-
-  /** WAL-state rows (id, document, meta, embedding [, offset_id]) →
-    * the shredded record schema, typed maps split out by the DECLARED
-    * schema + tag-encoded values (see [[asCollection]]'s doc).
-    */
-  private def shredRecords(withOffset: DataFrame): DataFrame = {
-    val none = map_from_arrays(array(), array())
-    def declared(t: Catalog.ValueType): Seq[String] =
-      ref.schema.keys.collect { case (k, c) if c.valueType == t => k }.toSeq
-    def typedMap(keys: Seq[String], cast: String): org.apache.spark.sql.Column =
-      if (keys.isEmpty) none.cast(s"map<string,$cast>")
-      else map_filter(
-        transform_values(
-          map_filter(col("meta"), (k, _) => k.isin(keys: _*)),
-          // try_cast, NOT cast: a tag-encoded entry ("i3" from a typed-
-          // map add) must fall through to the tagged path as null here —
-          // under ANSI a plain cast would throw instead
-          (_, v) => v.try_cast(cast)),
-        (_, v) => v.isNotNull)
-    val typedKeys = declared(Catalog.VInt) ++ declared(Catalog.VFloat) ++
-      declared(Catalog.VBool)
-    val strMap0 =
-      if (typedKeys.isEmpty) col("meta")
-      else map_filter(col("meta"), (k, _) => !k.isin(typedKeys: _*))
-    // typed values for a key come from EITHER source, mutually exclusive
-    // per row: a tag-encoded entry casts to null through the declared
-    // path (filtered), an untagged declared entry carries no tag
-    def merged(decl: Seq[String], cast: String,
-        tagged: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      map_concat(typedMap(decl, cast), tagged(col("meta")))
-    withOffset.select(
-      col("id"),
-      col("offset_id"),
-      col("embedding"),
-      col("document"),
-      TypedMeta.decodeUri(col("meta")).as("uri"),
-      TypedMeta.decodeStr(strMap0).as("meta_str"),
-      merged(declared(Catalog.VInt), "bigint", TypedMeta.decodeInt).as("meta_int"),
-      merged(declared(Catalog.VFloat), "double", TypedMeta.decodeFloat).as("meta_float"),
-      merged(declared(Catalog.VBool), "boolean", TypedMeta.decodeBool).as("meta_bool"),
-      TypedMeta.decodeSparse(col("meta")).as("meta_sparse"),
-      // all four array types round-trip tagged for any key, declared
-      // or not (the WAL tag carries the element type)
-      TypedMeta.decodeArrStr(col("meta")).as("meta_str_arr"),
-      TypedMeta.decodeArrInt(col("meta")).as("meta_int_arr"),
-      TypedMeta.decodeArrFloat(col("meta")).as("meta_float_arr"),
-      TypedMeta.decodeArrBool(col("meta")).as("meta_bool_arr"))
-  }
-
-  // The epoch superseded at the LAST view build — unpersisted when the
-  // next epoch's view replaces it, so at most one epoch's view is ever
-  // cached (the Writer.flush retiring discipline applied to the read
-  // side).
-  private var retiringView: Option[DataFrame] = None
-
-  private def buildCollection(): Collection = {
-    // The shredded view is persisted per epoch: a facade read typically
-    // runs SEVERAL actions over it (prefilter counts, KNN legs,
-    // pagination), and each action otherwise replays the range exchange
-    // + sort + zipWithIndex + shred above the (already cached) WAL fold.
-    // Boundedness is the same argument as Writer.flush's fold cache: the
-    // view is the live working set between compactions, exactly what a
-    // serving tier keeps hot.
-    val df = shredRecords(denseOffsets(state.toDF())).persist()
-    retiringView.foreach(_.unpersist())
-    retiringView = Some(df)
-    new Collection(df)
-  }
+    ReaderState.rangeSortedByOffset(state.toDF())
 
   /** The shredded live records WITHOUT dense offset-id assignment —
     * `offset_id` carries the raw WAL `first_offset` (monotone across
     * commits, shared within one batch). Attached-function invocations
     * read through this: none of the registered functions touch
-    * `offset_id`, and skipping [[denseOffsets]] skips the eager
-    * zipWithIndex partition-count job the dense assignment costs per
-    * epoch — an invocation sweep otherwise pays it once per instance per
-    * micro-batch. Query plans (get/knn pagination) keep the dense view.
+    * `offset_id`, and skipping the dense assignment skips the eager
+    * zipWithIndex partition-count job it costs per epoch — an invocation
+    * sweep otherwise pays it once per instance per micro-batch. Query
+    * plans (get/knn pagination) keep the dense view.
     */
-  private[api] def recordsForFunctions: DataFrame =
-    shredRecords(state.toDF().withColumn("offset_id", col("first_offset")))
+  private[api] def recordsForFunctions: DataFrame = reading { st =>
+    st.shred(st.fold.toDF().withColumn("offset_id", col("first_offset")))
+  }
 
   def count(readLevel: ReadLevel = ReadLevel.IndexAndWal): Long =
-    Quotas.Gates.withRead(ref.dataRoot, limits) {
+    Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       readLevel match {
-        case ReadLevel.IndexAndWal => state.count()
+        case ReadLevel.IndexAndWal => st.fold.count()
         // the Count plan carries read_level like every Scan
         // (`plan.rs:30-40`) — the index-only/bounded views count the
         // same frames get() reads
-        case other => readView(other).records.count()
+        case other => readView(st, other).records.count()
       }
-    }
+    } }
 
   // the read gates admit REQUESTS (plan construction + validation), the
   // in-process analog of the reference's per-collection concurrent-read
@@ -1134,8 +1036,7 @@ final class CollectionHandle(spark: SparkSession,
       readLevel: ReadLevel = ReadLevel.IndexAndWal,
       ids: Option[Seq[String]] = None,
       whereDocument: Option[graft.model.Where.Expr] = None): DataFrame =
-    Quotas.Gates.withRead(ref.dataRoot, limits) {
-      import graft.model.Where
+    Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       // the reference's GetRequest carries ids, where, and
       // where_document as SEPARATE fields (`rust/types/src/api_types.rs`
       // GetRequest; `chromadb/api/__init__.py` get(ids, where,
@@ -1144,14 +1045,8 @@ final class CollectionHandle(spark: SparkSession,
       val w = conjoinRequestFilters(ids, where, whereDocument)
       w.foreach(Quotas.validateWhere(_, limits))
       limit.foreach(Quotas.validateResults(_, limits))
-      val view = readView(readLevel)
-      indexAllowedIds(w, readLevel) match {
-        case Some(allowed) =>
-          new Collection(view.records.join(allowed, Seq("id"), "left_semi"))
-            .get(w, limit, offset, include)
-        case None => view.get(w, limit, offset, include)
-      }
-    }
+      prefiltered(st, w, readLevel).get(w, limit, offset, include)
+    } }
 
   /** One PAGE of the unbounded ordered export — the wire face's answer
     * to "get with no limit": instead of collecting the whole (filtered)
@@ -1171,21 +1066,15 @@ final class CollectionHandle(spark: SparkSession,
       readLevel: ReadLevel = ReadLevel.IndexAndWal,
       ids: Option[Seq[String]] = None,
       whereDocument: Option[graft.model.Where.Expr] = None): DataFrame =
-    Quotas.Gates.withRead(ref.dataRoot, limits) {
+    Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       Quotas.validateResults(pageSize, limits)
       require(page >= 0, s"page must be non-negative, got $page")
       val w = conjoinRequestFilters(ids, where, whereDocument)
       w.foreach(Quotas.validateWhere(_, limits))
-      val view = readView(readLevel)
-      val coll = indexAllowedIds(w, readLevel) match {
-        case Some(allowed) =>
-          new Collection(view.records.join(allowed, Seq("id"), "left_semi"))
-        case None => view
-      }
-      coll.pagedExport(pageSize, w)
+      prefiltered(st, w, readLevel).pagedExport(pageSize, w)
         .filter(col("page") === page)
         .select(Collection.includeProjection(include): _*)
-    }
+    } }
 
   /** Conjoin a read request's three separate filter fields into one
     * `Where` tree at plan time — the reference's Get/Query requests carry
@@ -1231,23 +1120,24 @@ final class CollectionHandle(spark: SparkSession,
     * reads scan — the posting tables answer for the full segment, not a
     * prefix.
     */
-  private def indexAllowedIds(where: Option[graft.model.Where.Expr],
+  private def indexAllowedIds(st: ReaderState,
+      where: Option[graft.model.Where.Expr],
       level: ReadLevel): Option[DataFrame] = {
     import graft.model.Where
     val w = where.getOrElse(return None)
-    val dataRoot = segmentDataRoot(ref).getOrElse(return None)
+    val segment = st.segment.getOrElse(return None)
     level match {
       case ReadLevel.IndexAndBoundedWal(_) => return None
       case _ => ()
     }
-    lazy val seg = CollectionStore.loadRecords(spark, dataRoot)
+    val dataRoot = segment.root
+    lazy val seg = segment.records
     def toIds(cand: DataFrame): DataFrame =
       seg.select(col("offset_id"), col("id"))
         .join(cand, Seq("offset_id")).select("id")
     // the segment's persisted row count, shared by every build key below
     // — one _segmeta read instead of one count job per index leg
-    lazy val segN: Option[Long] =
-      CollectionStore.readSegMeta(dataRoot).map(_._3)
+    lazy val segN: Option[Long] = segment.meta.map(_._3)
     // Index-leg builds run in TWO passes: route(w) first evaluates DRY —
     // probes register their (marker-idempotent) serving builds here and
     // return sentinel frames — then the registered builds run
@@ -1270,7 +1160,7 @@ final class CollectionHandle(spark: SparkSession,
         vs: Seq[graft.model.Where.Value]): DataFrame =
       building(s"inv:$k") {
         CollectionStore.metaInvertedServing(seg, dataRoot, k, cfg.valueType,
-          keyTag = segMetaTag(seg), knownCount = segN)
+          keyTag = segment.metaTag, knownCount = segN)
       } {
         graft.operators.MetaInverted.candidateIds(spark, dataRoot, k,
           vs.map(graft.operators.MetaInverted.renderValue))
@@ -1279,7 +1169,7 @@ final class CollectionHandle(spark: SparkSession,
         leaves: Seq[graft.operators.MetaRange.Leaf]): DataFrame =
       building(s"rng:$k") {
         CollectionStore.metaRangeServing(seg, dataRoot, k, cfg.valueType,
-          keyTag = segMetaTag(seg), knownCount = segN)
+          keyTag = segment.metaTag, knownCount = segN)
       } {
         graft.operators.MetaRange.candidateIds(spark, dataRoot, k, leaves)
       }
@@ -1289,7 +1179,7 @@ final class CollectionHandle(spark: SparkSession,
         CollectionStore.ftsServing(
           seg.select(col("offset_id").as("doc_id"),
             col("document").as("text")), dataRoot,
-          keyTag = segMetaTag(seg), knownCount = segN)
+          keyTag = segment.metaTag, knownCount = segN)
       } {
         graft.operators.Fts.candidateIdsDnf(spark, dataRoot, dnf)
           .select(col("doc_id").as("offset_id"))
@@ -1367,15 +1257,28 @@ final class CollectionHandle(spark: SparkSession,
         if (pendingBuilds.size > 1)
           // pre-warm the shared fingerprint so the workers don't race
           // duplicate tag jobs, then build the legs concurrently
-          segMetaTag(seg)
+          segment.metaTag
         CollectionStore.runBuilds(pendingBuilds.values.toSeq)
         route(w)
     }
     routed.map(toIds).map { ids =>
       if (level == ReadLevel.IndexAndWal)
-        writer.tailIds.map(t => ids.union(t.select(col("id"))).distinct())
+        st.tailIds.map(t => ids.union(t.select(col("id"))).distinct())
           .getOrElse(ids)
       else ids
+    }
+  }
+
+  /** The view at `level`, narrowed by the index prefilter when `where`
+    * routes ([[indexAllowedIds]]).
+    */
+  private def prefiltered(st: ReaderState,
+      where: Option[graft.model.Where.Expr], level: ReadLevel): Collection = {
+    val view = readView(st, level)
+    indexAllowedIds(st, where, level) match {
+      case Some(allowed) =>
+        new Collection(view.records.join(allowed, Seq("id"), "left_semi"))
+      case None => view
     }
   }
 
@@ -1483,7 +1386,7 @@ final class CollectionHandle(spark: SparkSession,
       readLevel: ReadLevel = ReadLevel.IndexAndWal,
       ids: Option[Seq[String]] = None,
       whereDocument: Option[graft.model.Where.Expr] = None): DataFrame =
-    Quotas.Gates.withRead(ref.dataRoot, limits) {
+    Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       // QueryRequest carries ids and where_document beside where
       // (`api_types.rs` QueryRequestPayload:2207-2215) — conjoined like
       // get()'s, so an id-restricted KNN prefilters through the same
@@ -1495,61 +1398,20 @@ final class CollectionHandle(spark: SparkSession,
       // indexes on EVERY read plan, not just Get — the same posting
       // prefilter narrows the KNN's candidate records (pre-filtered
       // exact KNN: the full predicate still verifies inside the plan)
-      val view = readView(readLevel)
-      val base = indexAllowedIds(w, readLevel) match {
-        case Some(allowed) =>
-          new Collection(view.records.join(allowed, Seq("id"), "left_semi"))
-        case None => view
-      }
-      base.query(queries, k, w, cfgSpace(space))
-    }
+      prefiltered(st, w, readLevel).query(queries, k, w, cfgSpace(space))
+    } }
 
   /** The read view at `readLevel` (`plan.rs:550-565`): the RYW state
     * (default), the persisted segment alone, or segment + a consistent
     * WAL prefix — all in the identical shredded serving schema, so
     * results at different levels union cleanly.
     */
-  private def readView(level: ReadLevel): Collection = level match {
-    case ReadLevel.IndexAndWal => asCollection
-    case ReadLevel.IndexOnly => indexView(None)
-    case ReadLevel.IndexAndBoundedWal(n) => indexView(Some(n))
-  }
-
-  private def indexView(bound: Option[Int]): Collection = {
-    // memoized per (writer epoch, bound) like asCollection's cache —
-    // repeated IndexOnly/bounded reads between writes reuse one plan
-    // instead of re-running the fold + offset-assignment chain
-    val key = (writer.epoch, bound)
-    indexViewCache.get(key).getOrElse {
-      val segRecs = persistedRecs()
-      val st = bound.flatMap(n => writer.tailPrefix(n)) match {
-        case Some((ops, _)) => Materialize(spark, ops,
-          Some(Materialize.segmentAsLog(spark, segRecs)))
-        case None => segRecs
-      }
-      val c = new Collection(shredRecords(denseOffsets(st.toDF())))
-      indexViewCache = Map(key -> c) // keep only the live epoch
-      c
+  private def readView(st: ReaderState, level: ReadLevel): Collection =
+    level match {
+      case ReadLevel.IndexAndWal => st.view
+      case ReadLevel.IndexOnly => st.indexView(None)
+      case ReadLevel.IndexAndBoundedWal(n) => st.indexView(Some(n))
     }
-  }
-  @volatile private var indexViewCache: Map[(Long, Option[Int]), Collection] = Map.empty
-
-  /** The PERSISTED compacted segment in WAL-record shape, straight from
-    * disk — unlike the writer's in-memory segment, never contaminated by
-    * flushed post-compaction ops (which IndexOnly/bounded reads must not
-    * see). Empty for a never-compacted collection: its whole state is
-    * tail, so the index leg is empty, exactly the reference's.
-    */
-  private def persistedRecs(): Dataset[Rec] = segmentDataRoot(ref) match {
-    case Some(dataRoot) =>
-      TypedMeta.encodeArrays(TypedMeta.encodeSparse(
-          TypedMeta.encodeUri(TypedMeta.encode(
-          CollectionStore.loadRecords(spark, dataRoot)
-            .withColumnRenamed("meta_str", "meta")))))
-        .select(col("id"), col("document"), col("meta"),
-          col("embedding"), col("offset_id").as("first_offset")).as[Rec]
-    case None => spark.emptyDataset[Rec]
-  }
 
   /** Served-ANN read at the reference's DEFAULT read level —
     * `ReadLevel::IndexAndWal` (`rust/types/src/execution/plan.rs:553-565`):
@@ -1586,7 +1448,7 @@ final class CollectionHandle(spark: SparkSession,
       where: Option[graft.model.Where.Expr] = None,
       space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
-      Quotas.Gates.withRead(ref.dataRoot, limits) {
+      Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
     where.foreach(Quotas.validateWhere(_, limits))
     Quotas.validateResults(k, limits)
     // SPANN config supplies search_nprobe / nreplica_count when the call
@@ -1598,29 +1460,37 @@ final class CollectionHandle(spark: SparkSession,
           "spann vector-index config on the collection"))
     val nr = if (nReplica > 0) nReplica else spannCfg.map(_.nReplica).getOrElse(4)
     val sp = cfgSpace(space)
-    segmentDataRoot(ref) match {
-      case None => readView(readLevel).query(queries, k, where, sp)
-      case Some(dataRoot) =>
-        val seg = CollectionStore.loadRecords(spark, dataRoot)
-        val vecs = seg.select(col("offset_id"), col("embedding"))
+    st.segment match {
+      case None => readView(st, readLevel).query(queries, k, where, sp)
+      case Some(seg) =>
+        val vecs = seg.records.select(col("offset_id"), col("embedding"))
         // a DECLARED spann config serves through the split/merge-
         // maintained index — its split/merge thresholds are exactly the
         // compactor's list-size maintenance knobs
         // (spann_configuration.rs split_threshold/merge_threshold)
         val model = spannCfg match {
-          case Some(sc) => CollectionStore.ivfRebalancedServing(
-            vecs, dataRoot, nCentroids, nr,
-            splitThreshold = sc.splitThreshold,
-            mergeThreshold = sc.mergeThreshold, keyTag = segTag(seg))
-          case None => CollectionStore.ivfServing(
-            vecs, dataRoot, nCentroids, nr, space = sp,
-            keyTag = segTag(seg))
+          case Some(sc) => seg.served(s"ivf2-$nCentroids-$nr-" +
+              s"${sc.splitThreshold}-${sc.mergeThreshold}") {
+            CollectionStore.ivfRebalancedServing(
+              vecs, seg.root, nCentroids, nr,
+              splitThreshold = sc.splitThreshold,
+              mergeThreshold = sc.mergeThreshold, keyTag = seg.tag)
+          }
+          case None => ivfModel(seg, nCentroids, nr, sp)
         }
-        val (tail, stale, extra) = tailAndStale(readLevel)
-        new Collection(seg).queryAnn(model, queries, k, np, where,
+        val (tail, stale, extra) = tailAndStale(st, readLevel)
+        new Collection(seg.records).queryAnn(model, queries, k, np, where,
           sp, walTail = tail, staleIds = stale, staleFetchExtra = extra)
     }
-  }
+  } }
+
+  private def ivfModel(seg: Segment, nCentroids: Int, nReplica: Int,
+      space: String): graft.operators.Ivf.Model =
+    seg.served(s"ivf-$nCentroids-$nReplica-$space") {
+      CollectionStore.ivfServing(
+        seg.records.select(col("offset_id"), col("embedding")), seg.root,
+        nCentroids, nReplica, space = space, keyTag = seg.tag)
+    }
 
   /** [[queryAnn]] through the quantized-SPANN serving stack: coarse rank
     * on the persisted rotated-code table, exact re-rank, plus the same
@@ -1631,7 +1501,7 @@ final class CollectionHandle(spark: SparkSession,
       dim: Int = -1, alpha: Int = 20, nCentroids: Int = 16,
       nReplica: Int = -1, space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
-      Quotas.Gates.withRead(ref.dataRoot, limits) {
+      Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
     Quotas.validateResults(k, limits)
     // same config resolution as queryAnn: one declared metric serves
     // every read API on the collection, never a per-API default drift.
@@ -1648,22 +1518,21 @@ final class CollectionHandle(spark: SparkSession,
         IllegalArgumentException("queryAnnQuantized: pass dim or declare " +
           "the collection's dense embedding schema"))
     val sp = cfgSpace(space)
-    segmentDataRoot(ref) match {
-      case None => readView(readLevel).query(queries, k, None, sp)
-      case Some(dataRoot) =>
-        val seg = CollectionStore.loadRecords(spark, dataRoot)
-        val vecs = seg.select(col("offset_id"), col("embedding"))
-        val tag = segTag(seg)
-        val model = CollectionStore.ivfServing(vecs, dataRoot, nCentroids,
-          nr, space = sp, keyTag = tag)
-        val codes = CollectionStore.rotatedCodesServing(vecs, dataRoot, dm,
-          keyTag = tag)
-        val (tail, stale, extra) = tailAndStale(readLevel)
-        new Collection(seg).queryAnnQuantized(model, codes, queries, k,
+    st.segment match {
+      case None => readView(st, readLevel).query(queries, k, None, sp)
+      case Some(seg) =>
+        val model = ivfModel(seg, nCentroids, nr, sp)
+        val codes = seg.served(s"rotated-$dm") {
+          CollectionStore.rotatedCodesServing(
+            seg.records.select(col("offset_id"), col("embedding")),
+            seg.root, dm, keyTag = seg.tag)
+        }
+        val (tail, stale, extra) = tailAndStale(st, readLevel)
+        new Collection(seg.records).queryAnnQuantized(model, codes, queries, k,
           np, dm, alpha, sp, walTail = tail, staleIds = stale,
           staleFetchExtra = extra)
     }
-  }
+  } }
 
   /** [[queryAnnQuantized]]'s MULTI-BIT sibling through the serving
     * stack (`rust/index/src/quantization/multi_bit.rs`): the persisted
@@ -1680,7 +1549,7 @@ final class CollectionHandle(spark: SparkSession,
       bits: Int = 4, alpha: Int = 8, lo: Double = -1.5, hi: Double = 1.5,
       nCentroids: Int = 16, nReplica: Int = -1, space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
-      Quotas.Gates.withRead(ref.dataRoot, limits) {
+      Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
     Quotas.validateResults(k, limits)
     val spannCfg = indexConfig.collect { case s: Catalog.SpannIndexConfig => s }
     def np = if (nprobe > 0) nprobe
@@ -1689,22 +1558,21 @@ final class CollectionHandle(spark: SparkSession,
           "declare a spann vector-index config on the collection"))
     val nr = if (nReplica > 0) nReplica else spannCfg.map(_.nReplica).getOrElse(4)
     val sp = cfgSpace(space)
-    segmentDataRoot(ref) match {
-      case None => readView(readLevel).query(queries, k, None, sp)
-      case Some(dataRoot) =>
-        val seg = CollectionStore.loadRecords(spark, dataRoot)
-        val vecs = seg.select(col("offset_id"), col("embedding"))
-        val tag = segTag(seg)
-        val model = CollectionStore.ivfServing(vecs, dataRoot, nCentroids,
-          nr, space = sp, keyTag = tag)
-        val codes = CollectionStore.mbCodesServing(vecs, dataRoot, bits,
-          lo, hi, keyTag = tag)
-        val (tail, stale, extra) = tailAndStale(readLevel)
-        new Collection(seg).queryAnnQuantizedMb(model, codes, queries, k,
+    st.segment match {
+      case None => readView(st, readLevel).query(queries, k, None, sp)
+      case Some(seg) =>
+        val model = ivfModel(seg, nCentroids, nr, sp)
+        val codes = seg.served(s"mb-$bits-$lo-$hi") {
+          CollectionStore.mbCodesServing(
+            seg.records.select(col("offset_id"), col("embedding")),
+            seg.root, bits, lo, hi, keyTag = seg.tag)
+        }
+        val (tail, stale, extra) = tailAndStale(st, readLevel)
+        new Collection(seg.records).queryAnnQuantizedMb(model, codes, queries, k,
           np, bits, alpha, sp, lo, hi, walTail = tail, staleIds = stale,
           staleFetchExtra = extra)
     }
-  }
+  } }
 
   /** [[queryAnn]] served from the persisted per-partition HNSW graphs —
     * the reference's compacted vector segment is an HNSW
@@ -1714,7 +1582,7 @@ final class CollectionHandle(spark: SparkSession,
   def queryAnnHnsw(queries: DataFrame, k: Int, efSearch: Int = -1,
       space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
-      Quotas.Gates.withRead(ref.dataRoot, limits) {
+      Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
     Quotas.validateResults(k, limits)
     // the declared config supplies the query-time ef_search and the
     // build-time M / ef_construction (hnsw_configuration.rs defaults);
@@ -1729,18 +1597,19 @@ final class CollectionHandle(spark: SparkSession,
       case h: Catalog.HnswIndexConfig => (h.maxNeighbors, h.efConstruction)
       case s: Catalog.SpannIndexConfig => (s.maxNeighbors, s.efConstruction)
     }.getOrElse((16, 100))
-    segmentDataRoot(ref) match {
-      case None => readView(readLevel).query(queries, k, None, sp)
-      case Some(dataRoot) =>
-        val seg = CollectionStore.loadRecords(spark, dataRoot)
-        val root = CollectionStore.hnswServing(
-          seg.select(col("offset_id"), col("embedding")), dataRoot,
-          m = m, efConstruction = efc, space = sp, keyTag = segTag(seg))
-        val (tail, stale, extra) = tailAndStale(readLevel)
-        new Collection(seg).queryAnnHnsw(root, queries, k, ef, sp,
+    st.segment match {
+      case None => readView(st, readLevel).query(queries, k, None, sp)
+      case Some(seg) =>
+        val root = seg.served(s"hnsw-$m-$efc-$sp") {
+          CollectionStore.hnswServing(
+            seg.records.select(col("offset_id"), col("embedding")), seg.root,
+            m = m, efConstruction = efc, space = sp, keyTag = seg.tag)
+        }
+        val (tail, stale, extra) = tailAndStale(st, readLevel)
+        new Collection(seg.records).queryAnnHnsw(root, queries, k, ef, sp,
           walTail = tail, staleIds = stale, staleFetchExtra = extra)
     }
-  }
+  } }
 
   /** Sparse KNN at the handle, config-gated like the scalar inverted
     * indexes: a declared sparse key with `indexed = true` serves from
@@ -1756,7 +1625,7 @@ final class CollectionHandle(spark: SparkSession,
     */
   def sparseSearch(key: String, query0: Seq[(Long, Float)], k: Int,
       readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
-      Quotas.Gates.withRead(ref.dataRoot, limits) {
+      Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
     Quotas.validateResults(k, limits)
     // the in-plan sparse dot is a sorted-merge — record vectors store
     // index-sorted, the query must arrive the same way (MaxScore is
@@ -1764,14 +1633,16 @@ final class CollectionHandle(spark: SparkSession,
     val query = query0.sortBy(_._1)
     val served = ref.schema.keys.get(key).exists(c =>
       c.valueType == Catalog.VSparseVector && c.indexed)
-    segmentDataRoot(ref) match {
-      case Some(dataRoot) if served && CollectionStore
-          .loadRecords(spark, dataRoot).columns.contains("meta_sparse") =>
-        val seg = CollectionStore.loadRecords(spark, dataRoot)
-        CollectionStore.sparseServing(seg, key, dataRoot,
-          keyTag = segMetaTag(seg),
-          knownCount = CollectionStore.readSegMeta(dataRoot).map(_._3))
-        val (tail, stale, _) = tailAndStale(readLevel)
+    st.segment match {
+      case Some(segment) if served &&
+          segment.records.columns.contains("meta_sparse") =>
+        val seg = segment.records
+        val dataRoot = segment.root
+        segment.served(s"sparse-$key") {
+          CollectionStore.sparseServing(seg, key, dataRoot,
+            keyTag = segment.metaTag, knownCount = segment.meta.map(_._3))
+        }
+        val (tail, stale, _) = tailAndStale(st, readLevel)
         // tail offsets are leg-local — shift them clear of the segment
         // doc-id space so the merged scoring can never alias two records
         val shift = 1L << 40
@@ -1791,114 +1662,43 @@ final class CollectionHandle(spark: SparkSession,
       case _ =>
         import spark.implicits._
         val qv = Seq((query.map(_._1), query.map(_._2))).toDF("qi", "qv")
-        readView(readLevel).sparseSearch(key, qv, k)
+        readView(st, readLevel).sparseSearch(key, qv, k)
           .select(col("id"), col("#score").cast("double").as("#score"))
           .orderBy(desc("#score"), col("id"))
     }
-  }
+  } }
 
-  /** The IndexAndWal legs' inputs: current state of every id touched
-    * since compaction (the KnnLog candidates) + the touched-id set (the
-    * index-leg shadow — includes DELETED ids, which are absent from the
-    * state frame but must still knock their stale indexed version out).
+  /** (tail leg, stale-id shadow, index-leg over-fetch margin) at `level`
+    * — the IndexAndWal legs' inputs: the current state of every id
+    * touched since compaction (the KnnLog candidates) and the touched-id
+    * set (the index-leg shadow — includes DELETED ids, which are absent
+    * from the state frame but must still knock their stale indexed
+    * version out). The full-tail legs belong to the reader state, built
+    * once per version; a bounded prefix counts its (small) frame
+    * directly, so a bounded read never touches the full tail's margin.
     */
-  /** (tail leg, stale-id shadow, index-leg over-fetch margin) at
-    * `level`. The margin comes from the level's OWN id frame — the
-    * epoch-keyed [[tailCount]] cache serves only the full-tail level, a
-    * bounded prefix counts its (small) frame directly, so a bounded
-    * read can never poison the margin of a following full read in the
-    * same epoch.
-    */
-  private def tailAndStale(level: ReadLevel = ReadLevel.IndexAndWal)
+  private def tailAndStale(st: ReaderState, level: ReadLevel)
       : (Option[DataFrame], Option[DataFrame], Int) = level match {
     case ReadLevel.IndexOnly =>
       // skip the WAL leg entirely — the served index answers alone
       (None, None, 0)
     case ReadLevel.IndexAndBoundedWal(n) =>
-      writer.tailPrefix(n) match {
+      st.tailPrefix(n) match {
         case Some((ops, ids)) =>
           // fold the PREFIX over the persisted segment restricted to the
-          // prefix ids — writer.stateOf would fold later entries' ops
+          // prefix ids — the full tail would fold later entries' ops
           // too, violating the consistent-prefix contract
-          val base = persistedRecs().join(broadcast(ids), Seq("id"),
+          val base = st.segLog.join(broadcast(ids), Seq("id"),
             "left_semi").as[Rec]
-          val st = Materialize(spark, ops,
+          val folded = Materialize(spark, ops,
             Some(Materialize.segmentAsLog(spark, base)))
-          (Some(shredRecords(denseOffsets(st.toDF()))), Some(ids),
-            ids.count().toInt)
+          (Some(st.numbered(folded.toDF())), Some(ids), ids.count().toInt)
         case None => (None, None, 0)
       }
-    case ReadLevel.IndexAndWal => writer.tailIds match {
-      case Some(ids) =>
-        // Writer.stateOf folds ONLY the touched ids — O(|tail|), never
-        // the full RYW materialization. Tail offset ids are leg-local
-        // (the merge keys on id); numbering goes through the same
-        // range-repartition + zipWithIndex as the full view — a
-        // Window.orderBy here would funnel the tail through one task,
-        // which a write-heavy tenant deferring compaction would pay.
-        (Some(shredRecords(denseOffsets(writer.stateOf(ids).toDF()))),
-          Some(ids), tailCount(ids))
-      case None => (None, None, 0)
-    }
+    case ReadLevel.IndexAndWal =>
+      if (st.tailIds.isEmpty) (None, None, 0)
+      else (st.tailLeg, st.tailIds, st.tailCount)
   }
-
-  /** |distinct tail ids| — the index leg's over-fetch margin (the
-    * reference's fetch-log-size). One count job per mutation epoch, only
-    * on served reads with a live tail.
-    */
-  @volatile private var tailCountCache: Option[(Long, Long)] = None
-  private def tailCount(ids: DataFrame): Int = {
-    val ep = writer.epoch
-    tailCountCache match {
-      case Some((e, n)) if e == ep => n.toInt
-      case _ =>
-        val n = ids.count()
-        tailCountCache = Some((ep, n))
-        n.toInt
-    }
-  }
-
-  /** Content fingerprint of the compacted segment — the serving-index
-    * build-key tag. Order-independent (an XOR fold of row hashes — no
-    * overflow under ANSI, commutative), so a re-persist of identical
-    * content keys identically regardless of file layout; any changed
-    * embedding changes it, which the count-only part of the build key
-    * cannot see. One aggregate job per handle per compaction (cached
-    * here; persist() invalidates).
-    */
-  @volatile private var segTagCache: Option[String] = None
-  private def segTag(seg: DataFrame): String = segTagCache.getOrElse {
-    // prefer the fingerprint _segmeta recorded at compaction (zero jobs);
-    // same formula as the fallback aggregate below
-    val tag = segmentDataRoot(ref).flatMap(CollectionStore.readSegMeta)
-      .map(_._2).getOrElse {
-        val r = seg.agg(bit_xor(xxhash64(col("id"), col("embedding")))
-          .cast("string")).collect()(0)
-        if (r.isNullAt(0)) "empty" else r.getString(0)
-      }
-    segTagCache = Some(tag)
-    tag
-  }
-
-  /** FULL-content fingerprint (id+embedding+document+uri+metadata) — the
-    * build key for indexes over document/metadata content (FTS, per-key
-    * inverted postings), which the id+embedding [[segTag]] cannot
-    * re-key when a re-compaction only moves a metadata value. Prefers
-    * the `_segmeta` mtag (zero jobs); pre-mtag segments pay one
-    * aggregate per handle. persist() invalidates with segTagCache.
-    */
-  @volatile private var segMetaTagCache: Option[String] = None
-  private def segMetaTag(seg: DataFrame): String =
-    segMetaTagCache.getOrElse {
-      val tag = segmentDataRoot(ref)
-        .flatMap(CollectionStore.readSegMetaTag).getOrElse {
-          val r = seg.agg(bit_xor(CollectionStore.contentTagExpr(seg))
-            .cast("string")).collect()(0)
-          if (r.isNullAt(0)) "empty" else r.getString(0)
-        }
-      segMetaTagCache = Some(tag)
-      tag
-    }
 
   /** `query_texts` — embed the query strings with the collection's
     * declared embedding function, then KNN. The texts are the client's
@@ -1929,27 +1729,16 @@ final class CollectionHandle(spark: SparkSession,
     */
   def search(json: String, space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
-    Quotas.Gates.withRead(ref.dataRoot, limits) {
+    Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       val lvl = wireReadLevel(json, readLevel)
-      searchBase(graft.model.SearchParser.parse(json).filter, lvl)
+      // the Search plan's scan routes its filter through the SAME
+      // posting/FTS prefilter get()/query() use — the reference's Filter
+      // operator serves every read plan from the metadata indexes; the
+      // wire surface must not be the one path paying a full scan
+      prefiltered(st, graft.model.SearchParser.parse(json).filter, lvl)
         .searchPayload(json, cfgSpace(space),
           embed = embedFn, sparseEmbed = schemaSparseFns)
-    }
-
-  /** The Search plan's scan, with its filter routed through the SAME
-    * posting/FTS prefilter get()/query() use — the reference's Filter
-    * operator serves every read plan from the metadata indexes; the
-    * wire surface must not be the one path paying a full scan.
-    */
-  private def searchBase(filter: Option[graft.model.Where.Expr],
-      level: ReadLevel): Collection = {
-    val view = readView(level)
-    indexAllowedIds(filter, level) match {
-      case Some(allowed) =>
-        new Collection(view.records.join(allowed, Seq("id"), "left_semi"))
-      case None => view
-    }
-  }
+    } }
 
   /** The Search envelope's own `read_level` field wins over the
     * programmatic default — it is the request's plan field
@@ -1973,7 +1762,7 @@ final class CollectionHandle(spark: SparkSession,
     */
   def searchAll(json: String, space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal): Seq[DataFrame] =
-    Quotas.Gates.withRead(ref.dataRoot, limits) {
+    Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       val lvl = wireReadLevel(json, readLevel)
       val reqs = graft.model.SearchParser.parseMany(json)
       // per-request payload fan-out quota (the enforcer's
@@ -1981,10 +1770,10 @@ final class CollectionHandle(spark: SparkSession,
       Quotas.validateSearchPayloads(reqs.size, limits)
       // per-payload filters differ — each payload gets its own prefilter
       reqs.map { req =>
-        searchBase(req.filter, lvl).searchRequest(req, cfgSpace(space),
+        prefiltered(st, req.filter, lvl).searchRequest(req, cfgSpace(space),
           None, embedFn, schemaSparseFns)
       }
-    }
+    } }
 
   private def schemaSparseFns
       : Map[String, graft.functions.SparseEmbeddingFunction] =
@@ -1998,8 +1787,8 @@ final class CollectionHandle(spark: SparkSession,
     * build declared serving indexes with [[provision]]. The next open
     * resumes offsets past this segment.
     */
-  def persist(): Unit = {
-    val records = asCollection.records
+  def persist(): Unit = reading { st =>
+    val records = st.view.records
     // Schema validation rides the segment WRITE as observed metrics
     // (saveRecords), like `_segmeta` — so a compaction runs exactly ONE
     // action over the folded segment whether or not the collection is
@@ -2029,26 +1818,25 @@ final class CollectionHandle(spark: SparkSession,
     // whose base segment another writer has re-compacted must fail the
     // commit even if it reads currentVersion fresh — its folded state is
     // missing the other writer's records (the classic lost update)
+    val through = walSeen
     CollectionStore.conditionalCommit(ref.dataRoot, baseVersion, { dir =>
       CollectionStore.saveRecords(records, dir, ref.schema)
       // the segment folded exactly the log prefix this handle has seen —
       // record it so opens of this version replay only entries past it
-      WalStore.writeMark(dir, walSeen)
+      WalStore.writeMark(dir, through)
     }) match {
       case Some(next) =>
         baseVersion = next
         // this IS the compaction point: the stored segment now covers
         // every op, so the WAL tail resets and the per-JVM index-open
         // memos drop — the next served read re-checks build markers
-        // against the NEW segment (stale-keyed indexes rebuild there)
+        // against the NEW segment (stale-keyed indexes rebuild there).
+        // The pending ops are durable in the segment, and the handle
+        // moves to the new version's state: the old one retires once
+        // its last reader lets go.
         CollectionStore.invalidateRoot(ref.dataRoot)
-        writer.markCompacted()
-        segTagCache = None
-        segMetaTagCache = None
-        // the index-only/bounded view caches key on the writer EPOCH,
-        // which compaction does not bump — drop them here or a post-
-        // compaction IndexOnly read would serve the retired segment
-        indexViewCache = Map.empty
+        writer.committed()
+        moveTo(ReaderStates.compacted(spark, ref, next, through))
       case None => throw new java.util.ConcurrentModificationException(
         s"collection ${ref.name}: a version past $baseVersion was " +
           "committed by another writer — reopen and retry")
@@ -2205,4 +1993,22 @@ final class CollectionHandle(spark: SparkSession,
         .parquet(s"${ref.dataRoot}/functions/" +
           n.replaceAll("[^A-Za-z0-9._-]", "_"))
     }
+}
+
+object CollectionHandle {
+  /** A handle's references on its reader states: the committed state and
+    * its private layer. Released once, on close() or after collection,
+    * so it must not reach the handle.
+    */
+  private final class Lease(@volatile var committed: ReaderState)
+      extends Runnable {
+    @volatile var local: Option[ReaderState] = None
+    @volatile var closed = false
+    def run(): Unit = synchronized {
+      closed = true
+      local.foreach(_.release())
+      local = None
+      committed.release()
+    }
+  }
 }

@@ -6,226 +6,70 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** User-facing write API — `collection.add/update/upsert/delete`
   * (`service_based_frontend.rs:2079-2652`): each call appends typed
-  * operation records to the WAL; [[flush]] materializes WAL over the
-  * current segment into the next compacted state (the compactor's job,
-  * SURVEY §3.4).
+  * operation records to the pending WAL; [[flush]] materializes them over
+  * the current segment into the next compacted state (the compactor's
+  * job, SURVEY §3.4).
   *
   * Offsets are assigned monotonically per writer; cross-writer ordering
   * comes from the durable log — a commit rebases its ops into the WAL
   * position it claims (`WalStore.appendAt`), the reference's log-service
-  * order. Compactions publish segment versions through the same
-  * claim → publish → void protocol (`CollectionStore.conditionalCommit`).
+  * order. A [[CollectionHandle]]'s writer holds only its not-yet-committed
+  * ops: reads layer them over the shared committed [[ReaderState]].
   */
 final class Writer(spark: SparkSession, var segment: Dataset[Rec],
     startOffset: Long = 0L) {
   import spark.implicits._
 
-  private var wal: Vector[LogOp] = Vector.empty
-  private var batches: Vector[Dataset[LogOp]] = Vector.empty
-  // Ops not yet committed to the durable log (graft.sources.WalStore) —
-  // parallel to wal/batches but NOT cleared by flush(): folding into the
-  // in-memory segment is not durability. Cleared when a log append
-  // commits them (replaceCommitted) or a compaction covers them
-  // (markCompacted — the segment is then the durable copy).
-  private var logOps: Vector[LogOp] = Vector.empty
-  private var logBatches: Vector[Dataset[LogOp]] = Vector.empty
-  // New ops must sort AFTER every compacted record's assigned offset —
-  // reopening a persisted collection passes max(first_offset)+1 here.
+  // Ops appended since the last log commit or compaction, in append
+  // order, each anchored by its offset (one per single op, one per
+  // batch): the pending-for-log set, and the WAL entries a handle's
+  // read-your-writes layer folds.
+  private var entries: Vector[Writer.Entry] = Vector.empty
+  // how many leading entries flush() has folded into `segment`
+  private var folded = 0
+  // New ops must sort AFTER every record and committed op they layer
+  // over — a handle raises this to its committed state's next offset.
   private var nextOffset: Long = startOffset
-  // Bumped on every mutation; readers key derived caches (the facade's
-  // shredded collection view) on it — flush() does not bump because it
-  // only materializes, never changes, the logical state.
+  // Bumped on every mutation; a handle keys its private read-your-writes
+  // state on it.
   private var mutations: Long = 0L
   def epoch: Long = mutations
 
-  // Ids touched by any WAL op since the last compaction — the
-  // un-compacted tail the reference's IndexAndWal read level merges into
-  // served-index queries (`plan.rs:553-565`). flush() folds state but
-  // does NOT clear these (flushing is not compacting); markCompacted()
-  // does, once the persisted segment + its indexes cover the ops.
-  private var tailIdsLocal: Vector[String] = Vector.empty
-  private var tailIdFrames: Vector[org.apache.spark.sql.DataFrame] = Vector.empty
+  /** The pending entries, in append order. */
+  def pending: Vector[Writer.Entry] = entries
 
-  // WAL ENTRIES since the last compaction, anchored by a driver-known
-  // offset within each entry's (disjoint) offset range — the consistent
-  // prefix `ReadLevel::IndexAndBoundedWal` folds (`plan.rs:553-565`).
-  // Granularity follows the durable log: one element per single-record
-  // op or batch; replaceCommitted swaps the pending elements for the
-  // committed entry (the log committed them as ONE entry). Cleared only
-  // at compaction — flush() folds state but entries must stay readable
-  // as a prefix.
-  private var tailEntries:
-    Vector[(Long, Either[LogOp, Dataset[LogOp]])] = Vector.empty
+  /** Entries not yet folded into [[segment]] by [[flush]]. */
+  def pendingOps: Int = entries.size - folded
+
+  /** Never assign an offset below `offset`. */
+  def advanceTo(offset: Long): Unit =
+    if (offset > nextOffset) nextOffset = offset
 
   private def append(op: String, id: String, doc: Option[String],
       meta: Map[String, String], emb: Option[Seq[Float]] = None): Unit = {
-    pendingOffsets = pendingOffsets :+ nextOffset
-    val rec = LogOp(id, nextOffset, op, doc, meta, emb)
-    wal = wal :+ rec
-    logOps = logOps :+ rec
-    tailIdsLocal = tailIdsLocal :+ id
-    tailEntries = tailEntries :+ (nextOffset, Left(rec))
+    entries = entries :+ ((nextOffset, Left(LogOp(id, nextOffset, op, doc, meta, emb))))
     nextOffset += 1
     mutations += 1
   }
 
-  /** Number of WAL entries since the last compaction — what an
-    * IndexAndBoundedWal bound is measured against.
+  /** Ops awaiting durable-log commit, with their distinct offsets in
+    * append order — the rebase key for the log append. The offsets are
+    * DRIVER-KNOWN (they come from this writer's counter; one per single
+    * op, one per batch), so the entry rebase needs no job and no window:
+    * committed offset = position base + rank in this list. None when the
+    * log is current.
     */
-  def tailEntryCount: Int = tailEntries.size
+  def pendingForLog: Option[(Dataset[LogOp], Seq[Long])] =
+    if (entries.isEmpty) None
+    else Some((Writer.ops(spark, entries), entries.map(_._1)))
 
-  /** The first `n` WAL entries since the last compaction, in log order,
-    * as one op dataset plus their distinct ids — the
-    * `ReadLevel::IndexAndBoundedWal` consistent prefix: ops in later
-    * entries are invisible EVEN ON IDS the prefix touches. None when the
-    * tail is empty or `n <= 0` (that end is IndexOnly).
+  /** The pending ops are durable — the log committed them as one entry, or
+    * a compaction folded them into a segment version.
     */
-  def tailPrefix(n: Int)
-      : Option[(Dataset[LogOp], org.apache.spark.sql.DataFrame)] = {
-    import org.apache.spark.sql.functions.col
-    val prefix = tailEntries.sortBy(_._1).take(math.max(n, 0))
-    if (prefix.isEmpty) None
-    else {
-      val singles = prefix.collect { case (_, Left(op)) => op }
-      val pieces = (if (singles.isEmpty) Nil else Seq(singles.toDS())) ++
-        prefix.collect { case (_, Right(ds)) => ds }
-      val ops = pieces.reduce(_ union _)
-      Some((ops, ops.toDF().select(col("id")).distinct()))
-    }
-  }
-
-  /** Distinct ids touched by WAL ops since the last compaction (None when
-    * every write is covered by the compacted segment). These ids shadow
-    * the served-index leg of an IndexAndWal read and select the
-    * brute-force tail leg's candidates.
-    */
-  def tailIds: Option[org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    if (tailIdsLocal.isEmpty && tailIdFrames.isEmpty) None
-    else {
-      val local =
-        if (tailIdsLocal.isEmpty) Nil
-        else Seq(tailIdsLocal.distinct.toDF("id"))
-      Some((tailIdFrames.map(_.select(col("id"))) ++ local)
-        .reduce(_ union _).distinct())
-    }
-  }
-
-  /** Forget the tail — called at compaction (persist + index rebuild):
-    * the segment and its serving indexes now cover every op.
-    */
-  def markCompacted(): Unit = {
-    tailIdsLocal = Vector.empty
-    tailIdFrames = Vector.empty
-    tailEntries = Vector.empty
-    // the persisted segment is now the durable copy of any op that never
-    // reached the log — nothing left to commit there
-    logOps = Vector.empty
-    logBatches = Vector.empty
-    pendingOffsets = Vector.empty
-    foldedPending = false
-  }
-
-  /** Ops awaiting durable-log commit (everything appended since the last
-    * [[replaceCommitted]]/[[markCompacted]], whether or not a flush()
-    * folded them locally), with their distinct offsets in append order —
-    * the rebase key for the log append. The offsets are DRIVER-KNOWN
-    * (they come from this writer's counter; one per single op, one per
-    * batch), so the entry rebase needs no job and no window: committed
-    * offset = position base + rank in this list. None when the log is
-    * current. NOT contiguous in general — a loadCommitted of another
-    * writer's entry jumps the counter mid-accumulation.
-    */
-  def pendingForLog: Option[(Dataset[LogOp], Seq[Long])] = {
-    if (logOps.isEmpty && logBatches.isEmpty) None
-    else {
-      val pieces = (if (logOps.isEmpty) Nil else Seq(logOps.toDS())) ++
-        logBatches
-      Some((pieces.reduce(_ union _), pendingOffsets))
-    }
-  }
-  // offsets consumed by pending-for-log ops, in append order (ascending:
-  // the counter only grows)
-  private var pendingOffsets: Vector[Long] = Vector.empty
-
-  // Set when a flush() folds still-pending-for-log ops into the segment:
-  // those records then carry PRE-rebase first_offsets that
-  // [[replaceCommitted]] must remap, or the live handle's offset order
-  // diverges from a cold reopen's (which only ever sees rebased offsets).
-  private var foldedPending: Boolean = false
-
-  /** The durable log committed the pending ops as one entry whose rows
-    * are `entry` (offsets REBASED into the entry's position range via
-    * `rebase`, max `maxOffset`): swap the in-memory pending pieces for
-    * the entry so state folds from the durable copy at its committed
-    * order. Content is identical and offsets moved monotonically (same
-    * relative order); records a flush already folded into the segment at
-    * pre-rebase offsets are remapped through `rebase`, so offset_id
-    * order (get pagination) is identical between this live handle and a
-    * cold reopen replaying the log.
-    */
-  def replaceCommitted(entry: Dataset[LogOp], maxOffset: Long,
-      rebase: Map[Long, Long] = Map.empty): Unit = {
-    if (foldedPending && rebase.nonEmpty) {
-      import org.apache.spark.sql.functions.{coalesce, col, element_at, typedLit}
-      segment = segment.toDF()
-        .withColumn("first_offset",
-          coalesce(element_at(typedLit(rebase), col("first_offset")),
-            col("first_offset")))
-        .as[Rec]
-    }
-    foldedPending = false
-    // surgical: drop only the PENDING pieces (wal ⊆ logOps always — flush
-    // clears wal but not logOps; batches may hold other writers' loaded
-    // entries and earlier commits, which keep serving the view)
-    wal = Vector.empty
-    batches = batches.filterNot(b => logBatches.exists(_ eq b)) :+ entry
-    // the pending elements committed as ONE durable entry — swap them
-    // (pending Lefts carry offsets in pendingOffsets; pending Rights are
-    // the logBatches pieces) for the rebased entry, keeping entry
-    // granularity aligned with the log
-    val pendingOffs = pendingOffsets.toSet
-    tailEntries = tailEntries.filterNot {
-      case (_, Left(op)) => pendingOffs.contains(op.log_offset)
-      case (_, Right(ds)) => logBatches.exists(_ eq ds)
-    } :+ ((maxOffset, Right(entry)))
-    logOps = Vector.empty
-    logBatches = Vector.empty
-    pendingOffsets = Vector.empty
-    if (maxOffset >= nextOffset) nextOffset = maxOffset + 1
+  def committed(): Unit = {
+    entries = Vector.empty
+    folded = 0
     mutations += 1
-  }
-
-  /** Fold another writer's committed log entry into this writer's view
-    * (replay at open, or a refresh before an append claims its slot).
-    * The entry is already durable: it joins the batch fold and the
-    * un-compacted tail, but NOT the pending-for-log set.
-    */
-  def loadCommitted(entry: Dataset[LogOp], maxOffset: Long): Unit = {
-    import org.apache.spark.sql.functions.col
-    batches = batches :+ entry
-    tailIdFrames = tailIdFrames :+ entry.toDF().select(col("id"))
-    tailEntries = tailEntries :+ ((maxOffset, Right(entry)))
-    if (maxOffset >= nextOffset) nextOffset = maxOffset + 1
-    mutations += 1
-  }
-
-  /** Current state RESTRICTED to `ids` — folds only those ids' segment
-    * rows + pending ops (both sides semi-joined before the fold), so the
-    * IndexAndWal tail leg costs O(|tail|), independent of segment size —
-    * the reference's materialized-log read, which never touches the
-    * compacted blockfiles. Does not flush.
-    */
-  def stateOf(ids: org.apache.spark.sql.DataFrame): Dataset[Rec] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val idCol = broadcast(ids.select(col("id")))
-    val segIds = segment.join(idCol, Seq("id"), "left_semi").as[Rec]
-    if (wal.isEmpty && batches.isEmpty) segIds
-    else {
-      val all = (wal.toDS() +: batches).reduce(_ union _)
-        .join(idCol, Seq("id"), "left_semi").as[LogOp]
-      Materialize(spark, all, Some(Materialize.segmentAsLog(spark, segIds)))
-    }
   }
 
   /** Bulk append — the client-batch ingestion path: one `op` per record
@@ -235,8 +79,8 @@ final class Writer(spark: SparkSession, var segment: Dataset[Rec],
     * `service_based_frontend.rs:2079`), so all rows share the batch's
     * log offset; ordering ACROSS batches and single-record ops comes
     * from the monotonically increasing offset base.
-    */
-  /** INVARIANT consumers rely on: every row of one batch shares this one
+    *
+    * INVARIANT consumers rely on: every row of one batch shares this one
     * offset AND one op kind — same-offset ties across different op kinds
     * cannot exist (log consumers like revision_history order same-offset
     * rows by op kind, which is only safe because of this). Duplicate ids
@@ -246,7 +90,6 @@ final class Writer(spark: SparkSession, var segment: Dataset[Rec],
     */
   def addBatch(ops: org.apache.spark.sql.DataFrame, op: String = "Add"): Unit = {
     import org.apache.spark.sql.functions._
-    pendingOffsets = pendingOffsets :+ nextOffset
     val base = nextOffset
     nextOffset += 1
     val emb =
@@ -259,10 +102,7 @@ final class Writer(spark: SparkSession, var segment: Dataset[Rec],
       col("document").cast("string").as("document"),
       col("meta").cast("map<string,string>").as("meta"),
       emb.as("embedding")).as[LogOp]
-    batches = batches :+ batch
-    logBatches = logBatches :+ batch
-    tailIdFrames = tailIdFrames :+ ops.select(col("id").cast("string").as("id"))
-    tailEntries = tailEntries :+ ((base, Right(batch)))
+    entries = entries :+ ((base, Right(batch)))
     mutations += 1
   }
 
@@ -280,15 +120,14 @@ final class Writer(spark: SparkSession, var segment: Dataset[Rec],
   /** Predicate delete — the reference's `delete(where=..., where_document=
     * ...)` (`service_based_frontend.rs:2595-2652`), which resolves the
     * predicate to matching ids against the CURRENT read-your-writes state
-    * (pending WAL applied) and then deletes by id, exactly as the
+    * `live` (pending WAL applied) and then deletes by id, exactly as the
     * reference's frontend issues a Get before the delete. The matched id
     * set is bounded by the predicate (the reference materializes the same
-    * list); ids append in sorted order so WAL offsets stay deterministic.
-    * Returns the number of records deleted.
+    * list). Returns the number of records deleted.
     */
-  def deleteWhere(where: graft.model.Where.Expr): Long = {
+  def deleteWhere(live: Dataset[Rec], where: graft.model.Where.Expr): Long = {
     import org.apache.spark.sql.functions._
-    val state = flush().toDF()
+    val state = live.toDF()
     val none = map_from_arrays(array(), array())
     // decode the WAL map's tagged typed entries so a predicate on
     // int/float/bool/array metadata matches the values the user wrote —
@@ -314,44 +153,46 @@ final class Writer(spark: SparkSession, var segment: Dataset[Rec],
     n
   }
 
-  def pendingOps: Int = wal.size + batches.size
+  /** [[deleteWhere]] against this writer's own folded state. */
+  def deleteWhere(where: graft.model.Where.Expr): Long =
+    deleteWhere(flush(), where)
 
-  /** Materialize WAL over the segment; returns and swaps in the new state.
-    * The folded state is cached (memory-and-disk, bounded by the live
-    * working set — the same boundedness the fold itself relies on): a
-    * write→read→write→read sequence otherwise re-executes every prior
-    * fold's plan on each action, turning N flush epochs into O(N²) fold
-    * work. The superseded segment is unpersisted so epochs don't
-    * accumulate in the cache.
+  /** Materialize the unfolded ops over the segment; returns and swaps in
+    * the new state. Nothing is cached: a caller that reads the state
+    * repeatedly persists it under an owner (a handle reads through a
+    * [[ReaderState]], which does).
     */
-  // the epoch superseded at the LAST flush — still cached, because the
-  // current epoch's first action folds from it; retired one flush later
-  private var retiring: Option[Dataset[Rec]] = None
-
   def flush(): Dataset[Rec] = {
-    if (wal.nonEmpty || batches.nonEmpty) {
-      if (logOps.nonEmpty || logBatches.nonEmpty) foldedPending = true
-      val all = (wal.toDS() +: batches).reduce(_ union _)
-      // Unpersist DEFERRED one epoch: dropping the old cache before the
-      // new epoch materializes would make its first action replay the
-      // whole fold chain — the O(N²) the cache exists to prevent. By the
-      // time epoch N+1 starts, epoch N has been evaluated (flush is only
-      // called on a read or a compaction), so N−1 can go; at most two
-      // epochs are ever cached, no eager job is spent.
-      retiring.foreach(_.unpersist())
-      retiring = Some(segment)
-      segment = Materialize(spark, all,
-        Some(Materialize.segmentAsLog(spark, segment))).persist()
-      wal = Vector.empty
-      batches = Vector.empty
+    if (pendingOps > 0) {
+      segment = Writer.foldOver(spark, segment, entries.drop(folded))
+      folded = entries.size
     }
     segment
   }
 }
 
 object Writer {
+  /** One WAL piece, anchored by a driver-known offset inside its range: a
+    * single op, or a batch or committed entry.
+    */
+  type Entry = (Long, Either[LogOp, Dataset[LogOp]])
+
   def empty(spark: SparkSession): Writer = {
     import spark.implicits._
     new Writer(spark, spark.emptyDataset[Rec])
   }
+
+  /** The ops of `entries` as one dataset. */
+  def ops(spark: SparkSession, entries: Seq[Entry]): Dataset[LogOp] = {
+    import spark.implicits._
+    val singles = entries.collect { case (_, Left(op)) => op }
+    ((if (singles.isEmpty) Nil else Seq(singles.toDS())) ++
+      entries.collect { case (_, Right(ds)) => ds }).reduce(_ union _)
+  }
+
+  /** `entries` materialized over `base`. */
+  def foldOver(spark: SparkSession, base: Dataset[Rec],
+      entries: Seq[Entry]): Dataset[Rec] =
+    Materialize(spark, ops(spark, entries),
+      Some(Materialize.segmentAsLog(spark, base)))
 }

@@ -217,11 +217,11 @@ object Materialize {
     * plan survives a segment 1000× the executor memory.
     */
   def compactionMerge(segment: DataFrame, log: DataFrame): DataFrame = {
-    // cache the folded WAL tail (reused by the ops join, the present-id
-    // probe, and the fresh-id anti-join); cacheOnce so merging a shared
-    // tail twice (e.g. a fork's parent branch) doesn't re-register the
-    // plan with the CacheManager
-    val ops = graft.sources.CollectionStore.cacheOnce(opsById(log))
+    // the folded WAL tail feeds the ops join, the present-id probe and
+    // the fresh-id anti-join; the three legs share its one exchange
+    // within the query (exchange reuse), so the returned plan owns no
+    // cache that would outlive it
+    val ops = opsById(log)
     val seg =
       if (segment.columns.contains("embedding")) segment
       else segment.withColumn("embedding", lit(null).cast("array<float>"))

@@ -353,14 +353,14 @@ object PipelinePack extends QueryPack {
     "pl_temperature_mix" -> { (s, d) =>
       val alpha = 0.3
       val nTok = size(TextStats.tokens(col("text"))).cast("long")
-      // persisted: the |languages|-row aggregate feeds three legs (total,
-      // normalizer, final projection) — without the cache the corpus
-      // scan + tokenize lineage would run three times
+      // the |languages|-row aggregate feeds three legs (total,
+      // normalizer, final projection); they share one exchange within
+      // the query (exchange reuse), so the corpus scan + tokenize runs
+      // once with no cache for a lazily returned plan to leave behind
       val byLang = Tables.documents(s, d)
         .select(col("lang"), nTok.as("n_tok"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok"))
-        .persist()
       val t1 = byLang.agg(sum(col("tok")).as("total_tok"))
       val total = byLang.crossJoin(broadcast(t1))
         .agg(max(col("total_tok")).as("total_tok"),

@@ -971,6 +971,22 @@ object CollectionStore {
   private def newestPublished(root: String, markers: Seq[Long]): Long =
     markers.reverseIterator.find(isPublished(root, _)).getOrElse(0L)
 
+  /** The newest PUBLISHED version with its marker text (`(0, "")` when
+    * none) — the marker's per-publish token names this one version, so a
+    * collection deleted and recreated at the same path never repeats it.
+    */
+  def currentMarker(root: String): (Long, String) =
+    versionMarkers(root).reverseIterator
+      .map(v => v -> cs.read(s"${versionsDir(root)}/v$v"))
+      .collectFirst { case (v, Some(b)) if isPublish(b) =>
+        (v, new String(b, "UTF-8")) }
+      .getOrElse((0L, ""))
+
+  /** Version `v`'s marker text, when `v` is published. */
+  def versionMarker(root: String, v: Long): Option[String] =
+    cs.read(s"${versionsDir(root)}/v$v").filter(isPublish)
+      .map(new String(_, "UTF-8"))
+
   /** The newest PUBLISHED version (0 when none): void markers never
     * count. Usually one marker read — the top marker is a void only
     * after a swept commit.

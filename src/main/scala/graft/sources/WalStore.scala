@@ -96,11 +96,12 @@ object WalStore {
       val m = obs.get
       val cnt = m.get("cnt").collect { case l: Long => l }.getOrElse(0L)
       val mo = m.get("mo").collect { case l: Long => l }.getOrElse(-1L)
-      // only a void can stand in for this marker, and its bytes differ
-      // from any non-empty entry's; an empty entry (a read-only fence)
-      // matches the void byte-for-byte, and both replay as nothing — so
-      // the byte-compare on a mis-reported publish needs no token here
-      s"""{"count": $cnt, "max_offset": $mo}""".getBytes("UTF-8")
+      // the per-attempt token keeps the byte-compare on a mis-reported
+      // publish sound, and makes the marker name this one publish: a
+      // collection deleted and recreated at the same path never repeats
+      // a marker, so readers can key state on marker text
+      (s"""{"count": $cnt, "max_offset": $mo, """ +
+        s""""token": "${java.util.UUID.randomUUID}"}""").getBytes("UTF-8")
     }
 
   /** `(count, max_offset)` from a published entry's marker; None when the
@@ -138,6 +139,31 @@ object WalStore {
     }
     (indexed, pending)
   }
+
+  /** Published positions `after+1, after+2, …` through `through`, each
+    * with its marker text, stopping at the first unpublished position —
+    * or at an existing but unparseable marker, a publish in flight on a
+    * store without atomic content visibility (consuming past it would
+    * skip its ops). One marker read per position: the walk a reader
+    * state's key is made of.
+    */
+  def publishedMarkers(root: String, after: Long,
+      through: Long = Long.MaxValue): Vector[(Long, String)] = {
+    val out = Vector.newBuilder[(Long, String)]
+    var n = after + 1
+    var more = true
+    while (more && n <= through) {
+      cs.read(markerPath(root, n)).filter(parseMeta(_).isDefined) match {
+        case Some(b) => out += ((n, new String(b, "UTF-8"))); n += 1
+        case None => more = false
+      }
+    }
+    out.result()
+  }
+
+  /** `(count, max_offset)` of a marker read by [[publishedMarkers]]. */
+  def markerMeta(marker: String): (Long, Long) =
+    parseMeta(marker.getBytes("UTF-8")).get
 
   /** Published positions `after+1, after+2, …` up to (not through) the
     * first unpublished one — the contiguous prefix a reader may consume.
