@@ -47,17 +47,12 @@ object PlanDump {
       ("Compaction at the 100-TB shape: the WAL tail folds into per-id op " +
         "arrays (one shuffle on the SMALL side), then the segment scan " +
         "broadcast-joins the op table — zero exchanges above the segment " +
-        "scan, so the plan is invariant to segment size. (r3's reported " +
-        "2.65->4.96s regression did not reproduce under repeated warm " +
-        "measurement — min 1.28s in r4 after the op-table cache was " +
-        "guarded against CacheManager re-registration; the r3 number was " +
-        "a host stall. r5's 2.06->4.97s likewise did not reproduce in r6: " +
-        "the same binary measures 1.59s min-of-2 in isolation and 1.36s " +
-        "in the full r6 suite, and none of r5's six touched files are on " +
-        "this query's code path — full-suite context, not this plan. The " +
-        "r5 ADVICE mechanism — flush() unpersisting the prior epoch " +
-        "before the new one materializes — was real and is fixed, but it " +
-        "sits on the Writer path, which this query does not use.)"),
+        "scan, so the plan is invariant to segment size. The op table is " +
+        "not cached: its three consumers (the ops join, the present-id " +
+        "probe, the fresh-id anti-join) read the same columns under the " +
+        "same id filter, so at execution the fold's shuffle runs once and " +
+        "the other two legs read it as a ReusedExchange (the unexecuted " +
+        "plan below still draws each leg)."),
     "wp_wal_durable" ->
       ("Durable-WAL crash-recovery read: a fresh handle folds the segment " +
         "with the committed log entries replayed as plain parquet scans " +

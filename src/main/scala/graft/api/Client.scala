@@ -549,34 +549,23 @@ final class CollectionHandle(spark: SparkSession,
     }
   }
 
-  // The handle's references on the reader states it reads — the shared
-  // committed state and, with local writes pending, its private layer.
-  // Released by close(), or after a handle never closed is collected.
-  private val lease = new CollectionHandle.Lease(ReaderStates.open(spark, ref))
-  private val cleanable = ReaderStates.register(this, lease)
-
-  /** Release this handle's reader states. A state shared with other
-    * handles stays until the last of them lets go; this handle's reads
-    * fail afterwards.
-    */
-  def close(): Unit = cleanable.clean()
+  // The reader state this handle reads — the shared committed state — and,
+  // with local writes pending, its private layer over it (held by this
+  // handle until its writes commit or change).
+  @volatile private var committed: ReaderState = ReaderStates.open(spark, ref)
+  private var local: Option[ReaderState] = None
+  private val states = new Object
 
   /** Segment version this handle opened against — the OCC expectation
     * its next compaction commits with (`conditional_transaction.rs`).
     * Zero while the collection reads no segment of its own (never
     * compacted, or a fork still reading its source's).
     */
-  private var baseVersion: Long = lease.committed.segment
+  private var baseVersion: Long = committed.segment
     .filter(_.root == ref.dataRoot).map(_.version).getOrElse(0L)
 
   // this handle's not-yet-committed ops
   private val writer: Writer = Writer.empty(spark)
-
-  private def committed: ReaderState = {
-    if (lease.closed)
-      throw new IllegalStateException(s"collection handle ${ref.name} is closed")
-    lease.committed
-  }
 
   /** Durable-log prefix this handle's committed state folds: starts at
     * the mark the opened segment recorded at compaction, advances as
@@ -585,46 +574,44 @@ final class CollectionHandle(spark: SparkSession,
     * prefix — the only prefix a reader may consume (WalStore's read
     * contract).
     */
-  private def walSeen: Long = lease.synchronized(committed.head)
+  private def walSeen: Long = committed.head
 
-  /** Switch to committed state `next` (acquired for this handle). */
-  private def moveTo(next: ReaderState): Unit = lease.synchronized {
-    val prev = committed
-    if (next eq prev) prev.release()
-    else {
-      lease.committed = next
-      lease.local.foreach(_.release())
-      lease.local = None
-      prev.release()
+  /** Switch to committed state `next`; the private layer over the old one
+    * is released (its ops are committed).
+    */
+  private def moveTo(next: ReaderState): Unit = states.synchronized {
+    if (next ne committed) {
+      committed = next
+      local.foreach(_.release())
+      local = None
     }
   }
 
-  /** The state a read runs over, acquired for the caller: the committed
-    * state, or with local writes pending, this handle's private layer
-    * over it (built once per writer epoch).
+  /** The state a read runs over: the committed state, or with local
+    * writes pending, this handle's private layer over it (built once per
+    * writer epoch).
     */
-  private def acquireState(): ReaderState = lease.synchronized {
-    val c = committed
-    val st =
-      if (writer.pending.isEmpty) c
-      else lease.local.filter(_.epoch == writer.epoch).getOrElse {
-        lease.local.foreach(_.release())
-        val l = c.layer(writer.pending, writer.epoch)
-        lease.local = Some(l)
-        l
-      }
-    require(st.acquire(), "reading a retired state")
-    st
+  private def readState(): ReaderState = states.synchronized {
+    if (writer.pending.isEmpty) committed
+    else local.filter(_.epoch == writer.epoch).getOrElse {
+      local.foreach(_.release())
+      val l = committed.layer(writer.pending, writer.epoch)
+      local = Some(l)
+      l
+    }
   }
 
-  /** Run `f` over the current state, holding it until `f` returns. */
-  private def reading[T](f: ReaderState => T): T = {
-    val st = acquireState()
-    try f(st) finally st.release()
+  /** Run `f` over the current state, holding it until `f` returns (a
+    * retired state is read as it is, unpersisted).
+    */
+  private[graft] def reading[T](f: ReaderState => T): T = {
+    val st = readState()
+    val held = st.acquire()
+    try f(st) finally if (held) st.release()
   }
 
   /** The state a read would run over now (tests). */
-  private[graft] def readerState: ReaderState = reading(identity)
+  private[graft] def readerState: ReaderState = readState()
 
   /** Fold committed log entries this handle has not seen (other writers'
     * appends) into its committed state, stopping at the first
@@ -1130,7 +1117,7 @@ final class CollectionHandle(spark: SparkSession,
       case ReadLevel.IndexAndBoundedWal(_) => return None
       case _ => ()
     }
-    val dataRoot = segment.root
+    val indexRoot = segment.dir
     lazy val seg = segment.records
     def toIds(cand: DataFrame): DataFrame =
       seg.select(col("offset_id"), col("id"))
@@ -1159,29 +1146,29 @@ final class CollectionHandle(spark: SparkSession,
     def probe(k: String, cfg: Catalog.KeyConfig,
         vs: Seq[graft.model.Where.Value]): DataFrame =
       building(s"inv:$k") {
-        CollectionStore.metaInvertedServing(seg, dataRoot, k, cfg.valueType,
+        CollectionStore.metaInvertedServing(seg, indexRoot, k, cfg.valueType,
           keyTag = segment.metaTag, knownCount = segN)
       } {
-        graft.operators.MetaInverted.candidateIds(spark, dataRoot, k,
+        graft.operators.MetaInverted.candidateIds(spark, indexRoot, k,
           vs.map(graft.operators.MetaInverted.renderValue))
       }
     def rangeProbe(k: String, cfg: Catalog.KeyConfig,
         leaves: Seq[graft.operators.MetaRange.Leaf]): DataFrame =
       building(s"rng:$k") {
-        CollectionStore.metaRangeServing(seg, dataRoot, k, cfg.valueType,
+        CollectionStore.metaRangeServing(seg, indexRoot, k, cfg.valueType,
           keyTag = segment.metaTag, knownCount = segN)
       } {
-        graft.operators.MetaRange.candidateIds(spark, dataRoot, k, leaves)
+        graft.operators.MetaRange.candidateIds(spark, indexRoot, k, leaves)
       }
     val ftsOk = ref.schema.documentFts
     def ftsProbe(dnf: Seq[Seq[String]]): DataFrame =
       building("fts") {
         CollectionStore.ftsServing(
           seg.select(col("offset_id").as("doc_id"),
-            col("document").as("text")), dataRoot,
+            col("document").as("text")), indexRoot,
           keyTag = segment.metaTag, knownCount = segN)
       } {
-        graft.operators.Fts.candidateIdsDnf(spark, dataRoot, dnf)
+        graft.operators.Fts.candidateIdsDnf(spark, indexRoot, dnf)
           .select(col("doc_id").as("offset_id"))
       }
     def andDocNeedle(c: Where.Expr): Boolean = c match {
@@ -1472,7 +1459,7 @@ final class CollectionHandle(spark: SparkSession,
           case Some(sc) => seg.served(s"ivf2-$nCentroids-$nr-" +
               s"${sc.splitThreshold}-${sc.mergeThreshold}") {
             CollectionStore.ivfRebalancedServing(
-              vecs, seg.root, nCentroids, nr,
+              vecs, seg.dir, nCentroids, nr,
               splitThreshold = sc.splitThreshold,
               mergeThreshold = sc.mergeThreshold, keyTag = seg.tag)
           }
@@ -1488,7 +1475,7 @@ final class CollectionHandle(spark: SparkSession,
       space: String): graft.operators.Ivf.Model =
     seg.served(s"ivf-$nCentroids-$nReplica-$space") {
       CollectionStore.ivfServing(
-        seg.records.select(col("offset_id"), col("embedding")), seg.root,
+        seg.records.select(col("offset_id"), col("embedding")), seg.dir,
         nCentroids, nReplica, space = space, keyTag = seg.tag)
     }
 
@@ -1525,7 +1512,7 @@ final class CollectionHandle(spark: SparkSession,
         val codes = seg.served(s"rotated-$dm") {
           CollectionStore.rotatedCodesServing(
             seg.records.select(col("offset_id"), col("embedding")),
-            seg.root, dm, keyTag = seg.tag)
+            seg.dir, dm, keyTag = seg.tag)
         }
         val (tail, stale, extra) = tailAndStale(st, readLevel)
         new Collection(seg.records).queryAnnQuantized(model, codes, queries, k,
@@ -1565,7 +1552,7 @@ final class CollectionHandle(spark: SparkSession,
         val codes = seg.served(s"mb-$bits-$lo-$hi") {
           CollectionStore.mbCodesServing(
             seg.records.select(col("offset_id"), col("embedding")),
-            seg.root, bits, lo, hi, keyTag = seg.tag)
+            seg.dir, bits, lo, hi, keyTag = seg.tag)
         }
         val (tail, stale, extra) = tailAndStale(st, readLevel)
         new Collection(seg.records).queryAnnQuantizedMb(model, codes, queries, k,
@@ -1602,7 +1589,7 @@ final class CollectionHandle(spark: SparkSession,
       case Some(seg) =>
         val root = seg.served(s"hnsw-$m-$efc-$sp") {
           CollectionStore.hnswServing(
-            seg.records.select(col("offset_id"), col("embedding")), seg.root,
+            seg.records.select(col("offset_id"), col("embedding")), seg.dir,
             m = m, efConstruction = efc, space = sp, keyTag = seg.tag)
         }
         val (tail, stale, extra) = tailAndStale(st, readLevel)
@@ -1637,9 +1624,9 @@ final class CollectionHandle(spark: SparkSession,
       case Some(segment) if served &&
           segment.records.columns.contains("meta_sparse") =>
         val seg = segment.records
-        val dataRoot = segment.root
+        val indexRoot = segment.dir
         segment.served(s"sparse-$key") {
-          CollectionStore.sparseServing(seg, key, dataRoot,
+          CollectionStore.sparseServing(seg, key, indexRoot,
             keyTag = segment.metaTag, knownCount = segment.meta.map(_._3))
         }
         val (tail, stale, _) = tailAndStale(st, readLevel)
@@ -1650,7 +1637,7 @@ final class CollectionHandle(spark: SparkSession,
           col("offset_id") + shift))
         val staleSeg = stale.map(ids => seg.join(ids, Seq("id"), "left_semi")
           .select(col("offset_id").as("doc_id")))
-        val top = CollectionStore.sparseServedSearch(spark, dataRoot, key,
+        val top = CollectionStore.sparseServedSearch(spark, indexRoot, key,
           query, k, tail = tailShift, staleDocs = staleSeg)
         val segNames = seg.select(col("offset_id"), col("id"))
         val names = tailShift
@@ -1829,11 +1816,12 @@ final class CollectionHandle(spark: SparkSession,
         baseVersion = next
         // this IS the compaction point: the stored segment now covers
         // every op, so the WAL tail resets and the per-JVM index-open
-        // memos drop — the next served read re-checks build markers
-        // against the NEW segment (stale-keyed indexes rebuild there).
-        // The pending ops are durable in the segment, and the handle
-        // moves to the new version's state: the old one retires once
-        // its last reader lets go.
+        // memos under the root drop. The new version's serving indexes
+        // build under its own directory on its first served read, so
+        // readers of the old version keep theirs. The pending ops are
+        // durable in the segment, and the handle moves to the new
+        // version's state: the old one retires once the reads in
+        // flight over it end.
         CollectionStore.invalidateRoot(ref.dataRoot)
         writer.committed()
         moveTo(ReaderStates.compacted(spark, ref, next, through))
@@ -1995,20 +1983,3 @@ final class CollectionHandle(spark: SparkSession,
     }
 }
 
-object CollectionHandle {
-  /** A handle's references on its reader states: the committed state and
-    * its private layer. Released once, on close() or after collection,
-    * so it must not reach the handle.
-    */
-  private final class Lease(@volatile var committed: ReaderState)
-      extends Runnable {
-    @volatile var local: Option[ReaderState] = None
-    @volatile var closed = false
-    def run(): Unit = synchronized {
-      closed = true
-      local.foreach(_.release())
-      local = None
-      committed.release()
-    }
-  }
-}

@@ -94,16 +94,6 @@ final class HttpFace(spark: SparkSession, root: String,
     client(t, d)
   }
 
-  // Handles a request opens, closed when it ends: a per-request handle
-  // must not hold its reader state until the collector finds it.
-  private val requestHandles = new ThreadLocal[List[CollectionHandle]] {
-    override def initialValue(): List[CollectionHandle] = Nil
-  }
-  private def opened(h: CollectionHandle): CollectionHandle = {
-    requestHandles.set(h :: requestHandles.get)
-    h
-  }
-
   def port: Int = server.getAddress.getPort
 
   def start(): Int = { server.start(); port }
@@ -356,7 +346,7 @@ final class HttpFace(spark: SparkSession, root: String,
   private def conditionalGet(ex: HttpExchange, t: String, d: String,
       c: String): Unit = {
     val j = JsonMethods.parse(readBody(ex))
-    val h = opened(readClient(t, d).getCollection(c))
+    val h = readClient(t, d).getCollection(c)
     val token = (j \ "read_token").toOption.map(_.extract[Long])
     val tx = h.beginTransaction(token)
     val include = (j \ "include").toOption
@@ -377,7 +367,7 @@ final class HttpFace(spark: SparkSession, root: String,
   private def conditionalCommit(ex: HttpExchange, t: String, d: String,
       c: String): Unit = {
     val j = JsonMethods.parse(readBody(ex))
-    val h = opened(readClient(t, d).getCollection(c))
+    val h = readClient(t, d).getCollection(c)
     val tx = h.beginTransaction(
       (j \ "read_token").toOption.map(_.extract[Long]))
     (j \ "read_ids").toOption.map(_.extract[Seq[String]])
@@ -563,8 +553,8 @@ final class HttpFace(spark: SparkSession, root: String,
         case ("GET", CollsCountR(t, d)) =>
           respond(ex, 200, s"""{"count":${readClient(t, d).countCollections()}}""")
         case ("GET", CrnR(crn)) =>
-          val h = opened(client("default_tenant", "default_database")
-            .getCollectionByCrn(crn))
+          val h = client("default_tenant", "default_database")
+            .getCollectionByCrn(crn)
           respond(ex, 200, JsonMethods.compact(
             JsonMethods.render(collJson(h, h.ref.tenant, h.ref.database))))
         case ("POST", CollsR(t, d)) =>
@@ -581,8 +571,8 @@ final class HttpFace(spark: SparkSession, root: String,
           if (existed && !goc)
             respond(ex, 409, s"""{"error":"collection [$name] exists"}""")
           else {
-            val h = opened(if (existed) c.getCollection(name)
-              else c.createCollection(name, metadata = meta))
+            val h = if (existed) c.getCollection(name)
+              else c.createCollection(name, metadata = meta)
             val JObject(fields) = collJson(h, t, d): @unchecked
             respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
               fields :+ ("created" -> (JBool(!existed): JValue))))))
@@ -597,7 +587,7 @@ final class HttpFace(spark: SparkSession, root: String,
               .slice(off, (off.toLong + lim).min(Int.MaxValue).toInt)
               .map(n => JObject("name" -> jStr(n))).toList))))
         case ("GET", CollR(t, d, c)) =>
-          val h = opened(readClient(t, d).getCollection(c))
+          val h = readClient(t, d).getCollection(c)
           respond(ex, 200,
             JsonMethods.compact(JsonMethods.render(collJson(h, t, d))))
         case ("GET", ByIdR(t, d, id)) =>
@@ -605,7 +595,7 @@ final class HttpFace(spark: SparkSession, root: String,
           // resolves a collection UUID inside the tenant/database scope;
           // this engine's stable collection identifier IS its name, so
           // the id segment resolves through the same name lookup
-          val h = opened(readClient(t, d).getCollection(id))
+          val h = readClient(t, d).getCollection(id)
           respond(ex, 200,
             JsonMethods.compact(JsonMethods.render(collJson(h, t, d))))
         case ("DELETE", CollR(t, d, c)) =>
@@ -613,9 +603,9 @@ final class HttpFace(spark: SparkSession, root: String,
           respond(ex, 200, "{}")
         case ("GET", OpR(t, d, c, "count")) =>
           respond(ex, 200,
-            s"""{"count":${opened(readClient(t, d).getCollection(c)).count()}}""")
+            s"""{"count":${readClient(t, d).getCollection(c).count()}}""")
         case ("GET", OpR(t, d, c, "indexing_status")) =>
-          val st = opened(readClient(t, d).getCollection(c)).indexingStatus()
+          val st = readClient(t, d).getCollection(c).indexingStatus()
           respond(ex, 200,
             s"""{"op_indexing_progress":${st.opIndexingProgress},""" +
             s""""num_unindexed_ops":${st.numUnindexedOps},""" +
@@ -623,7 +613,7 @@ final class HttpFace(spark: SparkSession, root: String,
             s""""total_ops":${st.totalOps}}""")
         case ("POST", OpR(t, d, c, op))
             if op == "add" || op == "upsert" || op == "update" =>
-          val h = opened(readClient(t, d).getCollection(c))
+          val h = readClient(t, d).getCollection(c)
           val df = recordsDf(parseRecords(JsonMethods.parse(readBody(ex))))
           op match {
             case "add" => h.add(df)
@@ -634,7 +624,7 @@ final class HttpFace(spark: SparkSession, root: String,
           respond(ex, 201, s"""{"log_position":$pos}""")
         case ("POST", OpR(t, d, c, "delete")) =>
           val j = JsonMethods.parse(readBody(ex))
-          val h = opened(readClient(t, d).getCollection(c))
+          val h = readClient(t, d).getCollection(c)
           val n = h.delete(
             ids = (j \ "ids").toOption.map(_.extract[Seq[String]]),
             where = whereField(j, "where"),
@@ -643,7 +633,7 @@ final class HttpFace(spark: SparkSession, root: String,
           respond(ex, 200, s"""{"deleted":$n}""")
         case ("POST", OpR(t, d, c, "get")) =>
           val j = JsonMethods.parse(readBody(ex))
-          val h = opened(readClient(t, d).getCollection(c))
+          val h = readClient(t, d).getCollection(c)
           val include = (j \ "include").toOption
             .map(_.extract[Seq[String]])
             .getOrElse(Seq("documents", "metadatas"))
@@ -685,7 +675,7 @@ final class HttpFace(spark: SparkSession, root: String,
             JsonMethods.render(getResponse(rows, include))))
         case ("POST", OpR(t, d, c, "query")) =>
           val j = JsonMethods.parse(readBody(ex))
-          val h = opened(readClient(t, d).getCollection(c))
+          val h = readClient(t, d).getCollection(c)
           import spark.implicits._
           val queries = (j \ "query_embeddings").extract[Seq[Seq[Double]]]
           // bounds the N in the route's N×k result collect (the
@@ -755,18 +745,18 @@ final class HttpFace(spark: SparkSession, root: String,
           conditionalCommit(ex, t, d, c)
         case ("POST", OpR(t, d, c, "fork")) =>
           val j = JsonMethods.parse(readBody(ex))
-          val h = opened(readClient(t, d).forkCollection(c,
-            (j \ "new_name").extract[String]))
+          val h = readClient(t, d).forkCollection(c,
+            (j \ "new_name").extract[String])
           respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
             "name" -> jStr(h.ref.name),
             "forked_from" -> jStr(c)))))
         case ("PUT", CollR(t, d, c)) =>
           // update_collection: rename and/or replace metadata
           val j = JsonMethods.parse(readBody(ex))
-          val r = opened(readClient(t, d).modifyCollection(c,
+          val r = readClient(t, d).modifyCollection(c,
             newName = (j \ "new_name").toOption.map(_.extract[String]),
             metadata = (j \ "new_metadata").toOption
-              .collect { case o: JObject => collMeta(o) }))
+              .collect { case o: JObject => collMeta(o) })
           respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
             "name" -> jStr(r.ref.name)))))
         case ("POST", FnAttachR(t, d, c)) =>
@@ -806,7 +796,7 @@ final class HttpFace(spark: SparkSession, root: String,
         case ("POST", OpR(t, d, c, "search")) =>
           // the Search WIRE payload parses server-side exactly as the
           // in-process surface does — body passes through verbatim
-          val h = opened(readClient(t, d).getCollection(c))
+          val h = readClient(t, d).getCollection(c)
           val body = readBody(ex)
           val reqs = graft.model.SearchParser.parseMany(body)
           val frames = h.searchAll(body)
@@ -881,12 +871,7 @@ final class HttpFace(spark: SparkSession, root: String,
     (j \ k).toOption.map(w => graft.model.WhereParser.parse(
       JsonMethods.compact(JsonMethods.render(w))))
 
-  server.createContext("/", (ex: HttpExchange) =>
-    try handle(ex)
-    finally {
-      requestHandles.get.foreach(_.close())
-      requestHandles.remove()
-    })
+  server.createContext("/", (ex: HttpExchange) => handle(ex))
   // bounded concurrent serving: the reference admits concurrent requests
   // and rejects past the per-collection quota; request handling here is
   // thread-safe (Spark sessions schedule jobs from many threads, client

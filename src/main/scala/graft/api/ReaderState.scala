@@ -9,14 +9,18 @@ import org.apache.spark.sql.functions._
 /** One published version of a collection's compacted record segment, with
   * the memos every reader state over it shares: the loaded records, the
   * `_segmeta` figures, the content fingerprints that key serving-index
-  * builds, and the opened serving-index handles. Nothing here is
+  * builds, and the opened serving-index handles. The version's serving
+  * indexes live under its own directory ([[dir]]), so a reader of this
+  * version never sees them rebuilt for another. Nothing here is
   * persisted, so a segment needs no retirement of its own.
   */
 private[graft] final class Segment(spark: SparkSession, val root: String,
     val version: Long, val marker: String) {
   import spark.implicits._
 
-  /** The version's directory (the root itself for an unversioned segment). */
+  /** The version's directory (the root itself for an unversioned segment):
+    * its records and the serving indexes built over them.
+    */
   val dir: String = if (version > 0) s"$root/v$version" else root
 
   /** Identity in a reader state's key: the marker's per-publish token
@@ -99,10 +103,12 @@ private[graft] final class Segment(spark: SparkSession, val root: String,
   * never enter the registry.
   *
   * Lifetime is a reference count. The registry holds one while the
-  * version is current, each handle one while it reads the version, and
-  * each read in flight one more. The last release unpersists the fold
-  * and the view — never earlier, so no read runs over a view that was
-  * unpersisted under it.
+  * version is current, and each read in flight one more; a private state
+  * is held by its handle until the handle's writes commit or change. The
+  * last release unpersists the fold and the view — never earlier, so no
+  * read runs over a view that was unpersisted under it. A handle still
+  * reading a retired state reads it unpersisted: the same rows,
+  * recomputed from the lineage.
   */
 private[graft] final class ReaderState private (val spark: SparkSession,
     val ref: Catalog.CollectionRef,
@@ -136,9 +142,12 @@ private[graft] final class ReaderState private (val spark: SparkSession,
   lazy val nextOffset: Long =
     (segment.map(_.nextOffset).toSeq ++ tail.map(_._1 + 1)).foldLeft(0L)(math.max)
 
-  /** This state over `pending` local ops (a handle's writer at `epoch`). */
+  /** This state over `pending` local ops (a handle's writer at `epoch`),
+    * held by the caller.
+    */
   def layer(pending: Vector[Writer.Entry], epoch: Long): ReaderState =
     new ReaderState(spark, ref, segment, walMark, log, Some(this), pending, epoch)
+      .adopt()
 
   /** Read-your-writes live records: the tail folded over the segment (a
     * private state folds its pending ops over its base's fold). Persisted
@@ -287,13 +296,22 @@ private[graft] final class ReaderState private (val spark: SparkSession,
 
   // ---- lifetime ------------------------------------------------------------
 
-  private val refs = new java.util.concurrent.atomic.AtomicInteger(1)
+  private val refs = new java.util.concurrent.atomic.AtomicInteger(0)
   private val owned = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
-  private def own[T](ds: Dataset[T]): Dataset[T] = { owned.add(ds); ds.persist() }
+  /** Persist `ds` for this state's readers — unless the state is retired
+    * (or was never held), whose reads recompute rather than leave a
+    * cache nothing releases.
+    */
+  private def own[T](ds: Dataset[T]): Dataset[T] = owned.synchronized {
+    if (refs.get > 0) { owned.add(ds); ds.persist() } else ds
+  }
+
+  /** The first reference: the registry's, or a private state's handle's. */
+  private[api] def adopt(): this.type = { refs.incrementAndGet(); this }
 
   /** Take one more reference; false once the last was released (the
-    * state is retired and must not be read).
+    * state is retired: read it unpersisted).
     */
   def acquire(): Boolean = {
     var n = refs.get
@@ -303,7 +321,10 @@ private[graft] final class ReaderState private (val spark: SparkSession,
 
   /** Drop one reference; the last unpersists what this state persisted. */
   def release(): Unit =
-    if (refs.decrementAndGet() == 0) owned.forEach(_.unpersist())
+    if (refs.decrementAndGet() == 0) owned.synchronized {
+      owned.forEach(_.unpersist())
+      owned.clear()
+    }
 
   private[graft] def refCount: Int = refs.get
 }
@@ -357,7 +378,7 @@ private[graft] object ReaderState {
   * aliases an old state. A key hit shares the existing state; a miss
   * builds a new one (lazily — no Spark job) and retires the old entry.
   * Retirement is by key move and reference count alone: the old state is
-  * unpersisted when the last handle reading it lets go.
+  * unpersisted when the last read in flight over it ends.
   */
 private[graft] object ReaderStates {
 
@@ -368,33 +389,12 @@ private[graft] object ReaderStates {
   private val live =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), ReaderState]()
 
-  private val cleaner = java.lang.ref.Cleaner.create()
-  // Leases of handles collected without close(), released at the next
-  // registry operation: a collection must not unpersist datasets at an
-  // arbitrary moment, under a reader counting the cache.
-  private val collected = new java.util.concurrent.ConcurrentLinkedQueue[Runnable]()
-
-  /** Release `lease` when `handle` closes (the returned cleanable's
-    * `clean()`) or, failing that, after it is collected.
-    */
-  private[api] def register(handle: AnyRef,
-      lease: Runnable): java.lang.ref.Cleaner.Cleanable = {
-    val cleanable = cleaner.register(handle, () => { collected.add(lease); () })
-    new java.lang.ref.Cleaner.Cleanable {
-      def clean(): Unit = { cleanable.clean(); releaseCollected() }
-    }
-  }
-
-  private def releaseCollected(): Unit =
-    Iterator.continually(collected.poll()).takeWhile(_ != null).foreach(_.run())
-
   /** The state at the collection's current segment version (resolved
     * through the fork chain: a fork reads its source's segment until its
-    * own first compaction) and its WAL head, acquired for the caller. It
-    * costs the version marker, the walmark and the WAL marker reads.
+    * own first compaction) and its WAL head. It costs the version marker,
+    * the walmark and the WAL marker reads.
     */
   def open(spark: SparkSession, ref: Catalog.CollectionRef): ReaderState = {
-    releaseCollected()
     val known = Option(live.get((spark, ref.dataRoot))).toSeq
     val seg = segmentOf(spark, ref, known)
     val ownDir = seg.filter(_.root == ref.dataRoot).map(_.dir)
@@ -408,12 +408,11 @@ private[graft] object ReaderStates {
   /** `st` advanced along the WAL through position `through` (default: the
     * published head), over the SAME segment version — a handle's refresh
     * keeps the version it opened, its compaction's OCC expectation.
-    * Acquired for the caller; `st` itself when nothing new is published.
+    * `st` itself when nothing new is published.
     */
   def advance(st: ReaderState, through: Long = Long.MaxValue): ReaderState = {
-    releaseCollected()
     val more = WalStore.publishedMarkers(st.ref.dataRoot, st.head, through)
-    if (more.isEmpty) { require(st.acquire(), "advancing a retired state"); st }
+    if (more.isEmpty) st
     else {
       val segId = st.segment.map(_.id)
       share(st.spark, st.ref, st.segment, st.walMark,
@@ -429,7 +428,6 @@ private[graft] object ReaderStates {
     */
   def compacted(spark: SparkSession, ref: Catalog.CollectionRef,
       version: Long, walMark: Long): ReaderState = {
-    releaseCollected()
     val marker = CollectionStore.versionMarker(ref.dataRoot, version)
       .getOrElse(throw new IllegalStateException(
         s"collection ${ref.name}: version $version is not published"))
@@ -438,41 +436,44 @@ private[graft] object ReaderStates {
   }
 
   /** Drop the registry's states for data roots matching `dataRoot` (the
-    * collection was deleted); handles still reading one keep it until
-    * they let go.
+    * collection was deleted); reads in flight over one keep it until they
+    * end.
     */
-  def retire(dataRoot: String => Boolean): Unit =
+  def retire(dataRoot: String => Boolean): Unit = live.synchronized {
     live.forEach { (slot, st) =>
       if (dataRoot(slot._2) && live.remove(slot, st)) st.release()
     }
+  }
 
   /** The registry's current state for `dataRoot` (tests). */
   private[graft] def current(spark: SparkSession, dataRoot: String): Option[ReaderState] =
     Option(live.get((spark, dataRoot)))
 
+  /** The registry's state for this key, or a new one — registered unless
+    * `displace` refuses to replace the current entry (then it is read
+    * unpersisted, like a retired state). A new state shares the current
+    * entry's segment when it is the same version, so racing first served
+    * reads of one version open its indexes once.
+    */
   private def share(spark: SparkSession, ref: Catalog.CollectionRef,
       seg: Option[Segment], walMark: Long, log: Vector[ReaderState.LogEntry],
       displace: ReaderState => Boolean): ReaderState = {
     val slot = (spark, ref.dataRoot)
     val key = Key(ref, seg.map(_.id), walMark, log.map(e => (e.n, e.marker)))
-    def shared(s: ReaderState) = s != null && s.key == key && s.acquire()
     val cur = live.get(slot)
-    if (shared(cur)) cur
-    else {
-      // one reference, the caller's; a racing opener's twin is dropped
-      // unread, and an unread state holds nothing persisted
-      val st = ReaderState.committed(spark, ref, seg, walMark, log)
-      live.synchronized {
-        val now = live.get(slot)
-        if (shared(now)) now
-        else {
-          if (now == null || displace(now)) {
-            st.acquire() // the registry's
-            live.put(slot, st)
-            if (now != null) now.release()
-          }
-          st
+    if (cur != null && cur.key == key) cur
+    else live.synchronized {
+      val now = live.get(slot)
+      if (now != null && now.key == key) now
+      else {
+        val segment = seg.map(s => Option(now).flatMap(_.segment)
+          .filter(_.id == s.id).getOrElse(s))
+        val st = ReaderState.committed(spark, ref, segment, walMark, log)
+        if (now == null || displace(now)) {
+          live.put(slot, st.adopt())
+          if (now != null) now.release()
         }
+        st
       }
     }
   }

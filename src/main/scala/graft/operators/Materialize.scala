@@ -218,10 +218,11 @@ object Materialize {
     */
   def compactionMerge(segment: DataFrame, log: DataFrame): DataFrame = {
     // the folded WAL tail feeds the ops join, the present-id probe and
-    // the fresh-id anti-join; the three legs share its one exchange
-    // within the query (exchange reuse), so the returned plan owns no
-    // cache that would outlive it
-    val ops = opsById(log)
+    // the fresh-id anti-join. Each leg reads the same (id, ops) columns
+    // under the same id filter, so the three share the fold's one
+    // exchange within the query (exchange reuse) and the returned plan
+    // owns no cache that would outlive it
+    val ops = opsById(log).filter(col("id").isNotNull)
     val seg =
       if (segment.columns.contains("embedding")) segment
       else segment.withColumn("embedding", lit(null).cast("array<float>"))
@@ -230,14 +231,17 @@ object Materialize {
       else seg.withColumn("first_offset", lit(Long.MinValue))
     val segLive = liveState(col("document"), col("meta"), col("embedding"),
       col("first_offset"))
-    val existing = seg2
-      .join(broadcast(ops), Seq("id"), "left")
+    val joined = seg2.join(broadcast(ops), Seq("id"), "left")
+    val existing = joined
       .withColumn("st",
         when(col("ops").isNull, segLive).otherwise(foldOps(col("ops"), segLive)))
       .filter(col("st.live"))
       .select(stateCols: _*)
-    val presentIds = seg2.select("id")
-      .join(broadcast(ops.select("id")), Seq("id"))
+    // the segment ids the log touches: the same join's matched rows.
+    // Matched on size(ops) > 0, not ops IS NOT NULL: collect_list is
+    // never null, so the optimizer would fold that test away, prune the
+    // leg to a bare id scan of the log, and share no exchange with it
+    val presentIds = joined.filter(size(col("ops")) > 0).select("id")
     val fresh = ops
       .join(broadcast(presentIds), Seq("id"), "left_anti")
       .withColumn("st", foldOps(col("ops"), deadState))

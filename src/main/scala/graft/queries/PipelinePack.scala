@@ -347,27 +347,22 @@ object PipelinePack extends QueryPack {
     // smoothing, Conneau 2020 §3.1): per-language sampling share
     // q_l ∝ p_l^α with α = 0.3 — low-resource languages upsample, the
     // head flattens. The per-language upsample factor q_l/p_l is what a
-    // sampler multiplies each language's draw rate by. |languages|-row
-    // aggregates + a one-row broadcast total; the corpus scan is the
-    // only data-sized work.
+    // sampler multiplies each language's draw rate by. One
+    // |languages|-row aggregate + window sums over its rows; the corpus
+    // scan is the only data-sized work.
     "pl_temperature_mix" -> { (s, d) =>
       val alpha = 0.3
       val nTok = size(TextStats.tokens(col("text"))).cast("long")
-      // the |languages|-row aggregate feeds three legs (total,
-      // normalizer, final projection); they share one exchange within
-      // the query (exchange reuse), so the corpus scan + tokenize runs
+      // one |languages|-row aggregate; the total and the normalizer are
+      // window sums over its rows, so the corpus scan + tokenize runs
       // once with no cache for a lazily returned plan to leave behind
-      val byLang = Tables.documents(s, d)
+      val all = org.apache.spark.sql.expressions.Window.partitionBy()
+      Tables.documents(s, d)
         .select(col("lang"), nTok.as("n_tok"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok"))
-      val t1 = byLang.agg(sum(col("tok")).as("total_tok"))
-      val total = byLang.crossJoin(broadcast(t1))
-        .agg(max(col("total_tok")).as("total_tok"),
-          sum(pow(col("tok").cast("double") / col("total_tok"), alpha)).as("z"))
-      byLang.crossJoin(broadcast(total))
-        .withColumn("p", col("tok").cast("double") / col("total_tok"))
-        .withColumn("q", pow(col("p"), alpha) / col("z"))
+        .withColumn("p", col("tok").cast("double") / sum(col("tok")).over(all))
+        .withColumn("q", pow(col("p"), alpha) / sum(pow(col("p"), alpha)).over(all))
         .select(col("lang"), col("n_docs"), col("tok"),
           round(col("p"), 6).as("p"), round(col("q"), 6).as("q"),
           round(col("q") / col("p"), 6).as("upsample"))

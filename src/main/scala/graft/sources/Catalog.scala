@@ -972,12 +972,14 @@ object Catalog {
     * asks for over the stored records. Vector config → IVF postings +
     * per-partition HNSW blobs; document_fts → trigram postings; sparse
     * keys with `indexed = true` → Block-Max sparse postings (scan-only
-    * stored columns otherwise).
+    * stored columns otherwise). The indexes land in the current segment
+    * version's directory, where the collection's served reads look.
     */
   def provision(spark: SparkSession, ref: CollectionRef,
       nCentroids: Int = 16, nReplica: Int = 4): Unit = {
     import org.apache.spark.sql.functions._
-    val records = CollectionStore.loadRecords(spark, ref.dataRoot)
+    val dir = CollectionStore.recordsRoot(ref.dataRoot)
+    val records = spark.read.parquet(s"$dir/records")
     // builds key on the segment's content fingerprints (count-only keys
     // are only safe for immutable corpora): vector indexes on the
     // id+embedding tag, the FTS index on the full-content mtag — so a
@@ -986,20 +988,20 @@ object Catalog {
     // fallbacks compute the SAME aggregates the serving handle computes
     // (segTag/segMetaTag) — a "" fallback would build under a key the
     // handle never matches, wasting the provision-time build
-    lazy val tag = CollectionStore.readSegMeta(ref.dataRoot)
+    lazy val tag = CollectionStore.readSegMeta(dir)
       .map(_._2).getOrElse {
         val r = records.agg(bit_xor(xxhash64(col("id"), col("embedding")))
           .cast("string")).collect()(0)
         if (r.isNullAt(0)) "empty" else r.getString(0)
       }
-    lazy val mtag = CollectionStore.readSegMetaTag(ref.dataRoot).getOrElse {
+    lazy val mtag = CollectionStore.readSegMetaTag(dir).getOrElse {
       val r = records.agg(bit_xor(CollectionStore.contentTagExpr(records))
         .cast("string")).collect()(0)
       if (r.isNullAt(0)) "empty" else r.getString(0)
     }
     // the segment's persisted row count, shared by every build key — one
     // _segmeta read instead of one count job per index family
-    val segN = CollectionStore.readSegMeta(ref.dataRoot).map(_._3)
+    val segN = CollectionStore.readSegMeta(dir).map(_._3)
     // the index families are independent (distinct dirs, distinct build
     // markers) and each underutilizes the cluster alone at compaction
     // scale — collect them as thunks and let the scheduler overlap them
@@ -1007,10 +1009,10 @@ object Catalog {
     ref.schema.embedding.foreach { e =>
       val vecs = records.select(col("offset_id"), col("embedding"))
       builds += (() =>
-        CollectionStore.ivfServing(vecs, ref.dataRoot, nCentroids, nReplica,
+        CollectionStore.ivfServing(vecs, dir, nCentroids, nReplica,
           keyTag = tag, knownCount = segN))
       builds += (() =>
-        CollectionStore.hnswServing(vecs, ref.dataRoot, space = e.space,
+        CollectionStore.hnswServing(vecs, dir, space = e.space,
           keyTag = tag, knownCount = segN))
     }
     // sparse keys with indexed=true get their Block-Max posting index at
@@ -1022,13 +1024,13 @@ object Catalog {
         // a segment stored without the column carries no sparse values —
         // nothing to index (raw writeCollection with scalar-only records)
         builds += (() => CollectionStore.sparseServing(records, k,
-          ref.dataRoot, keyTag = mtag, knownCount = segN))
+          dir, keyTag = mtag, knownCount = segN))
       case _ => ()
     }
     if (ref.schema.documentFts)
       builds += (() => CollectionStore.ftsServing(
         records.select(col("offset_id").as("doc_id"), col("document").as("text")),
-        ref.dataRoot, keyTag = mtag, knownCount = segN))
+        dir, keyTag = mtag, knownCount = segN))
     if (builds.size > 1) {
       // pre-warm the shared fingerprints the thunks close over, so the
       // workers don't race duplicate tag jobs

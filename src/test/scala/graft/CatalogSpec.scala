@@ -78,9 +78,11 @@ class CatalogSpec extends AnyFunSuite {
       map(lit("lang"), lit("en")).as("meta_str"))
     Catalog.writeCollection(spark, ref, records)
     // declared: vector (ivf + hnsw) and document fts — markers must exist
+    // in the written segment version's directory
+    val segDir = CollectionStore.recordsRoot(ref.dataRoot)
     for (what <- Seq("ivf", "hnsw", "fts"))
       assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(ref.dataRoot, what, "_built")), s"$what not provisioned")
+        java.nio.file.Paths.get(segDir, what, "_built")), s"$what not provisioned")
     // and the opened collection serves a KNN query end-to-end
     val coll = Catalog.openCollection(spark, ref)
     val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
@@ -90,7 +92,7 @@ class CatalogSpec extends AnyFunSuite {
     // fts index serves a contains search over the stored documents
     val docs = CollectionStore.loadRecords(spark, ref.dataRoot)
       .select(col("offset_id").as("doc_id"), col("document").as("text"))
-    val found = graft.operators.Fts.containsSearch(docs, ref.dataRoot, "number 19")
+    val found = graft.operators.Fts.containsSearch(docs, segDir, "number 19")
     assert(found.count() > 0)
   }
 }

@@ -59,7 +59,6 @@ class ReaderStateSpec extends AnyFunSuite {
     seed.upsert(records(0, 200))
     seed.commitLog()
     seed.persist()
-    seed.close()
     val face = new graft.api.HttpFace(spark, root, graft.api.Quotas.Unlimited)
     val base = s"http://127.0.0.1:${face.start()}/api/v2/tenants/t/" +
       "databases/d/collections/web"
@@ -93,20 +92,16 @@ class ReaderStateSpec extends AnyFunSuite {
       val writer = client.getCollection("web")
       writer.upsert(records(180, 40, gen = 1)) // 20 overwrites, 20 new
       writer.commitLog()
-      writer.close()
       val mid = cached()
       reads()
       val tail = cached() - mid
       // the fold and the view of the new version; the old version's
       // view retired with the key move
       assert(tail <= 2, s"20 reads with a tail left $tail cached datasets")
-      // a request's handles close right after its response is sent
+      // only the registry holds the current version between requests
       val st = ReaderStates.current(spark,
         client.describeCollection("web").dataRoot).get
-      val deadline = System.currentTimeMillis() + 10000
-      while (st.refCount > 1 && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(st.refCount == 1, "a request handle outlived its request")
+      assert(st.refCount == 1, s"${st.refCount} references after the requests")
     } finally face.stop()
   }
 
@@ -130,9 +125,11 @@ class ReaderStateSpec extends AnyFunSuite {
     assert(priv ne st)
     assert(h2.count() == 35L && h1.count() == 30L)
     assert(ReaderStates.current(spark, h1.ref.dataRoot).contains(st))
-    Seq(h0, h1, h2).foreach(_.close())
     assert(st.refCount == 1, "only the registry holds the current version")
-    assert(priv.refCount == 0)
+    assert(priv.refCount == 1, "the writing handle holds its private layer")
+    h2.commitLog()
+    assert(priv.refCount == 0, "a committed private layer is released")
+    assert(st.refCount == 0, "the key moved: the old version retired")
   }
 
   test("racing readers and a committing, compacting writer: every read " +
@@ -145,34 +142,35 @@ class ReaderStateSpec extends AnyFunSuite {
     w0.upsert(records(0, n))
     w0.commitLog()
     w0.persist()
-    w0.close()
     @volatile var done = false
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[ReaderState]()
+    val held = new java.util.concurrent.atomic.AtomicInteger()
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def readOnce(): Unit = {
       val h = client.getCollection("race")
-      try {
-        val st = h.readerState
+      try h.reading { st =>
         val docs = h.get(include = Seq("document")).collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
         // one committed generation, whole: every id, one suffix
         val gens = docs.values.map(_.split("-").last).toSet
         if (docs.size != n || gens.size != 1)
           errors.add(s"read ${docs.size} ids over generations $gens")
-        // a query over the same state, then its hits' documents by id,
-        // as the face's /query route does: the same generation again
-        // (the exact plan: served indexes live in one directory per
-        // collection, which a new version's first served read rebuilds)
+        // a served query over the same state, then its hits' documents
+        // by id, as the face's /query route does: the same generation
+        // again, from the index of the version this handle reads
         val q = Seq((0L, vec(3))).toDF("query_id", "q_embedding")
-        val hits = h.query(q, 5).select("id").collect().map(_.getString(0))
+        val hits = h.queryAnn(q, 5).select("id").collect().map(_.getString(0))
         val hitDocs = h.get(ids = Some(hits.toSeq)).collect().map(_.getString(1))
         if (hits.length != 5 || hitDocs.exists(d => !gens.contains(d.split("-").last)))
           errors.add(s"query hits ${hits.toSeq} carry $hitDocs outside $gens")
-        if (!isCached(st) || st.refCount < 1)
-          errors.add(s"state unpersisted while its reader held it (refs ${st.refCount})")
+        // a state this read holds keeps its view cached; a state retired
+        // before the read began is read unpersisted
+        if (st.refCount > 0) {
+          held.incrementAndGet()
+          if (!isCached(st)) errors.add(s"view unpersisted under a held state")
+        } else if (isCached(st)) errors.add("a retired state cached its view")
         seen.add(st)
       } catch { case e: Throwable => errors.add(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-      finally h.close()
     }
     val readers = (0 until 4).map { _ =>
       val t = new Thread(() => while (!done) readOnce())
@@ -188,13 +186,12 @@ class ReaderStateSpec extends AnyFunSuite {
         w.persist()
         Thread.sleep(300)
       }
-      w.close()
     } finally {
       done = true
       readers.foreach(_.join(120000))
     }
     assert(errors.isEmpty, errors.toArray.mkString("\n"))
-    assert(seen.size >= 4)
+    assert(seen.size >= 4 && held.get >= 4)
     val states = seen.toArray(Array.empty[ReaderState]).distinct
     states.foreach { st =>
       if (st.refCount == 0)
@@ -204,26 +201,61 @@ class ReaderStateSpec extends AnyFunSuite {
     val cur = ReaderStates.current(spark, client.describeCollection("race").dataRoot)
     assert(states.filter(_.refCount > 0).forall(cur.contains),
       "only the current version is still referenced")
+    assert(client.getCollection("race").versions.size == 3,
+      "every compaction published a version")
   }
 
-  test("asCollection: a state held by a reader outlives the key move, and " +
-      "is unpersisted when the reader lets go") {
+  test("a handle pinned to a version keeps serving from that version's " +
+      "index after a newer version builds its own") {
+    val client = new Client(spark, freshRoot())
+    val n = 40
+    val w = client.createCollection("pin", Catalog.Schema(vectorIndex = Some(Spann)))
+    w.upsert(records(0, n))
+    w.commitLog()
+    w.persist()
+    val q = Seq((0L, vec(3))).toDF("query_id", "q_embedding")
+    def served(h: graft.api.CollectionHandle): Set[String] = {
+      val hits = h.queryAnn(q, 5).select("id").collect().map(_.getString(0))
+      assert(hits.length == 5)
+      h.get(ids = Some(hits.toSeq)).collect().map(_.getString(1).split("-").last).toSet
+    }
+    val old = client.getCollection("pin")
+    assert(served(old) == Set("0")) // builds version 1's index
+    // version 2 rewrites every record and doubles the collection: its
+    // index answers with offsets version 1 does not hold
+    w.upsert(records(0, 2 * n, gen = 1))
+    w.commitLog()
+    w.persist()
+    val fresh = client.getCollection("pin")
+    assert(served(fresh) == Set("1")) // builds version 2's index
+    assert(served(old) == Set("0"), "the pinned handle's index was rebuilt under it")
+    assert(served(fresh) == Set("1"))
+    assert(old.count() == n.toLong && fresh.count() == 2L * n)
+    val root = w.ref.dataRoot
+    for (v <- Seq(1, 2))
+      assert(new java.io.File(s"$root/v$v/ivf2/_built").exists, s"version $v's index")
+  }
+
+  test("asCollection: a state a read holds outlives the key move and is " +
+      "unpersisted when the read ends; the handle keeps its snapshot") {
     val client = new Client(spark, freshRoot())
     val h0 = client.createCollection("hold")
     h0.upsert(records(0, 10))
     h0.commitLog()
     val reader = client.getCollection("hold")
     val st = reader.readerState
-    assert(reader.asCollection.records.count() == 10L)
-    h0.upsert(records(10, 5))
-    h0.commitLog() // moves the key
-    assert(ReaderStates.current(spark, reader.ref.dataRoot).exists(_ ne st))
-    assert(st.refCount == 1 && isCached(st), "the reader's state was retired under it")
-    assert(reader.asCollection.records.count() == 10L, "the reader's snapshot")
-    reader.close()
+    reader.reading { held =>
+      assert(held eq st)
+      assert(reader.asCollection.records.count() == 10L)
+      h0.upsert(records(10, 5))
+      h0.commitLog() // moves the key
+      assert(ReaderStates.current(spark, reader.ref.dataRoot).exists(_ ne st))
+      assert(st.refCount == 1 && isCached(st), "the state was retired under its read")
+    }
     assert(st.refCount == 0 && !isCached(st))
-    intercept[IllegalStateException](reader.count())
-    h0.close()
+    assert(reader.asCollection.records.count() == 10L, "the reader's snapshot")
+    assert(!isCached(st), "a retired state cached its view again")
+    assert(client.getCollection("hold").count() == 15L)
   }
 
   test("delete and recreate under the same name never aliases the old " +
@@ -261,7 +293,6 @@ class ReaderStateSpec extends AnyFunSuite {
     again.upsert(Seq(("a", "third a", Map("n" -> "1")), ("c", "third c", Map("n" -> "3")))
       .toDF("id", "document", "meta"))
     again.commitLog()
-    again.close()
     val descriptor = (r: String) => java.nio.file.Paths.get(r, "_sysdb",
       ref.tenant, ref.database, "x.json")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ref.dataRoot))
@@ -274,7 +305,6 @@ class ReaderStateSpec extends AnyFunSuite {
     assert(h2.readerState.log.map(_.n) == before.log.map(_.n))
     assert(h2.readerState ne before)
     assert(h2.get().collect().map(_.getString(1)).toSet == Set("third a", "third c"))
-    Seq(old, fresh, h, h2).foreach(_.close())
   }
 
   test("modifyCollection moves the key") {
@@ -282,18 +312,16 @@ class ReaderStateSpec extends AnyFunSuite {
     val h0 = client.createCollection("m")
     h0.upsert(records(0, 5))
     h0.commitLog()
-    h0.close()
     val h1 = client.getCollection("m")
     val st1 = h1.readerState
     assert(h1.asCollection.records.count() == 5L)
-    client.modifyCollection("m", metadata = Some(Map("owner" -> "x"))).close()
+    assert(isCached(st1))
+    client.modifyCollection("m", metadata = Some(Map("owner" -> "x")))
     val h2 = client.getCollection("m")
     assert(h2.readerState ne st1)
     assert(h2.readerState.ref.metadata == Map("owner" -> "x"))
     assert(ReaderStates.current(spark, h1.ref.dataRoot).exists(_ ne st1))
-    h1.close()
-    assert(st1.refCount == 0 && !isCached(st1))
-    h2.close()
+    assert(st1.refCount == 0 && !isCached(st1), "the old key's state retired")
   }
 
   // ---- defect 2: lazily returned plans own no cache ------------------------
