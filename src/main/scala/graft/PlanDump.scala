@@ -20,8 +20,9 @@ object PlanDump {
         "partitions x queries x k, independent of corpus size. No window, " +
         "no global sort."),
     "vs_ann_ivf" ->
-      ("Served ANN: routing materializes driver-side (query-batch-sized, " +
-        "the same rows the broadcast needed anyway) and the probed " +
+      ("Served ANN: routing runs on the driver (the query batch scored " +
+        "against the model's collected centroids, so no routing query " +
+        "appears; the routed rows enter as a LocalTableScan) and the probed " +
         "centroid ids land as a STATIC IN filter — PartitionFilters on " +
         "centroid_id at plan time (r9), deterministic where dynamic " +
         "pruning through the broadcast join was best-effort. The scan " +

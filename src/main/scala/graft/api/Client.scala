@@ -1367,12 +1367,18 @@ final class CollectionHandle(spark: SparkSession,
 
   def peek(n: Int = 10): DataFrame = get(limit = Some(n))
 
+  /** Exact Knn plan. `include` names record columns (`document`, `uri`,
+    * `embedding`, the `meta_*` maps) each hit row carries beside
+    * `(query_id, rank, dist, id)`, so a caller reads the hits' content
+    * from the same plan and snapshot as the hits.
+    */
   def query(queries: DataFrame, k: Int,
       where: Option[graft.model.Where.Expr] = None,
       space: String = "",
       readLevel: ReadLevel = ReadLevel.IndexAndWal,
       ids: Option[Seq[String]] = None,
-      whereDocument: Option[graft.model.Where.Expr] = None): DataFrame =
+      whereDocument: Option[graft.model.Where.Expr] = None,
+      include: Seq[String] = Seq()): DataFrame =
     Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
       // QueryRequest carries ids and where_document beside where
       // (`api_types.rs` QueryRequestPayload:2207-2215) — conjoined like
@@ -1385,7 +1391,8 @@ final class CollectionHandle(spark: SparkSession,
       // indexes on EVERY read plan, not just Get — the same posting
       // prefilter narrows the KNN's candidate records (pre-filtered
       // exact KNN: the full predicate still verifies inside the plan)
-      prefiltered(st, w, readLevel).query(queries, k, w, cfgSpace(space))
+      prefiltered(st, w, readLevel).query(queries, k, w, cfgSpace(space),
+        include)
     } }
 
   /** The read view at `readLevel` (`plan.rs:550-565`): the RYW state
@@ -1414,6 +1421,10 @@ final class CollectionHandle(spark: SparkSession,
     * and the read is the exact in-plan KNN. The index itself builds once
     * per compacted segment (`ensureBuilt` marker keyed on row count) —
     * query time only routes and probes.
+    *
+    * `ids`, `where` and `whereDocument` conjoin into one pre-filter, as
+    * in [[query]]; `include` adds the hits' record columns, as in
+    * [[query]].
     */
   /** The collection's declared vector-index config (explicit schema
     * config, else the legacy `hnsw:*` metadata parse) — query knobs left
@@ -1434,9 +1445,15 @@ final class CollectionHandle(spark: SparkSession,
       nCentroids: Int = 16, nReplica: Int = -1,
       where: Option[graft.model.Where.Expr] = None,
       space: String = "",
-      readLevel: ReadLevel = ReadLevel.IndexAndWal): DataFrame =
+      readLevel: ReadLevel = ReadLevel.IndexAndWal,
+      ids: Option[Seq[String]] = None,
+      whereDocument: Option[graft.model.Where.Expr] = None,
+      include: Seq[String] = Seq()): DataFrame =
       Quotas.Gates.withRead(ref.dataRoot, limits) { reading { st =>
-    where.foreach(Quotas.validateWhere(_, limits))
+    // ids and where_document conjoin with where exactly as in query():
+    // the combined filter pre-filters both the index and the tail leg
+    val w = conjoinRequestFilters(ids, where, whereDocument)
+    w.foreach(Quotas.validateWhere(_, limits))
     Quotas.validateResults(k, limits)
     // SPANN config supplies search_nprobe / nreplica_count when the call
     // leaves them at the sentinel (spann_configuration.rs defaults)
@@ -1448,7 +1465,7 @@ final class CollectionHandle(spark: SparkSession,
     val nr = if (nReplica > 0) nReplica else spannCfg.map(_.nReplica).getOrElse(4)
     val sp = cfgSpace(space)
     st.segment match {
-      case None => readView(st, readLevel).query(queries, k, where, sp)
+      case None => readView(st, readLevel).query(queries, k, w, sp, include)
       case Some(seg) =>
         val vecs = seg.records.select(col("offset_id"), col("embedding"))
         // a DECLARED spann config serves through the split/merge-
@@ -1466,8 +1483,9 @@ final class CollectionHandle(spark: SparkSession,
           case None => ivfModel(seg, nCentroids, nr, sp)
         }
         val (tail, stale, extra) = tailAndStale(st, readLevel)
-        new Collection(seg.records).queryAnn(model, queries, k, np, where,
-          sp, walTail = tail, staleIds = stale, staleFetchExtra = extra)
+        new Collection(seg.records).queryAnn(model, queries, k, np, w,
+          sp, include, walTail = tail, staleIds = stale,
+          staleFetchExtra = extra)
     }
   } }
 

@@ -131,7 +131,7 @@ final class Collection(val records: DataFrame) {
       queries, k, space)
     val proj = col("query_id") +: col("rank") +: col("dist") +:
       col("id") +: include.map(col)
-    nn.join(records.drop("embedding"), Seq("offset_id"))
+    nn.join(Collection.hitContent(records, include), Seq("offset_id"))
       .select(proj: _*)
   }
 
@@ -273,13 +273,14 @@ final class Collection(val records: DataFrame) {
       col("id") +: include.map(col)
     walTail match {
       case None =>
-        nn.join(records.drop("embedding"), Seq("offset_id"))
+        nn.join(Collection.hitContent(records, include), Seq("offset_id"))
           .select(proj: _*)
       case Some(tail) =>
         val shadow = staleIds.getOrElse(tail.select(col("id")))
         // the tail is the writes since the last compaction — small by the
         // compaction contract, so it broadcasts
-        val served = nn.join(records.drop("embedding"), Seq("offset_id"))
+        val served = nn.join(Collection.hitContent(records, include),
+            Seq("offset_id"))
           .join(broadcast(shadow.select(col("id"))), Seq("id"), "left_anti")
         val tailAllowed = where.map(w => tail.filter(Where.compile(w)))
           .getOrElse(tail)
@@ -287,7 +288,7 @@ final class Collection(val records: DataFrame) {
         val tailNn = graft.operators.Knn.exact(
             tailAllowed.select(col("offset_id"), col("embedding")),
             queries, k, space)
-          .join(tail.drop("embedding"), Seq("offset_id"))
+          .join(Collection.hitContent(tail, include), Seq("offset_id"))
         val legCols = Seq(col("query_id"), col("dist"), col("id")) ++
           include.map(col)
         val merged = served.select(legCols: _*)
@@ -545,6 +546,13 @@ final class Collection(val records: DataFrame) {
 }
 
 object Collection {
+  /** The record columns a KNN hit joins to for its content: `embedding`
+    * (the hit's own vector) stays only when `include` asks for it, so a
+    * query without it never carries the wide column past the join.
+    */
+  private[api] def hitContent(rows: DataFrame, include: Seq[String]): DataFrame =
+    if (include.contains("embedding")) rows else rows.drop("embedding")
+
   /** The Get plan's projection list — `Include` flags ≙ select list
     * (`chromadb/api/types.py:526-537`): plain column names pass through,
     * `meta:k` projects one metadata key across the shredded typed maps

@@ -696,20 +696,15 @@ final class HttpFace(spark: SparkSession, root: String,
           val whereDoc = whereField(j, "where_document")
           // the reference's collection_query serves from the vector
           // SEGMENT INDEX when the collection declares one (plus the WAL
-          // tail leg) — exact scan only for index-less collections
+          // tail leg) — exact scan only for index-less collections. The
+          // hit rows carry their record content: one plan, one snapshot
           val nn = (if (h.ref.schema.vectorIndex.isDefined)
-              h.queryAnn(qs, k, where = where)
+              h.queryAnn(qs, k, where = where, ids = ids,
+                whereDocument = whereDoc, include = cols)
             else h.query(qs, k, where = where, ids = ids,
-              whereDocument = whereDoc))
-            .select(col("query_id"), col("rank"), col("id"), col("dist"))
+              whereDocument = whereDoc, include = cols))
+            .select((Seq("query_id", "rank", "id", "dist") ++ cols).map(col): _*)
             .collect().toSeq
-          // record content for the hit set: ONE bounded id-keyed get
-          val hitIds = nn.map(_.getString(2)).distinct
-          val content: Map[String, Row] =
-            if (cols.nonEmpty && hitIds.nonEmpty)
-              h.get(ids = Some(hitIds), include = cols)
-                .collect().map(r => r.getString(0) -> r).toMap
-            else Map.empty
           val byQuery = nn.groupBy(_.getLong(0))
           // EVERY query id answers, in request order — zero-hit queries
           // carry empty inner arrays (the reference returns one list per
@@ -718,17 +713,15 @@ final class HttpFace(spark: SparkSession, root: String,
             byQuery.getOrElse(i.toLong, Seq.empty).sortBy(_.getLong(1)))
           def outer(f: Row => JValue): JValue =
             JArray(perQ.map(rs => JArray(rs.map(f).toList)).toList)
-          def contentOuter(f: Row => JValue): JValue =
-            outer(r => content.get(r.getString(2)).map(f).getOrElse(JNull))
           def when(flag: String)(v: => JValue): (String, JValue) =
             flag -> (if (include.contains(flag)) v else JNull)
           respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
             "ids" -> outer(r => jStr(r.getString(2))),
             when("distances")(outer(r => JDouble(r.getDouble(3)))),
-            when("documents")(contentOuter(strOrNull(_, "document"))),
-            when("embeddings")(contentOuter(embJson(_))),
-            when("uris")(contentOuter(strOrNull(_, "uri"))),
-            when("metadatas")(contentOuter(metaJson)),
+            when("documents")(outer(strOrNull(_, "document"))),
+            when("embeddings")(outer(embJson(_))),
+            when("uris")(outer(strOrNull(_, "uri"))),
+            when("metadatas")(outer(metaJson)),
             "include" -> JArray(include.map(jStr).toList)))))
         case ("GET", OpR(t, d, c, "fork_count")) =>
           respond(ex, 200, s"""{"count":${readClient(t, d).forkCount(c)}}""")

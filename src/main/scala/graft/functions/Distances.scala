@@ -147,5 +147,17 @@ object Distances {
       while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
       acc
     }
+
+    /** [[Distances.distance]] off the plan: the same f32 kernel and the
+      * same `1 - sim` in float, so a driver-side score equals the
+      * codegen'd column's bit for bit.
+      */
+    def distance(space: String): (Array[Float], Array[Float]) => Float =
+      space match {
+        case "cosine" => (a, b) => 1.0f - cosineSim(a, b)
+        case "ip"     => (a, b) => 1.0f - dot(a, b)
+        case "l2"     => l2Sq
+        case other    => throw new IllegalArgumentException(s"unknown space $other")
+      }
   }
 }

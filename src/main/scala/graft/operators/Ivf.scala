@@ -3,8 +3,11 @@ package graft.operators
 import graft.functions.Distances
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge
+import org.apache.spark.sql.types.IntegerType
 
 /** SPANN-style IVF index as DataFrames — the reference's scale-out ANN
   * design (`rust/index/src/spann/types.rs`: centroid graph + posting lists
@@ -15,7 +18,8 @@ import org.apache.spark.sql.functions._
   * centroid.
   *
   * Query routing (`search_nprobe`): nearest `nprobe` centroids per query
-  * (tiny broadcast join), then a join against only those posting lists —
+  * (scored on the driver over the model's centroids), then a join against
+  * only those posting lists —
   * at scale the postings table is partitioned/bucketed by `centroid_id`,
   * so the probe reads `nprobe/nCentroids` of the data instead of all of
   * it. Recall is gated in IvfSpec (>= 0.95 @ k=10, mirroring
@@ -31,12 +35,24 @@ object Ivf {
     * scanning every centroid (`rust/index/src/spann/types.rs`). Set by
     * [[graft.sources.CollectionStore.ivfServing]] when the centroid count
     * crosses its routing threshold; [[search]] then routes through the
-    * graph (log-ish probes per query) instead of broadcasting all
-    * centroids (q x nCentroids distance evals — the routing bottleneck
-    * at the ~10^5-10^6 lists a 100 TB corpus needs).
+    * graph (log-ish probes per query) instead of scoring all centroids
+    * (q x nCentroids distance evals — the routing bottleneck at the
+    * ~10^5-10^6 lists a 100 TB corpus needs).
     */
   final case class Model(centroids: DataFrame, postings: DataFrame,
-      centroidGraphRoot: Option[String] = None)
+      centroidGraphRoot: Option[String] = None) {
+
+    /** `(centroid_id, centroid)` on the driver, collected by the first
+      * route that needs it and kept for the model's life. A served model
+      * without a centroid graph has fewer than
+      * [[graft.sources.CollectionStore.CentroidGraphThreshold]] centroids,
+      * and is opened once per segment version, so this is one small array
+      * per version.
+      */
+    lazy val centroidRows: Array[(Int, Array[Float])] =
+      centroids.select(col("centroid_id"), col("centroid")).collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+  }
 
   /** Batch index build = the compaction job's index-writer phase
     * (SURVEY §3.4). Deterministic for a fixed seed.
@@ -358,25 +374,70 @@ object Ivf {
       k, space)
   }
 
-  /** [[route]] MATERIALIZED driver-side: the probe set is
-    * |query batch| × nprobe rows — driver-bounded by the same quota that
-    * bounds query batches (and exactly the collect the routed-HNSW
-    * serving already does). The rows broadcast back as a LOCAL relation,
-    * and the distinct probed centroid ids become a STATIC `IN` filter on
-    * the posting scan — `PartitionFilters` at PLAN time, deterministic,
-    * instead of hoping runtime dynamic partition pruning fires through
-    * the broadcast join. On a posting table partitioned by centroid_id
-    * the difference at 100 TB is reading nprobe list directories versus
-    * scanning the corpus (PlanSpec gates the filter's presence).
+  /** nprobe routing shared by [[search]], [[searchQuantized]] and
+    * [[searchQuantizedMb]], MATERIALIZED driver-side: the probe set is
+    * |query batch| × nprobe rows of (query_id, q_embedding, centroid_id)
+    * — driver-bounded by the same quota that bounds query batches. The
+    * rows go back into the plan as a LOCAL relation, and the distinct
+    * probed centroid ids become a STATIC `IN` filter on the posting scan
+    * — `PartitionFilters` at PLAN time, deterministic, instead of hoping
+    * runtime dynamic partition pruning fires through the broadcast join.
+    * On a posting table partitioned by centroid_id the difference at
+    * 100 TB is reading nprobe list directories versus scanning the corpus
+    * (PlanSpec gates the filter's presence).
+    *
+    * A model with a persisted centroid HNSW walks the graph in Spark
+    * (cost per query independent of centroid count). Otherwise the
+    * queries are scored against [[Model.centroidRows]] on the driver
+    * ([[nearestCentroids]]), so routing runs no Spark job once the
+    * model's centroids are loaded, and no query at all for a literal
+    * query batch.
     */
   private def routeLocal(model: Model, queries: DataFrame, nprobe: Int,
       space: String): (DataFrame, Seq[Int]) = {
     val spark = queries.sparkSession
-    val routed = route(model, queries, nprobe, space)
-    val rows = routed.collect()
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), routed.schema)
-    (local, rows.map(_.getAs[Int]("centroid_id")).distinct.toSeq)
+    val qs = queries.select(col("query_id"), col("q_embedding"))
+    val (rows, schema) = model.centroidGraphRoot match {
+      case Some(graphRoot) =>
+        val routed = Hnsw.searchSaved(spark, graphRoot, queries,
+            k = nprobe, efSearch = math.max(64, 2 * nprobe))
+          .select(col("query_id"), col("offset_id").cast("int").as("centroid_id"))
+          .join(broadcast(qs), Seq("query_id"))
+          .select(col("query_id"), col("q_embedding"), col("centroid_id"))
+        (routed.collect().toSeq, routed.schema)
+      case None =>
+        val cents = model.centroidRows
+        // a request's literal batch is read off its plan: no query runs
+        val batch = SqlBridge.localRows(qs).getOrElse(qs.collect().toSeq)
+        val rows = batch.flatMap { q =>
+          val emb = if (q.isNullAt(1)) null else q.getSeq[Float](1).toArray
+          nearestCentroids(cents, emb, nprobe, space)
+            .map(c => Row(q.get(0), q.get(1), c))
+        }
+        (rows, qs.schema.add("centroid_id", IntegerType, nullable = false))
+    }
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    (local, rows.map(_.getInt(2)).distinct)
+  }
+
+  /** The `nprobe` nearest of `cents` to one query, nearest first — the
+    * order Spark's `GroupedTopK` over `(cdist, centroid_id)` gives:
+    * [[Distances.scalar]] is the kernel behind the codegen'd distance
+    * columns, and floats compare as Spark sorts them
+    * (`SQLOrderingUtil.compareFloats`: NaN after every number, -0.0 equal
+    * to 0.0). A null query scores NaN everywhere, so it routes by
+    * centroid id, as Spark's all-null distances do.
+    */
+  private[graft] def nearestCentroids(cents: Array[(Int, Array[Float])],
+      q: Array[Float], nprobe: Int, space: String): Seq[Int] = {
+    val dist = Distances.scalar.distance(space)
+    cents.map { case (id, c) => (if (q == null) Float.NaN else dist(c, q), id) }
+      .sorted(byDistThenId).iterator.take(nprobe).map(_._2).toSeq
+  }
+
+  private val byDistThenId: Ordering[(Float, Int)] = (x, y) => {
+    val c = SQLOrderingUtil.compareFloats(x._1, y._1)
+    if (c != 0) c else Integer.compare(x._2, y._2)
   }
 
   /** The posting scan restricted to the probed lists — a static filter
@@ -385,30 +446,6 @@ object Ivf {
   private def prunedPostings(model: Model, probed: Seq[Int]): DataFrame =
     model.postings.filter(col("centroid_id")
       .isin(probed.map(Int.box): _*))
-
-  /** nprobe routing shared by [[search]] and [[searchQuantized]]:
-    * centers-graph walk when the model carries a persisted centroid HNSW
-    * (cost per query independent of centroid count), exact brute-force
-    * scoring otherwise (fine to ~10^4 centroids).
-    */
-  private def route(model: Model, queries: DataFrame, nprobe: Int,
-      space: String): DataFrame = model.centroidGraphRoot match {
-    case Some(graphRoot) =>
-      Hnsw.searchSaved(queries.sparkSession, graphRoot, queries,
-          k = nprobe, efSearch = math.max(64, 2 * nprobe))
-        .select(col("query_id"), col("offset_id").cast("int").as("centroid_id"))
-        .join(broadcast(queries.select(col("query_id"), col("q_embedding"))),
-          Seq("query_id"))
-        .select(col("query_id"), col("q_embedding"), col("centroid_id"))
-    case None =>
-      val cdist = Distances.distance(space)(col("centroid"), col("q_embedding"))
-      GroupedTopK(
-        queries.crossJoin(broadcast(model.centroids))
-          .select(col("query_id"), col("q_embedding"), col("centroid_id"),
-            cdist.as("cdist")),
-        Seq(col("query_id")), Seq(col("cdist"), col("centroid_id")), nprobe)
-        .select(col("query_id"), col("q_embedding"), col("centroid_id"))
-  }
 
   def search(model: Model, queries: DataFrame, k: Int, nprobe: Int,
       space: String = "cosine",

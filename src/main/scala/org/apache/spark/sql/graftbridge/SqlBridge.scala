@@ -35,6 +35,21 @@ object SqlBridge {
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
 
+  /** The rows of a frame whose optimized plan is a local relation — a
+    * literal batch such as a request's query vectors — read off the plan,
+    * so the caller gets them without running a query. None for any other
+    * frame.
+    */
+  def localRows(df: org.apache.spark.sql.DataFrame)
+      : Option[Seq[org.apache.spark.sql.Row]] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(l.schema)
+        Some(l.data.map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
+      case _ => None
+    }
+
   /** How many datasets the session's cache holds (`numCachedEntries` is
     * private[sql]) — the probe for "no persisted dataset outlives its
     * owner".

@@ -126,6 +126,105 @@ class HttpFaceSpec extends AnyFunSuite {
     } finally face.stop()
   }
 
+  test("indexed /query honours ids and where_document, with and without " +
+      "a committed tail") {
+    val root = java.nio.file.Files.createTempDirectory("graft_http_flt").toString
+    val face = new graft.api.HttpFace(spark, root)
+    val port = face.start()
+    try {
+      val base = s"http://127.0.0.1:$port/api/v2/tenants/t1/databases/db1"
+      val client = new graft.api.Client(spark, root, "t1", "db1")
+      val coll = client.createCollection("flt",
+        graft.sources.Catalog.Schema(vectorIndex = Some(
+          graft.sources.Catalog.SpannIndexConfig(space = "cosine"))))
+      import spark.implicits._
+      coll.add(Seq(
+          ("p", "red apple", Seq(1.0f, 0.0f)),
+          ("q", "green apple", Seq(0.9f, 0.1f)),
+          ("r", "red brick", Seq(0.8f, 0.2f)),
+          ("s", "blue sky", Seq(0.7f, 0.3f)),
+          ("t", "red wine", Seq(0.1f, 0.9f)),
+          ("u", "green tea", Seq(0.0f, 1.0f)))
+        .toDF("id", "document", "embedding"))
+      coll.persist()
+      def hits(body: String): Seq[String] = {
+        val (c, j) = req("POST", s"$base/collections/flt/query", body)
+        assert(c == 200, s"query failed: $j")
+        (j \ "ids").extract[Seq[Seq[String]]].head
+      }
+      val q = """"query_embeddings":[[1.0,0.0]],"n_results":4"""
+      val red = """"where_document":{"$document":{"$contains":"red"}}"""
+      // compacted, no tail: unrestricted the top 4 are p q r s
+      assert(hits(s"{$q}") == Seq("p", "q", "r", "s"))
+      assert(hits(s"""{$q,"ids":["s","t","u"]}""") == Seq("s", "t", "u"))
+      assert(hits(s"{$q,$red}") == Seq("p", "r", "t"))
+      assert(hits(s"""{$q,"ids":["q","r","t"],$red}""") == Seq("r", "t"))
+
+      // a committed tail: a new record near the query, and "p" rewritten
+      // away from "red" — both legs must apply both filters
+      val (ca, ja) = req("POST", s"$base/collections/flt/upsert",
+        """{"ids":["v","p"],"documents":["red car","plain apple"],
+          |"embeddings":[[0.95,0.05],[1.0,0.0]]}""".stripMargin)
+      assert(ca == 201, s"upsert failed: $ja")
+      assert(hits(s"{$q}") == Seq("p", "v", "q", "r"))
+      assert(hits(s"""{$q,"ids":["v","s","u"]}""") == Seq("v", "s", "u"))
+      assert(hits(s"{$q,$red}") == Seq("v", "r", "t"))
+      assert(hits(s"""{$q,"ids":["p","v","u"],$red}""") == Seq("v"))
+    } finally face.stop()
+  }
+
+  test("a warm /query runs one Spark query, indexed or not, with or " +
+      "without a committed tail") {
+    val root = java.nio.file.Files.createTempDirectory("graft_http_one").toString
+    val face = new graft.api.HttpFace(spark, root)
+    val port = face.start()
+    val queries = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = queries.incrementAndGet()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = queries.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val base = s"http://127.0.0.1:$port/api/v2/tenants/t1/databases/db1"
+      new graft.api.Client(spark, root, "t1", "db1").createCollection("idx",
+        graft.sources.Catalog.Schema(vectorIndex = Some(
+          graft.sources.Catalog.SpannIndexConfig(space = "l2"))))
+      req("POST", s"$base/collections", """{"name":"plain"}""")
+      val rng = new scala.util.Random(3)
+      def vec = Seq.fill(4)(rng.nextFloat()).mkString("[", ",", "]")
+      val n = 40
+      val records = s"""{"ids":[${(0 until n).map(i => s""""r$i"""").mkString(",")}],
+        |"documents":[${(0 until n).map(i => s""""doc $i"""").mkString(",")}],
+        |"embeddings":[${Seq.fill(n)(vec).mkString(",")}]}""".stripMargin
+      val body = s"""{"query_embeddings":[$vec,$vec],"n_results":5,
+        |"include":["documents","metadatas","embeddings","uris"]}""".stripMargin
+      def perQuery(c: String): Double = {
+        req("POST", s"$base/collections/$c/query", body) // opens the state
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        val before = queries.get()
+        (1 to 3).foreach { _ =>
+          val (code, j) = req("POST", s"$base/collections/$c/query", body)
+          assert(code == 200, s"query failed: $j")
+        }
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        (queries.get() - before) / 3.0
+      }
+      for (c <- Seq("idx", "plain")) {
+        assert(req("POST", s"$base/collections/$c/add", records)._1 == 201)
+        new graft.api.Client(spark, root, "t1", "db1").getCollection(c).persist()
+        assert(perQuery(c) == 1.0, s"$c, no tail")
+        assert(req("POST", s"$base/collections/$c/upsert",
+          s"""{"ids":["r1","new"],"embeddings":[$vec,$vec]}""")._1 == 201)
+        assert(perQuery(c) == 1.0, s"$c, committed tail")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      face.stop()
+    }
+  }
+
   test("management routes over the wire: fork, update_collection rename, " +
       "attach/get/detach function, add_input") {
     val root = java.nio.file.Files.createTempDirectory("graft_http2").toString

@@ -117,6 +117,164 @@ class HttpFaceWireSpec extends AnyFunSuite {
     } finally face.stop()
   }
 
+  private def reqRaw(url: String, body: String): (Int, String) = {
+    val r = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build()
+    val resp = http.send(r, java.net.http.HttpResponse.BodyHandlers.ofString())
+    (resp.statusCode(), resp.body())
+  }
+
+  /** The `/query` response as the two-call route built it: the KNN hits
+    * (`queryAnn` on an index-declared collection, else `query`), then ONE
+    * `get(ids = hits)` on the same handle for the hits' content, keyed by
+    * id. Independent of the face's own encoders, so a one-plan response
+    * that equals it byte for byte carries the same content.
+    */
+  private def twoCallQueryJson(h: graft.api.CollectionHandle,
+      body: String): String = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val j = JsonMethods.parse(body)
+    val queries = (j \ "query_embeddings").extract[Seq[Seq[Double]]]
+    val qs = queries.zipWithIndex
+      .map { case (e, i) => (i.toLong, e.map(_.toFloat)) }
+      .toDF("query_id", "q_embedding")
+      .withColumn("q_embedding", col("q_embedding").cast("array<float>"))
+    val k = (j \ "n_results").toOption.map(_.extract[Int]).getOrElse(10)
+    val include = (j \ "include").toOption.map(_.extract[Seq[String]])
+      .getOrElse(Seq("documents", "metadatas", "distances"))
+    val metaCols = Seq("meta_str", "meta_int", "meta_float", "meta_bool",
+      "meta_str_arr", "meta_int_arr", "meta_float_arr", "meta_bool_arr")
+    val cols = include.flatMap {
+      case "documents" => Seq("document")
+      case "embeddings" => Seq("embedding")
+      case "uris" => Seq("uri")
+      case "metadatas" => metaCols
+      case _ => Seq()
+    }.distinct
+    val where = (j \ "where").toOption.map(w => graft.model.WhereParser.parse(
+      JsonMethods.compact(JsonMethods.render(w))))
+    val nn = (if (h.ref.schema.vectorIndex.isDefined) h.queryAnn(qs, k, where = where)
+        else h.query(qs, k, where = where))
+      .select(col("query_id"), col("rank"), col("id"), col("dist"))
+      .collect().toSeq
+    val hitIds = nn.map(_.getString(2)).distinct
+    val content: Map[String, Row] =
+      if (cols.nonEmpty && hitIds.nonEmpty)
+        h.get(ids = Some(hitIds), include = cols)
+          .collect().map(r => r.getString(0) -> r).toMap
+      else Map.empty
+    def has(r: Row, c: String) =
+      r.schema.fieldNames.contains(c) && !r.isNullAt(r.fieldIndex(c))
+    def str(c: String)(r: Row): JValue =
+      if (has(r, c)) JString(r.getString(r.fieldIndex(c))) else JNull
+    def emb(r: Row): JValue =
+      if (has(r, "embedding")) JArray(r.getSeq[Float](r.fieldIndex("embedding"))
+        .map(f => JDouble(f.toDouble)).toList) else JNull
+    def meta(r: Row): JValue = {
+      def m[T](c: String)(f: T => JValue): List[(String, JValue)] =
+        if (has(r, c)) r.getMap[String, T](r.fieldIndex(c)).toList.sortBy(_._1)
+          .map { case (mk, v) => mk -> f(v) }
+        else Nil
+      val fields = m[String]("meta_str")(JString(_)) ++
+        m[Long]("meta_int")(JLong(_)) ++ m[Double]("meta_float")(JDouble(_)) ++
+        m[Boolean]("meta_bool")(JBool(_)) ++
+        m[scala.collection.Seq[String]]("meta_str_arr")(
+          vs => JArray(vs.map(JString(_)).toList)) ++
+        m[scala.collection.Seq[Long]]("meta_int_arr")(
+          vs => JArray(vs.map(JLong(_)).toList)) ++
+        m[scala.collection.Seq[Double]]("meta_float_arr")(
+          vs => JArray(vs.map(JDouble(_)).toList)) ++
+        m[scala.collection.Seq[Boolean]]("meta_bool_arr")(
+          vs => JArray(vs.map(JBool(_)).toList))
+      if (fields.isEmpty) JNull else JObject(fields)
+    }
+    val byQuery = nn.groupBy(_.getLong(0))
+    val perQ = queries.indices.map(i =>
+      byQuery.getOrElse(i.toLong, Seq.empty).sortBy(_.getLong(1)))
+    def outer(f: Row => JValue): JValue =
+      JArray(perQ.map(rs => JArray(rs.map(f).toList)).toList)
+    def contentOuter(f: Row => JValue): JValue =
+      outer(r => content.get(r.getString(2)).map(f).getOrElse(JNull))
+    def when(flag: String)(v: => JValue): (String, JValue) =
+      flag -> (if (include.contains(flag)) v else JNull)
+    JsonMethods.compact(JsonMethods.render(JObject(
+      "ids" -> outer(r => JString(r.getString(2))),
+      when("distances")(outer(r => JDouble(r.getDouble(3)))),
+      when("documents")(contentOuter(str("document"))),
+      when("embeddings")(contentOuter(emb)),
+      when("uris")(contentOuter(str("uri"))),
+      when("metadatas")(contentOuter(meta)),
+      "include" -> JArray(include.map(JString(_)).toList))))
+  }
+
+  test("one-plan /query answers byte-identically to the two-call route: " +
+      "every include flag, indexed with and without a tail, unindexed") {
+    val root = java.nio.file.Files.createTempDirectory("graft_http_one").toString
+    val face = new graft.api.HttpFace(spark, root)
+    val port = face.start()
+    try {
+      val base = s"http://127.0.0.1:$port/api/v2/tenants/t1/databases/db1"
+      val client = new graft.api.Client(spark, root, "t1", "db1")
+      client.createCollection("idx", graft.sources.Catalog.Schema(
+        vectorIndex = Some(graft.sources.Catalog.SpannIndexConfig(space = "l2"))))
+      req("POST", s"$base/collections", """{"name":"plain"}""")
+      val records =
+        """{"ids":["a","b","c","d","e","f"],
+          |"documents":["doc a",null,"doc c","doc d","doc e",null],
+          |"uris":["s3://x/a",null,"s3://x/c",null,"s3://x/e","s3://x/f"],
+          |"metadatas":[{"lang":"en","n":7,"f":1.5,"ok":true,
+          |              "tags":["x","y"],"nums":[1,2,3]},
+          |             null,{"lang":"de","n":2},{"lang":"en","f":-0.25},
+          |             {"lang":"fr","ok":false,"ws":[0.5,1.5]},{"lang":"en"}],
+          |"embeddings":[[1.0,0.0,0.5],[0.0,1.0,0.25],[0.9,0.1,0.0],
+          |              [0.2,0.8,1.0],[0.5,0.5,0.5],[0.1,0.0,0.9]]}""".stripMargin
+      for (c <- Seq("idx", "plain")) {
+        val (ca, ja) = req("POST", s"$base/collections/$c/add", records)
+        assert(ca == 201, s"add to $c failed: $ja")
+        client.getCollection(c).persist()
+      }
+      val all = """"include":["documents","metadatas","embeddings","uris","distances"]"""
+      val bodies = Seq(
+        s"""{"query_embeddings":[[1.0,0.0,0.0],[0.0,1.0,1.0]],"n_results":3,$all}""",
+        // n_results above the live count
+        s"""{"query_embeddings":[[0.3,0.3,0.3]],"n_results":50,$all}""",
+        // zero hits for every query
+        s"""{"query_embeddings":[[1.0,0.0,0.0],[0.0,1.0,0.0]],"n_results":2,
+           |"where":{"lang":{"$$eq":"xx"}},$all}""".stripMargin,
+        // default include, filtered
+        """{"query_embeddings":[[0.5,0.2,0.1]],"n_results":4,
+          |"where":{"lang":{"$eq":"en"}}}""".stripMargin)
+      def checkAll(c: String, label: String): Unit = bodies.foreach { b =>
+        val (code, got) = reqRaw(s"$base/collections/$c/query", b)
+        assert(code == 200, s"$label query failed: $got")
+        val want = twoCallQueryJson(client.getCollection(c), b)
+        assert(got == want, s"$label: $b\n got: $got\nwant: $want")
+      }
+      checkAll("idx", "indexed, no tail")
+      checkAll("plain", "unindexed, no tail")
+      // a committed tail that overwrites one id and deletes another
+      for (c <- Seq("idx", "plain")) {
+        assert(req("POST", s"$base/collections/$c/upsert",
+          """{"ids":["c"],"documents":["doc c2"],"uris":["s3://y/c"],
+            |"metadatas":[{"lang":"en","n":9,"tags":["z"]}],
+            |"embeddings":[[0.0,0.9,0.9]]}""".stripMargin)._1 == 201)
+        assert(req("POST", s"$base/collections/$c/delete",
+          """{"ids":["e"]}""")._1 == 200)
+      }
+      checkAll("idx", "indexed, with a tail")
+      checkAll("plain", "unindexed, with a tail")
+      // the tail really answers: the rewritten c is the nearest to its
+      // new vector, and the deleted e never surfaces
+      val (_, jt) = req("POST", s"$base/collections/idx/query",
+        """{"query_embeddings":[[0.0,0.9,0.9]],"n_results":50}""")
+      val ids = (jt \ "ids").extract[Seq[Seq[String]]].head
+      assert(ids.head == "c" && !ids.contains("e") && ids.size == 5, s"got $jt")
+      assert((jt \ "documents")(0)(0) == JString("doc c2"))
+    } finally face.stop()
+  }
+
   test("quota envelope at the wire: unbounded get capped, page walk serves " +
       "quota-sized slices, over-quota requests answer 422") {
     val root = java.nio.file.Files.createTempDirectory("graft_http_q").toString

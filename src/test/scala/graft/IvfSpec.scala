@@ -157,6 +157,58 @@ class IvfSpec extends AnyFunSuite {
     assert(overlap >= 0.9, s"routing overlap $overlap < 0.9")
   }
 
+  test("driver-side routing equals Spark's GroupedTopK brute route, " +
+      "per query and in order, for cosine, ip and l2") {
+    import graft.functions.Distances
+    import graft.operators.GroupedTopK
+    val vecs = Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("offset_id"), col("embedding"))
+    val built = Ivf.build(vecs, nCentroids = 16, nReplica = 2)
+      .centroidRows.sortBy(_._1)
+    val dim = built.head._2.length
+    // duplicates on both sides of their originals' ids (exact distance
+    // ties, broken by centroid_id) and a zero-norm centroid (NaN cosine)
+    val cents = built ++ Seq(
+      (40, built(3)._2.clone()), (41, built(0)._2.clone()),
+      (-1, built(7)._2.clone()), (42, Array.fill(dim)(0f)))
+    val centDf = spark.createDataFrame(
+        cents.toSeq.map { case (i, c) => (i, c.toSeq) })
+      .toDF("centroid_id", "centroid")
+    val model = Ivf.Model(centDf, centDf.limit(0))
+    assert(model.centroidRows.map(_._1).sorted.toSeq == cents.map(_._1).sorted.toSeq)
+    // corpus queries, the centroids themselves (distance 0 to a
+    // duplicated pair), a zero-norm query (NaN cosine everywhere) and a
+    // null one (null distances: Spark routes it by centroid id)
+    val corpus = Tables.embeddings(spark, sf).filter(col("vec_id") < 12)
+      .select(col("embedding")).collect().map(_.getSeq[Float](0))
+    val qvecs: Seq[Seq[Float]] = corpus.toSeq ++ built.take(8).map(_._2.toSeq) ++
+      Seq(Seq.fill(dim)(0f), null)
+    val queries = spark.createDataFrame(qvecs.zipWithIndex.map { case (v, i) =>
+        (i.toLong, v) }).toDF("query_id", "q_embedding")
+    for (space <- Seq("cosine", "ip", "l2"); nprobe <- Seq(6, cents.length + 3)) {
+      val cdist = Distances.distance(space)(col("centroid"), col("q_embedding"))
+      val viaSpark = GroupedTopK(
+          queries.crossJoin(broadcast(centDf))
+            .select(col("query_id"), col("centroid_id"), cdist.as("cdist")),
+          Seq(col("query_id")), Seq(col("cdist"), col("centroid_id")), nprobe)
+        .select("query_id", "group_rank", "centroid_id").collect()
+        .groupBy(_.getLong(0)).map { case (q, rs) =>
+          q -> rs.sortBy(_.getInt(1)).map(_.getInt(2)).toSeq }
+      val viaDriver = qvecs.indices.map(i => i.toLong ->
+        Ivf.nearestCentroids(model.centroidRows,
+          Option(qvecs(i)).map(_.toArray).orNull, nprobe, space)).toMap
+      assert(viaDriver == viaSpark, s"$space nprobe=$nprobe routes differ")
+    }
+    // the ties and NaNs are really exercised: a centroid query ties with
+    // its duplicate, and the zero-norm query routes by id alone
+    assert(Ivf.nearestCentroids(model.centroidRows, built(3)._2, 2, "l2") ==
+      Seq(3, 40))
+    assert(Ivf.nearestCentroids(model.centroidRows, built(7)._2, 2, "cosine")
+      == Seq(-1, 7))
+    assert(Ivf.nearestCentroids(model.centroidRows, Array.fill(dim)(0f), 3,
+      "cosine") == Seq(-1, 0, 1))
+  }
+
   test("search through the centroid graph keeps the end-to-end recall gate") {
     import graft.operators.Hnsw
     val vecs = Tables.embeddings(spark, sf)
